@@ -2,7 +2,7 @@
   * `runMain OrderCheck [query...]` — reads the committed
   * `BENCH_full.json`, re-times the named queries (default: the 8
   * slowest rows — the suite tail where state inflation showed) in THIS
-  * fresh JVM (warm-up + median of 3, the DevTime convention, transients
+  * fresh JVM (warm-up + median of 3, the graft.Profile convention, transients
   * drained between queries), and prints per-row
   * `in-suite median / fresh median`. PASS = every ratio ≤ 1.3: a row
   * that is >1.3× slower inside the 195-query suite than in a fresh JVM

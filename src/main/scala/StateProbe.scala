@@ -1,6 +1,6 @@
 /** Dev tool: session-state accumulation probe — `runMain StateProbe
   * <sfDir> <query>...`. Runs the named SparkEntry queries IN ORDER in
-  * one JVM (warm-up + median of 3 each, the DevTime convention) and
+  * one JVM (warm-up + median of 3 each, the graft.Profile convention) and
   * after each prints block-manager residency (persistent-RDD count,
   * block-manager used memory, heap in use) so latency growth can be
   * correlated with pinned state. `-Dgraft.probe.norelease` disables

@@ -9,8 +9,8 @@ package graft
   * the query's own plan intact — every output column and the final
   * ordering are actually computed — without collecting to the driver.
   *
-  * Shared by Bench, ScaleBench, and the dev harnesses
-  * (QTime/MicroBench/MiniBench) so no timing path can quietly measure a
+  * Shared by Bench, ScaleBench, and the dev harnesses (Profile,
+  * OrderCheck, StateProbe) so no timing path can quietly measure a
   * pruned plan again.
   */
 object BenchForce {

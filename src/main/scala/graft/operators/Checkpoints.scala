@@ -27,7 +27,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   *   - [[transient_]] + [[releaseTransients]]: query-scoped — a
   *     checkpoint consumed by the RETURNED plan of a query (candidate
   *     frames, inline postings) must outlive the call that created it,
-  *     so it registers here and the harness (Bench / Verify / DevTime)
+  *     so it registers here and the harness (Bench / Verify / Profile)
   *     drains the registry between queries.
   *   - [[withRequestScope]] / [[newScope]]: REQUEST-scoped — the
   *     serving-process form of the same boundary. A body run inside a
@@ -46,7 +46,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Unpersisting a localCheckpoint'd RDD makes it unrecoverable (the
   * lineage was truncated), so both paths are only for frames whose
   * every consumer has already run — standing serving views go through
-  * [[IndexRefresh.cachedView]]'s epoch roll instead, which calls
+  * [[Segments.cachedView]]'s epoch roll instead, which calls
   * [[release]] on the frame it REPLACES, never on the live one.
   */
 object Checkpoints {
@@ -95,7 +95,7 @@ object Checkpoints {
   }
 
   /** The process-wide default registry (sequential harnesses: Bench /
-    * Verify / DevTime / ScaleBench drain it between queries).
+    * Verify / Profile / ScaleBench drain it between queries).
     */
   private val global = new RequestScope()
 

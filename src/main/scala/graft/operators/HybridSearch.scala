@@ -353,18 +353,6 @@ object HybridSearch {
       _.filter(col("doc_id") % stride === 0), nTerms, nprobe, alpha, k,
       centroids, kwIndex)
 
-  /** The IVF-fused batch over either the raw corpus (inline index build,
-    * spec-gated ≡ the serving form) or — the serving form, the driver
-    * query — the STANDING index artifacts: materialized centroids
-    * ([[IvfIndex.writeCentroids]]) and batch postings
-    * ([[KeywordSearch.cachedBatchPostings]]). Served, every prep frame
-    * (cell ranking, query terms, df dictionary, corpus stats) is a
-    * column-pruned scan of a compact parquet artifact — nothing
-    * re-tokenizes or re-aggregates the corpus, so the plan is a shallow
-    * diamond instead of the r3 101-exchange tower, and the per-batch
-    * cost is the probe cost (the deployed shape: indexes are built once,
-    * probed forever).
-    */
   /** The IVF-pruned dense candidate frame `(q_id, doc_id, vscore)` —
     * each query's cosine fan-out over its nprobe probed cells only.
     * Shared by the IVF and champion fusion forms.
@@ -557,6 +545,18 @@ object HybridSearch {
 
   val searchPrunedOracle: String = searchPrunedSql()
 
+  /** The IVF-fused batch over either the raw corpus (inline index build,
+    * spec-gated ≡ the serving form) or — the serving form, the driver
+    * query — the STANDING index artifacts: materialized centroids
+    * ([[IvfIndex.writeCentroids]]) and batch postings
+    * ([[KeywordSearch.cachedBatchPostings]]). Served, every prep frame
+    * (cell ranking, query terms, df dictionary, corpus stats) is a
+    * column-pruned scan of a compact parquet artifact — nothing
+    * re-tokenizes or re-aggregates the corpus, so the plan is a shallow
+    * diamond instead of the r3 101-exchange tower, and the per-batch
+    * cost is the probe cost (the deployed shape: indexes are built once,
+    * probed forever).
+    */
   private[graft] def fusedBatchIvfSel(docs: DataFrame, embs: DataFrame,
                                       selectVecQueries: DataFrame => DataFrame,
                                       selectDocQueries: DataFrame => DataFrame,
@@ -1559,16 +1559,10 @@ object HybridSearch {
     * compaction must be invisible in every served result.
     */
   def batchSearchRefreshedCompacted(s: SparkSession, dir: String): DataFrame = {
-    // build the refreshed artifacts BEFORE entering the compacted
-    // artifacts' getOrBuild lambdas: IndexCache is one ConcurrentHashMap
-    // and a nested computeIfAbsent throws "Recursive update" whenever
-    // the two keys land in the same bin (caught by the x10 SCALE cell)
-    val kwR = IndexRefresh.refreshedArtifact(s, dir)
-    val vecR = VectorRefresh.refreshedArtifact(s, dir)
     val kwC = IndexCache.getOrBuild("kw_refresh_compact", dir)(
-      IndexRefresh.compact(s, kwR, _))
+      IndexRefresh.compact(s, IndexRefresh.refreshedArtifact(s, dir), _))
     val vecC = IndexCache.getOrBuild("ivf_refresh_compact", dir)(
-      VectorRefresh.compact(s, vecR, _))
+      VectorRefresh.compact(s, VectorRefresh.refreshedArtifact(s, dir), _))
     fusedBatchRefreshedPaths(s, kwC, vecC,
       CorpusOps.currSnapshot(Tables.documents(s, dir)),
       VectorRefresh.currSnapshot(Tables.embeddings(s, dir)),

@@ -5,32 +5,18 @@ import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** INCREMENTALLY-REFRESHABLE keyword index — the standing-artifact
-  * refresh path a deployed corpus needs: the reference's indexing entry
-  * is repeatedly callable on new batches (`batch_index_data`, reference
-  * `src/database/weaviate_interface_v4.py:409-492` — Weaviate merges
-  * each batch into its live inverted index), while the engine's other
-  * keyword artifacts ([[IndexCache]]) are build-once per source dir. A
-  * 100 TB deployment appends/changes documents daily and cannot full-
-  * rebuild its index per batch; this operator gives the postings /
-  * dictionary / champion / corpus-stats artifact family an append
-  * path whose PER-BATCH COST IS INDEPENDENT OF CORPUS SIZE, driven by
+/** INCREMENTALLY-REFRESHABLE keyword index — the postings / dictionary
+  * / champion / corpus-stats artifact family on the [[Segments]] layout
+  * (segment files, commit marker, exactly-once replay, liveness,
+  * time travel, epoch-cached serving views, health report), so a
+  * refresh's PER-BATCH COST IS INDEPENDENT OF CORPUS SIZE, driven by
   * exactly the added∪changed∪removed classification
-  * [[CorpusOps.snapshotDiff]] (op 34i) computes.
-  *
-  * Design — the log-structured segment layout every production engine
-  * uses (Lucene segments + deletes; LSM trees):
-  *
-  *   path/seg=0/{postings,docstats,dict,champions,stats}   base build
-  *   path/seg=r/{...}                                      refresh r
-  *   path/tombstones/seg=r                                 kills for refresh r
+  * [[CorpusOps.snapshotDiff]] computes. Payload files of each segment:
   *
   * - `postings(doc_id, dl, term, tf)`, term_bucket-partitioned: a
-  *   refresh WRITES only the delta docs' rows; rows of replaced doc
-  *   versions are killed by tombstones `(doc_id, dl, asof_seg)` — a
-  *   postings row in segment s is live iff no tombstone for its doc has
-  *   `asof_seg > s`. The merged live multiset is bitwise the full
-  *   rebuild's postings (spec-pinned).
+  *   refresh WRITES only the delta docs' rows; replaced versions are
+  *   killed by tombstones `(doc_id, dl, asof_seg)`. The merged live
+  *   multiset is bitwise the full rebuild's postings (spec-pinned).
   * - `dict(term, df, cf)`: re-derived at refresh ONLY for touched terms
   *   (terms of added/changed/removed docs) over their merged live
   *   postings — a bucket-pruned read of |touched terms| buckets, never
@@ -39,36 +25,26 @@ import org.apache.spark.sql.functions._
   *   segments. df is term-local, so untouched terms' rows stay exact.
   * - `champions(term, doc_id, tf, dl)`: per-term top-[[M]] candidates
   *   cut by `(tf DESC, dl ASC, doc_id ASC)` — the TEXTBOOK champion
-  *   list (Manning, Raghavan & Schütze, *IIR* §7.1.3: "the r docs with
-  *   the highest tf values for term t"). The cut is deliberately free
-  *   of corpus-level statistics: [[ChampionIndex]]'s impact-ordered cut
-  *   depends on avgdl, so ANY corpus change would stale EVERY term's
-  *   list; the tf cut depends only on the term's own postings, so
-  *   touched-terms-only recutting reproduces the full rebuild BITWISE.
-  *   Scoring happens at probe time with CURRENT stats (below), so
-  *   scores carry no staleness at all — only list membership is the
+  *   list (Manning, Raghavan & Schütze, *IIR* §7.1.3). The cut is
+  *   deliberately free of corpus-level statistics ([[ChampionIndex]]'s
+  *   impact-ordered cut depends on avgdl, so ANY corpus change would
+  *   stale EVERY term's list), so touched-terms-only recutting
+  *   reproduces the full rebuild BITWISE. Scores are computed at probe
+  *   time with CURRENT stats — only list membership is the
   *   (deterministic, stats-free) pruning heuristic.
   * - `stats(n_docs, sum_dl)`: per-segment partials. dl is an integral
-  *   token count, so segment sums are EXACT in double arithmetic and
-  *   merged `avgdl = (Σ sum_dl − Σ tombstone dl) / (Σ n − |tombs|)` is
-  *   bit-identical to the full rebuild's average. `docstats` keeps a
-  *   row per doc INCLUDING dl = 0 (the [[QueryLikelihood]] shortest-
-  *   closure convention).
+  *   token count, so merged `avgdl = (Σ sum_dl − Σ tombstone dl) /
+  *   (Σ n − |tombs|)` is bit-identical to the full rebuild's average.
+  *   `docstats` keeps a row per doc INCLUDING dl = 0 (the
+  *   [[QueryLikelihood]] shortest-closure convention).
   *
   * Probe ([[search]]): query terms' champion rows (≤ |terms|·M, read
   * bucket-pruned) scored with exact current BM25 — idf from the merged
   * dict, length norm from merged stats — per-term contributions rounded
   * at 6 decimals (the [[ChampionIndex.ImpactDecimals]] determinism
   * contract), summed per doc, top-k by (score DESC, doc_id).
-  *
-  * Scale notes: the tombstone liveness join broadcasts the tombstone
-  * set (bounded by delta volume between compactions; at larger delete
-  * volumes it becomes a shuffle semi-join or a bloom pre-filter), and
-  * compaction — folding segments + tombstones into a new base — is the
-  * standard background task that bounds segment count; both are the
-  * documented Lucene/LSM trade, not new machinery.
   */
-object IndexRefresh {
+object IndexRefresh extends Segments {
   /** Champion depth per term (the [[ChampionIndex.M]] recall knob). */
   val M = ChampionIndex.M
   val NumBuckets = 64
@@ -76,6 +52,10 @@ object IndexRefresh {
   private val DlBound = 1 << 24
 
   import KeywordSearch.{K1, B}
+
+  protected def idCol = "doc_id"
+  protected def emptyTombPayload = Seq(lit(0.0).as("dl"))
+  protected def volume = "docs"
 
   // --- segment construction -------------------------------------------------
 
@@ -88,7 +68,15 @@ object IndexRefresh {
       .select(col("doc_id"), size(col("tk")).cast("double").as("dl"),
         explode(col("tk")).as("term"))
       .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-      .withColumn("term_bucket", pmod(portableHash(col("term")), lit(NumBuckets)))
+      .withColumn("term_bucket", bucketOf(col("term")))
+
+  private def bucketOf(term: Column): Column =
+    pmod(portableHash(term), lit(NumBuckets))
+
+  /** The distinct buckets of a `term` frame (≤ [[NumBuckets]] values). */
+  private def bucketsOf(terms: DataFrame): Seq[Long] =
+    terms.select(bucketOf(col("term")).as("b"))
+      .distinct().collect().map(_.getLong(0)).toSeq
 
   /** Per-doc lengths INCLUDING dl = 0 rows for token-free docs. */
   private def segDocStats(docs: DataFrame): DataFrame =
@@ -113,38 +101,17 @@ object IndexRefresh {
         ((col("t.score") + col("t.payload").cast("double")) / DlBound)
           .cast("long").as("tf"),
         col("t.payload").cast("double").as("dl"))
-      .withColumn("term_bucket", pmod(portableHash(col("term")), lit(NumBuckets)))
+      .withColumn("term_bucket", bucketOf(col("term")))
   }
 
-  /** partitionBy write that stays READABLE when the frame is empty: an
-    * empty partitioned write lands no data files at all and the
-    * read-back then fails schema inference — a pure-removal refresh
-    * batch (empty delta) or a touched-vocabulary extinction would
-    * otherwise poison every later full-layout read (found by the r9
-    * random multi-refresh property sweep). Empty frames land as ONE
-    * unpartitioned empty file carrying the partition column as a data
-    * column — same merged schema after the union's type widening;
-    * bucket pruning on an empty segment is moot.
-    */
-  private[graft] def writePartitionedSafe(df: DataFrame, partCol: String,
-                                          path: String): Unit =
-    if (df.isEmpty) df.write.mode("overwrite").parquet(path)
-    else df.write.mode("overwrite").partitionBy(partCol).parquet(path)
-
-  /** Per-segment commit marker, written LAST by [[writeSegment]] (and
-    * cleared FIRST by a replay at the same id): a segment directory
-    * without it is a failed attempt's partial write. [[segmentIds]]
-    * refuses to build on one — a refresh attempt that dies between its
-    * tombstone write and its segment commit would otherwise leave docs
-    * killed whose replacement delta never landed, and the next
-    * auto-incrementing [[refresh]] would silently build above the
-    * corruption.
-    */
-  private[graft] val CommitMarker = "_graft_committed"
+  /** (df, cf) per term of a postings frame. */
+  private def dictOf(postings: DataFrame): DataFrame =
+    postings.groupBy("term")
+      .agg(count(lit(1)).as("df"), sum("tf").cast("long").as("cf"))
 
   /** Cap on collecting a touched-term set for scan pushdown: below it
     * the set ships as an `In` predicate into the postings scan (pages
-    * prune by term range — see the clustered write in [[writeSegment]]);
+    * prune by term range — see the clustered write in [[landSegment]]);
     * above it only bucket pruning + the broadcast semi-join apply. A
     * refresh batch's vocabulary is bounded by its text volume, so real
     * batches sit far below this. Overridable via
@@ -164,22 +131,37 @@ object IndexRefresh {
       Some(touched.select("term").collect().map(_.getString(0)).toSeq)
     else None
 
-  private[graft] def commitSegment(segDir: String): Unit =
-    new java.io.File(segDir, CommitMarker).createNewFile()
+  /** Per-segment prune of a term-keyed file: bucket partitions, then —
+    * for a BOUNDED touched-term set — a term predicate pushed to the
+    * parquet scan (pages prune by term min/max; the clustered write
+    * makes ranges tight; above ~10 values Spark pushes In as a range).
+    */
+  private def termPrune(buckets: Option[Seq[Long]],
+                        terms: Option[Seq[String]] = None): DataFrame => DataFrame = { df =>
+    val bucketed = buckets.fold(df)(bs => df.filter(col("term_bucket").isin(bs: _*)))
+    terms.fold(bucketed)(ts => bucketed.filter(col("term").isin(ts: _*)))
+  }
 
-  private[graft] def uncommitSegment(segDir: String): Unit =
-    new java.io.File(segDir, CommitMarker).delete()
+  /** Merged live postings of a touched vocabulary: bucket-pruned AND
+    * (for a bounded set) term-pushdown-pruned, semi-joined to the set —
+    * the recut input of [[refreshAt]] and the recut queries.
+    */
+  private def liveTouched(spark: SparkSession, path: String, touched: DataFrame,
+                          pending: Option[(Int, DataFrame)] = None,
+                          belowSeg: Option[Int] = None): DataFrame =
+    livePostings(spark, path, Some(bucketsOf(touched)), pending, belowSeg,
+        termFilter = collectTermsIfBounded(touched))
+      .join(broadcast(touched), Seq("term"))
 
-  private def writeSegment(segDir: String, postings: DataFrame,
-                           docstats: DataFrame, dict: DataFrame,
-                           champs: DataFrame): Unit = {
-    // clear-first/commit-last for EVERY writer (not just refreshAt's
-    // replay): a buildBase or compact replayed over an already-committed
-    // segment directory must not keep the old marker through the
-    // overwrites — a crash mid-replay would otherwise leave a
-    // committed-looking segment with mixed old/new files, exactly the
-    // corruption the marker exists to expose
-    uncommitSegment(segDir)
+  /** Touched vocabulary of a batch: every term its new OR replaced
+    * versions use.
+    */
+  private def touchedTerms(deltaPost: DataFrame, removedDocs: DataFrame): DataFrame =
+    deltaPost.select("term").union(segPostings(removedDocs).select("term")).distinct()
+
+  private def landSegment(path: String, r: Int, postings: DataFrame,
+                          docstats: DataFrame, dict: DataFrame,
+                          champs: DataFrame): Unit = writeSegment(path, r) { dir =>
     // term-keyed files land CLUSTERED BY TERM within each bucket file
     // (Lucene's sorted term dictionary, as a parquet layout property):
     // rows sorted by term give every page a tight term min/max, so a
@@ -191,86 +173,53 @@ object IndexRefresh {
     // the partitioned writer's required ordering, so no second sort.
     def clustered(df: DataFrame) =
       df.sortWithinPartitions(col("term_bucket"), col("term"))
-    writePartitionedSafe(clustered(postings), "term_bucket", s"$segDir/postings")
-    docstats.write.mode("overwrite").parquet(s"$segDir/docstats")
-    writePartitionedSafe(clustered(dict), "term_bucket", s"$segDir/dict")
-    writePartitionedSafe(clustered(champs), "term_bucket", s"$segDir/champions")
+    writePartitionedSafe(clustered(postings), "term_bucket", s"$dir/postings")
+    docstats.write.mode("overwrite").parquet(s"$dir/docstats")
+    writePartitionedSafe(clustered(dict), "term_bucket", s"$dir/dict")
+    writePartitionedSafe(clustered(champs), "term_bucket", s"$dir/champions")
     docstats.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$segDir/stats")
-    commitSegment(segDir)
+      .write.mode("overwrite").parquet(s"$dir/stats")
   }
 
   /** Base build (segment 0) over a full corpus snapshot. */
   def buildBase(docs: DataFrame, path: String): Unit = {
     val p = segPostings(docs).localCheckpoint()
-    val dict = p.groupBy("term")
-      .agg(count(lit(1)).as("df"), sum("tf").cast("long").as("cf"))
-      .withColumn("term_bucket", pmod(portableHash(col("term")), lit(NumBuckets)))
-    writeSegment(s"$path/seg=0", p, segDocStats(docs), dict, cutChampions(p))
+    val dict = dictOf(p).withColumn("term_bucket", bucketOf(col("term")))
+    landSegment(path, 0, p, segDocStats(docs), dict, cutChampions(p))
     Checkpoints.release(p) // fully consumed by the segment write
   }
 
   // --- refresh --------------------------------------------------------------
 
-  /** Apply one refresh batch. `deltaDocs` = added ∪ changed docs with
-    * their CURRENT text; `removedDocs` = removed ∪ changed docs with
-    * the text of the version being replaced (exactly what the previous
-    * snapshot holds — the [[CorpusOps.snapshotDiff]] consumption
-    * contract). Work done: one tokenize pass over the batch, one
-    * bucket-pruned read of the touched terms' live postings for the
-    * dict/champion recut, and the delta-segment writes — nothing
-    * proportional to corpus size.
-    */
-  def refresh(spark: SparkSession, path: String, deltaDocs: DataFrame,
-              removedDocs: DataFrame): Unit =
-    refreshAt(spark, path, segmentIds(path).max + 1, deltaDocs, removedDocs)
-
-  /** [[refresh]] at an EXPLICIT segment id — the exactly-once form for
-    * micro-batch drivers: a Structured Streaming retry re-invokes
-    * `foreachBatch` with the SAME batchId, and replaying a refresh at
-    * the same segment id is idempotent BY OVERWRITE (every write lands
-    * at a deterministic path in mode overwrite with identical content),
-    * where the auto-incrementing [[refresh]] would land the same delta
-    * in a SECOND live segment and double its postings. The recut reads
-    * only segments BELOW `r` from disk (plus the in-memory delta), so a
+  /** One refresh batch at segment `r` ([[Segments.refreshAt]]'s
+    * exactly-once contract). `deltaDocs` = added ∪ changed docs with
+    * their CURRENT text; `removedDocs` = removed ∪ changed docs with the
+    * text of the version being replaced. Work done: one tokenize pass
+    * over the batch, one bucket-pruned read of the touched terms' live
+    * postings for the dict/champion recut, and the delta-segment writes
+    * — nothing proportional to corpus size. The recut reads only
+    * segments BELOW `r` from disk (plus the in-memory delta), so a
     * partially-written failed attempt at `r` can never leak into its
-    * own replay's statistics. `r` must be above every COMMITTED
-    * segment; gaps are fine (batchId-derived ids).
+    * own replay's statistics.
     */
   def refreshAt(spark: SparkSession, path: String, r: Int,
                 deltaDocs: DataFrame, removedDocs: DataFrame): Unit = {
-    // a replay over a COMPLETED attempt re-overwrites the segment's
-    // files; clear its marker first so a failure mid-replay leaves the
-    // segment visibly uncommitted instead of committed-with-mixed-files
-    uncommitSegment(s"$path/seg=$r")
     // tombstones first: the recut below must see the batch's kills
-    segDocStats(removedDocs).withColumn("asof_seg", lit(r))
-      .write.mode("overwrite").parquet(s"$path/tombstones/seg=$r")
+    openRefresh(path, r, segDocStats(removedDocs))
     val deltaPost = segPostings(deltaDocs).localCheckpoint()
-    // touched terms: everything the batch's new OR replaced versions use
-    val touched = deltaPost.select("term")
-      .union(segPostings(removedDocs).select("term"))
-      .distinct().localCheckpoint()
-    val touchedBuckets = touched
-      .select(pmod(portableHash(col("term")), lit(NumBuckets)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq // ≤ NumBuckets values
-    // merged live postings of the touched terms: bucket-pruned AND
-    // (for a bounded batch vocabulary) term-pushdown-pruned scan of
-    // every segment below r (including the delta written below in view
-    // form; a failed prior attempt at r stays invisible to its replay)
-    val liveTouched = livePostings(spark, path,
-        bucketFilter = Some(touchedBuckets), extraSeg = Some((r, deltaPost)),
-        belowSeg = Some(r), termFilter = collectTermsIfBounded(touched))
-      .join(broadcast(touched), Seq("term"))
+    val touched = touchedTerms(deltaPost, removedDocs).localCheckpoint()
+    // the delta joins the merge in view form; a failed prior attempt
+    // at r stays invisible to its replay
+    val live = liveTouched(spark, path, touched,
+      pending = Some((r, deltaPost)), belowSeg = Some(r))
     // dict rows for ALL touched terms, df = 0 when the term vanished —
     // the zero row masks older segments in the serving view
-    val dict = liveTouched.groupBy("term")
-      .agg(count(lit(1)).as("df"), sum("tf").cast("long").as("cf"))
+    val dict = dictOf(live)
       .join(touched, Seq("term"), "right")
       .na.fill(0L, Seq("df", "cf"))
-      .withColumn("term_bucket", pmod(portableHash(col("term")), lit(NumBuckets)))
-    writeSegment(s"$path/seg=$r", deltaPost, segDocStats(deltaDocs), dict,
-      cutChampions(liveTouched))
+      .withColumn("term_bucket", bucketOf(col("term")))
+    landSegment(path, r, deltaPost, segDocStats(deltaDocs), dict,
+      cutChampions(live))
     // both batch-scoped checkpoints are fully consumed by the writes
     Checkpoints.release(deltaPost); Checkpoints.release(touched)
   }
@@ -293,10 +242,8 @@ object IndexRefresh {
   def compact(spark: SparkSession, path: String, outPath: String): Unit = {
     val live = livePostings(spark, path)
       .select("doc_id", "dl", "term", "tf", "term_bucket").localCheckpoint()
-    val dict = live.groupBy("term")
-      .agg(count(lit(1)).as("df"), sum("tf").cast("long").as("cf"))
-      .withColumn("term_bucket", pmod(portableHash(col("term")), lit(NumBuckets)))
-    writeSegment(s"$outPath/seg=0", live, liveDocStats(spark, path), dict,
+    val dict = dictOf(live).withColumn("term_bucket", bucketOf(col("term")))
+    landSegment(outPath, 0, live, liveDocStats(spark, path), dict,
       cutChampions(live))
     Checkpoints.release(live) // fully consumed by the fold's writes
     // the source generation is retired once the fold commits — release
@@ -305,130 +252,40 @@ object IndexRefresh {
     evictViews(path)
   }
 
-  /** Live per-doc lengths across segments (dl = 0 rows included) — the
-    * [[livePostings]] tombstone rule on the docstats files.
-    */
-  private[graft] def liveDocStats(spark: SparkSession, path: String,
-                                  asOf: Option[Int] = None): DataFrame = {
-    val all = segmentIds(path).filter(s => asOf.forall(s <= _)).map { s =>
-      spark.read.parquet(s"$path/seg=$s/docstats").withColumn("seg", lit(s))
-    }.reduce(_.unionByName(_))
-    val kills = tombstones(spark, path, asOf).groupBy("doc_id")
-      .agg(max("asof_seg").as("dead_after"))
-    all.join(broadcast(kills), Seq("doc_id"), "left")
-      .filter(col("dead_after").isNull || col("seg") >= col("dead_after"))
-      .select("doc_id", "dl")
-  }
-
   // --- merged serving views -------------------------------------------------
 
-  /** Committed segment ids under `path`, FAIL-FAST on corruption: a
-    * seg dir without its [[CommitMarker]] is a failed refresh attempt's
-    * partial write, and a tombstone batch whose segment never committed
-    * has killed docs whose replacement delta never landed — building on
-    * either silently loses documents, so both throw with the remedy
-    * (replay the batch with [[refreshAt]] at the SAME id; overwrite
-    * makes the replay exact). `inFlight` is the id the CURRENT
-    * [[refreshAt]] call is writing — its (by-design) uncommitted state
-    * is invisible to its own recut reads.
-    */
-  private[graft] def segmentIds(path: String,
-                                inFlight: Option[Int] = None): Seq[Int] = {
-    def ids(dir: java.io.File): Array[Int] =
-      Option(dir.list()).getOrElse(Array.empty[String])
-        .filter(_.startsWith("seg=")).map(_.stripPrefix("seg=").toInt)
-    val (committed, partial) = ids(new java.io.File(path)).partition(s =>
-      new java.io.File(s"$path/seg=$s/$CommitMarker").exists())
-    val badSegs = partial.filterNot(inFlight.contains).sorted
-    require(badSegs.isEmpty,
-      s"partially-written segment(s) ${badSegs.mkString(", ")} under $path " +
-        "(no commit marker — a failed refresh attempt); replay the batch " +
-        "with refreshAt at the same segment id, or compact from a " +
-        "known-good snapshot, before building further")
-    val orphanTombs = ids(new java.io.File(s"$path/tombstones"))
-      .filterNot(t => committed.contains(t) || inFlight.contains(t)).sorted
-    require(orphanTombs.isEmpty,
-      s"orphan tombstone batch(es) ${orphanTombs.mkString(", ")} under " +
-        s"$path — kills whose replacement segment never committed; replay " +
-        "each batch with refreshAt at the same segment id")
-    require(committed.nonEmpty, s"no segments under $path — buildBase first")
-    committed.sorted.toSeq
-  }
+  /** Live per-doc lengths across segments (dl = 0 rows included). */
+  private[graft] def liveDocStats(spark: SparkSession, path: String,
+                                  asOf: Option[Int] = None): DataFrame =
+    liveRows(spark, path, "docstats", asOf = asOf).select("doc_id", "dl")
 
-  private def tombstones(spark: SparkSession, path: String,
-                         asOf: Option[Int] = None): DataFrame = {
-    val d = new java.io.File(s"$path/tombstones")
-    val segs = Option(d.list()).getOrElse(Array.empty[String])
-    val all =
-      if (segs.isEmpty)
-        spark.range(0).select(col("id").as("doc_id"),
-          lit(0.0).as("dl"), lit(0).as("asof_seg"))
-      else spark.read.parquet(segs.map(s => s"$path/tombstones/$s").toSeq: _*)
-    asOf.fold(all)(a => all.filter(col("asof_seg") <= a))
-  }
-
-  private def readSegFile(spark: SparkSession, path: String, file: String,
-                          bucketFilter: Option[Seq[Long]],
-                          belowSeg: Option[Int] = None,
-                          asOf: Option[Int] = None,
-                          termFilter: Option[Seq[String]] = None): DataFrame = {
-    // belowSeg: the exactly-once recut reads only segments below the
-    // id being replayed — a failed attempt's partial (possibly
-    // unreadable) directory there is skipped at the listing level and
-    // exempted from the completeness check (it IS the in-flight write).
-    // asOf: the time-travel read — only segments committed at or before
-    // the pinned id participate (nothing is exempted: every listed
-    // segment must still be complete).
-    val dfs = segmentIds(path, inFlight = belowSeg)
-      .filter(s => belowSeg.forall(s < _))
-      .filter(s => asOf.forall(s <= _)).map { s =>
-      val df = spark.read.parquet(s"$path/seg=$s/$file")
-      val bucketed =
-        bucketFilter.fold(df)(bs => df.filter(col("term_bucket").isin(bs: _*)))
-      // a BOUNDED touched-term set pushes to the parquet scan: pages
-      // prune by term min/max (the clustered write above makes ranges
-      // tight); above ~10 values Spark pushes In as a [min,max] range
-      termFilter.fold(bucketed)(ts => bucketed.filter(col("term").isin(ts: _*)))
-        .withColumn("seg", lit(s))
-    }
-    dfs.reduce(_.unionByName(_))
-  }
-
-  /** Live postings across all segments: tombstones kill every row of a
-    * doc's replaced versions (segments older than the kill), current-
-    * version rows survive. `extraSeg` lets [[refresh]] include its
-    * not-yet-written delta in the merge.
+  /** Live postings across all segments, `seg`-tagged. `pending` lets
+    * [[refreshAt]] include its not-yet-written delta in the merge.
     */
   private[graft] def livePostings(spark: SparkSession, path: String,
-                                      bucketFilter: Option[Seq[Long]] = None,
-                                      extraSeg: Option[(Int, DataFrame)] = None,
-                                      belowSeg: Option[Int] = None,
-                                      asOf: Option[Int] = None,
-                                      termFilter: Option[Seq[String]] = None): DataFrame = {
-    val stored = readSegFile(spark, path, "postings", bucketFilter, belowSeg,
-      asOf, termFilter)
-    val all = extraSeg.fold(stored) { case (s, df) =>
-      val bucketed =
-        bucketFilter.fold(df)(bs => df.filter(col("term_bucket").isin(bs: _*)))
-      stored.unionByName(
-        termFilter.fold(bucketed)(ts => bucketed.filter(col("term").isin(ts: _*)))
-          .withColumn("seg", lit(s)))
-    }
-    val kills = tombstones(spark, path, asOf).groupBy("doc_id")
-      .agg(max("asof_seg").as("dead_after"))
-    all.join(broadcast(kills), Seq("doc_id"), "left")
-      .filter(col("dead_after").isNull || col("seg") >= col("dead_after"))
-      .drop("dead_after")
+                                  bucketFilter: Option[Seq[Long]] = None,
+                                  pending: Option[(Int, DataFrame)] = None,
+                                  belowSeg: Option[Int] = None,
+                                  asOf: Option[Int] = None,
+                                  termFilter: Option[Seq[String]] = None): DataFrame =
+    liveRows(spark, path, "postings", termPrune(bucketFilter, termFilter),
+      belowSeg, asOf, pending)
+
+  /** Each term's LATEST dict segment: the version authority. */
+  private def latestDictSeg(spark: SparkSession, path: String,
+                            bucketFilter: Option[Seq[Long]],
+                            asOf: Option[Int]): (DataFrame, DataFrame) = {
+    val all = segmentUnion(spark, path, "dict", termPrune(bucketFilter), asOf = asOf)
+    (all, all.groupBy("term").agg(max("seg").as("seg")))
   }
 
-  /** Latest dict row per term (the version authority): df = 0 rows mask
-    * older segments and then drop from the merged dictionary.
+  /** Latest dict row per term: df = 0 rows mask older segments and then
+    * drop from the merged dictionary.
     */
   private[graft] def dictView(spark: SparkSession, path: String,
-                                  bucketFilter: Option[Seq[Long]] = None,
-                                  asOf: Option[Int] = None): DataFrame = {
-    val all = readSegFile(spark, path, "dict", bucketFilter, asOf = asOf)
-    val latest = all.groupBy("term").agg(max("seg").as("seg"))
+                              bucketFilter: Option[Seq[Long]] = None,
+                              asOf: Option[Int] = None): DataFrame = {
+    val (all, latest) = latestDictSeg(spark, path, bucketFilter, asOf)
     all.join(latest, Seq("term", "seg")).filter(col("df") > 0)
       .select("term", "df", "cf")
   }
@@ -440,11 +297,10 @@ object IndexRefresh {
     * definition touched, hence recut in the replacing segment.
     */
   private[graft] def champsView(spark: SparkSession, path: String,
-                                    bucketFilter: Option[Seq[Long]] = None,
-                                    asOf: Option[Int] = None): DataFrame = {
-    val dictAll = readSegFile(spark, path, "dict", bucketFilter, asOf = asOf)
-    val latest = dictAll.groupBy("term").agg(max("seg").as("seg"))
-    readSegFile(spark, path, "champions", bucketFilter, asOf = asOf)
+                                bucketFilter: Option[Seq[Long]] = None,
+                                asOf: Option[Int] = None): DataFrame = {
+    val (_, latest) = latestDictSeg(spark, path, bucketFilter, asOf)
+    segmentUnion(spark, path, "champions", termPrune(bucketFilter), asOf = asOf)
       .join(latest, Seq("term", "seg"))
       .select("term", "doc_id", "tf", "dl")
   }
@@ -455,10 +311,7 @@ object IndexRefresh {
     */
   private[graft] def statsView(spark: SparkSession, path: String,
                                asOf: Option[Int] = None): DataFrame = {
-    val segStats = segmentIds(path)
-      .filter(s => asOf.forall(s <= _))
-      .map(s => spark.read.parquet(s"$path/seg=$s/stats"))
-      .reduce(_.unionByName(_))
+    val segStats = segmentUnion(spark, path, "stats", asOf = asOf)
       .agg(sum("n_docs").as("n"), sum("sum_dl").as("sdl"))
     val tomb = tombstones(spark, path, asOf)
       .agg(count(lit(1)).as("tn"), coalesce(sum("dl"), lit(0.0)).as("tdl"))
@@ -472,195 +325,43 @@ object IndexRefresh {
         (col("sdl") - col("tdl")).as("sum_dl"))
   }
 
-  // --- epoch-cached serving views --------------------------------------------
+  /** The QL k+1-shortest-live-docs closure (corpus-wide sort, k+1 rows). */
+  private def shortestOf(spark: SparkSession, path: String, k: Int,
+                         asOf: Option[Int]): DataFrame =
+    liveDocStats(spark, path, asOf).orderBy(col("dl").asc, col("doc_id").asc)
+      .limit(k + 1)
 
-  /** Process-local cache of MERGED serving views, keyed by the layout's
-    * EPOCH (committed segment ids + tombstone batch ids): the
-    * deployment pattern of a warm segment reader — Lucene reopens its
-    * IndexReader only when a new segment commits; between commits every
-    * probe reuses the same merged view. Here a view is materialized
-    * once per epoch (localCheckpoint — the segment union + tombstone
-    * anti-join and latest-per-term resolution are paid once, not per
-    * micro-batch), and a refresh landing a new segment or tombstone
-    * batch changes the epoch so the NEXT probe rebuilds — serving can
-    * never read a stale merge (spec-pinned). At cluster scale the same
-    * role is played by materializing the merged views to storage (what
-    * [[compact]] does); the JVM checkpoint is the single-process form.
-    * `-Dgraft.refresh.nocache` disables it (the per-batch re-merge
-    * form, kept for in-JVM A/B measurement).
-    */
-  private val viewCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
-
-  /** The one RETIRED frame per view key — release of a rolled epoch's
-    * view is DEFERRED by one roll: a concurrent reader that fetched
-    * the old frame from [[viewCache]] just before a refresh committed
-    * may still be executing its plan after the roll, and an eager
-    * unpersist of a localCheckpoint is unrecoverable (lineage was
-    * truncated — the read fails with checkpoint-block-not-found). One
-    * epoch of grace is the serving contract: a fetched view stays
-    * readable until the NEXT refresh/compact commits (readers that
-    * could span two commits must refetch per probe — the
-    * CheckpointsSpec rule). Bounded residency: ≤1 retired frame per
-    * key, all of the bounded warm-reader artifact class.
-    */
-  private val retiredViews =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Park a rolled frame for one epoch; release the one it displaces. */
-  private def retire(key: String, rolled: DataFrame): Unit = {
-    val prev = retiredViews.put(key, rolled)
-    if (prev != null) Checkpoints.release(prev)
-  }
-
-  /** The layout's serving epoch: every state change lands a new
-    * `seg=`/tombstone directory, so the id lists identify the merge.
-    */
-  private[graft] def epochOf(path: String): String = {
-    def list(d: String) = Option(new java.io.File(d).list())
-      .getOrElse(Array.empty[String]).sorted.mkString(",")
-    s"${segmentIds(path).mkString(",")}|${list(s"$path/tombstones")}"
-  }
-
-  private[graft] def cachedView(kind: String, path: String)
-                               (build: => DataFrame): DataFrame = {
-    val key = s"$kind:$path"
-    val ep = epochOf(path)
-    val hit = viewCache.get(key)
-    if (hit != null && hit._1 == ep) hit._2
-    else {
-      // build OUTSIDE the map's bucket lock — localCheckpoint runs an
-      // eager Spark job, and compute() would block every concurrent
-      // caller colliding on the bucket for its whole duration. The
-      // check-then-swap below keeps the first finished builder; a
-      // racing loser's checkpoint and any epoch-rolled predecessor are
-      // released EXPLICITLY ([[Checkpoints.release]]) — dropping the
-      // strong reference alone leaves their blocks pinned until the
-      // ContextCleaner's next GC-driven pass, which in a long-lived
-      // serving JVM is unboundedly far away (the r13 session-state
-      // latency-growth mechanism)
-      val fresh = build.localCheckpoint()
-      var rolled: DataFrame = null
-      val out = viewCache.compute(key, (_, cur) =>
-        if (cur != null && cur._1 == ep) cur
-        else if (cur != null && cur._1 == epochOf(path)) cur
-        // ^ a builder that read the epoch BEFORE a concurrent refresh
-        // rolled it must not overwrite the newer entry a post-roll
-        // builder installed — re-check cur against the LIVE epoch (two
-        // dir listings under the bucket lock) and keep it when current;
-        // install (ep, fresh) only when neither entry matches
-        else { rolled = if (cur != null) cur._2 else null; (ep, fresh) })._2
-      // the losing racer's copy was never visible to any reader —
-      // immediate release is safe; a ROLLED epoch's frame may still
-      // back a pre-roll reader's in-flight plan, so it parks in
-      // [[retiredViews]] and is released on the NEXT roll instead
-      if (out ne fresh) Checkpoints.release(fresh)
-      else if (rolled != null) retire(key, rolled)
-      out
-    }
-  }
-
-  /** Drop a RETIRED layout's cached views — a fold's old generation
-    * ([[compact]] calls this on its source), a test's tmp artifact.
-    * The checkpoint blocks are unpersisted EXPLICITLY, not left for
-    * the ContextCleaner: a dead path would otherwise pin its last
-    * merged views' blocks until the next full GC (30-minute periodic
-    * default), growing block-manager residency for the JVM lifetime
-    * of a long-lived serving process.
-    */
-  private[graft] def evictViews(path: String): Unit = {
-    val it = viewCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.endsWith(s":$path")) {
-        Checkpoints.release(e.getValue._2)
-        it.remove()
-      }
-    }
-    val rit = retiredViews.entrySet().iterator()
-    while (rit.hasNext) {
-      val e = rit.next()
-      if (e.getKey.endsWith(s":$path")) {
-        Checkpoints.release(e.getValue)
-        rit.remove()
-      }
-    }
-  }
-
-  /** Drop EVERY cached view — the session-recreation path: a harness
-    * that replaces a dead SparkContext (ScaleBench's OOM-recovery loop)
-    * must not serve checkpoint frames bound to the old one. Release is
-    * attempted per view ([[Checkpoints.release]] no-ops on a stopped
-    * context).
-    */
-  def clearViewCache(): Unit = {
-    viewCache.values().forEach(v => Checkpoints.release(v._2))
-    viewCache.clear()
-    retiredViews.values().forEach(Checkpoints.release)
-    retiredViews.clear()
-  }
-
-  private[graft] def servingCacheDisabled: Boolean =
-    sys.props.contains("graft.refresh.nocache")
-
-  // ONLY bounded, index-artifact-sized views are cached — dictionary
-  // (vocab), champions (vocab·M), stats (1 row), shortest closure
-  // (k+1), centroids (nlist·dim): exactly what a warm reader holds in
-  // RAM. Corpus-sized frames (live postings, live vectors) are NEVER
-  // pinned in the JVM — at deployment scale they live on disk and each
-  // probe scans them partition-pruned; pinning one was measured to
-  // poison every later query's memory budget at 100× (r10).
+  // The epoch-cached latest merges, whatever the cache switch says.
   private[graft] def cachedDictView(spark: SparkSession, path: String): DataFrame =
     cachedView("kw_dict", path)(dictView(spark, path))
   private[graft] def cachedChampsView(spark: SparkSession, path: String): DataFrame =
     cachedView("kw_champs", path)(champsView(spark, path))
   private[graft] def cachedStatsView(spark: SparkSession, path: String): DataFrame =
     cachedView("kw_stats", path)(statsView(spark, path))
-  /** The QL k+1-shortest-live-docs closure (corpus-wide sort, k+1 rows). */
-  private[graft] def cachedShortest(spark: SparkSession, path: String,
-                                    k: Int): DataFrame =
-    cachedView(s"kw_shortest_$k", path)(
-      liveDocStats(spark, path).orderBy(col("dl").asc, col("doc_id").asc)
-        .limit(k + 1))
 
-  // Serving views picked by state (r15): epoch-cached latest merge
-  // (asOf = None), epoch-cached PINNED view keyed by the pinned segment
-  // id (asOf = Some — a pinned view is an immutable function of
-  // (path, asOf), the same bounded index-artifact class as the latest
-  // views, so it caches under the same cachedView contract and rolls
-  // with the epoch), or the uncached bucket-pruned read when the cache
-  // is disabled. Before this every as-of probe re-derived its pinned
-  // views per run (guide §2.4 — the pinned dict/champion/stats merges
-  // were each a multi-exchange subtree executed per query).
+  // Serving views through the [[Segments.servingView]] switch: the
+  // dictionary and champion merges prune to the request's buckets only
+  // when uncached.
+
   private[graft] def servingDictView(spark: SparkSession, path: String,
                                      buckets: => Option[Seq[Long]],
                                      asOf: Option[Int]): DataFrame =
-    if (servingCacheDisabled) dictView(spark, path, buckets, asOf)
-    else asOf.fold(cachedDictView(spark, path))(a =>
-      cachedView(s"kw_dict@$a", path)(dictView(spark, path, None, Some(a))))
+    servingView("kw_dict", path, asOf)((a, perRequest) =>
+      dictView(spark, path, if (perRequest) buckets else None, a))
 
   private[graft] def servingChampsView(spark: SparkSession, path: String,
                                        buckets: => Option[Seq[Long]],
                                        asOf: Option[Int]): DataFrame =
-    if (servingCacheDisabled) champsView(spark, path, buckets, asOf)
-    else asOf.fold(cachedChampsView(spark, path))(a =>
-      cachedView(s"kw_champs@$a", path)(champsView(spark, path, None, Some(a))))
+    servingView("kw_champs", path, asOf)((a, perRequest) =>
+      champsView(spark, path, if (perRequest) buckets else None, a))
 
   private[graft] def servingStatsView(spark: SparkSession, path: String,
                                       asOf: Option[Int]): DataFrame =
-    if (servingCacheDisabled) statsView(spark, path, asOf)
-    else asOf.fold(cachedStatsView(spark, path))(a =>
-      cachedView(s"kw_stats@$a", path)(statsView(spark, path, Some(a))))
+    servingView("kw_stats", path, asOf)((a, _) => statsView(spark, path, a))
 
   private[graft] def servingShortest(spark: SparkSession, path: String,
                                      k: Int, asOf: Option[Int]): DataFrame =
-    if (servingCacheDisabled)
-      liveDocStats(spark, path, asOf)
-        .orderBy(col("dl").asc, col("doc_id").asc).limit(k + 1)
-    else asOf.fold(cachedShortest(spark, path, k))(a =>
-      cachedView(s"kw_shortest_$k@$a", path)(
-        liveDocStats(spark, path, Some(a))
-          .orderBy(col("dl").asc, col("doc_id").asc).limit(k + 1)))
+    servingView(s"kw_shortest_$k", path, asOf)((a, _) => shortestOf(spark, path, k, a))
 
   // --- probe ----------------------------------------------------------------
 
@@ -799,9 +500,7 @@ object IndexRefresh {
     // (≤ NumBuckets values), collected so every dict/champion segment
     // read partition-prunes; the cached forms' views are already merged
     // and the term joins below restrict them
-    lazy val buckets = qtoks
-      .select(pmod(portableHash(col("term")), lit(NumBuckets)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq
+    lazy val buckets = bucketsOf(qtoks)
     val dictV = servingDictView(spark, path, Some(buckets), asOf)
     val champsV = servingChampsView(spark, path, Some(buckets), asOf)
     val statsV = servingStatsView(spark, path, asOf)
@@ -871,9 +570,7 @@ object IndexRefresh {
     // O(batch)-not-O(corpus) argument, same snapshot-equivalence proof
     val qtoks = docs.join(broadcast(qdocs), col("doc_id") === col("q_id"))
       .select(col("q_id"), explode(array_distinct(tokens(col("text")))).as("term"))
-    lazy val buckets = qtoks
-      .select(pmod(portableHash(col("term")), lit(NumBuckets)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq
+    lazy val buckets = bucketsOf(qtoks)
     val dictV = servingDictView(spark, path, Some(buckets), asOf)
     val champsV = servingChampsView(spark, path, Some(buckets), asOf)
     val statsV = servingStatsView(spark, path, asOf)
@@ -936,15 +633,20 @@ object IndexRefresh {
       val curr = CorpusOps.currSnapshot(docs)
       val prev = CorpusOps.prevSnapshot(docs)
       buildBase(prev, p)
-      val diff = CorpusOps.snapshotDiff(curr, prev)
-      val deltaDocs = curr.join(
-        diff.filter(col("status").isin("added", "changed")).select("doc_id"),
-        Seq("doc_id"), "semi")
-      val removedDocs = prev.join(
-        diff.filter(col("status").isin("removed", "changed")).select("doc_id"),
-        Seq("doc_id"), "semi")
+      val (deltaDocs, removedDocs) = snapshotBatch(curr, prev)
       refresh(s, p, deltaDocs, removedDocs)
     }
+
+  /** The refresh batch between two snapshots: (added ∪ changed docs at
+    * `curr`, removed ∪ changed docs at `prev`).
+    */
+  private def snapshotBatch(curr: DataFrame, prev: DataFrame): (DataFrame, DataFrame) = {
+    val diff = CorpusOps.snapshotDiff(curr, prev)
+    def side(snap: DataFrame, statuses: String*) =
+      snap.join(diff.filter(col("status").isin(statuses: _*)).select("doc_id"),
+        Seq("doc_id"), "semi")
+    (side(curr, "added", "changed"), side(prev, "removed", "changed"))
+  }
 
   /** Driver query: champion search over the refreshed artifact — the
     * oracle runs the same tf-cut champion search on the post-refresh
@@ -1030,27 +732,20 @@ object IndexRefresh {
   def qIndexRecut(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val path = refreshedArtifact(s, dir)
-    val curr = CorpusOps.currSnapshot(docs)
-    val prev = CorpusOps.prevSnapshot(docs)
-    val diff = CorpusOps.snapshotDiff(curr, prev)
-    val deltaDocs = curr.join(
-      diff.filter(col("status").isin("added", "changed")).select("doc_id"),
-      Seq("doc_id"), "semi")
-    val removedDocs = prev.join(
-      diff.filter(col("status").isin("removed", "changed")).select("doc_id"),
-      Seq("doc_id"), "semi")
+    val (deltaDocs, removedDocs) =
+      snapshotBatch(CorpusOps.currSnapshot(docs), CorpusOps.prevSnapshot(docs))
+    recut(s, path, deltaDocs, removedDocs)
+  }
+
+  /** A batch's touched-terms-only champion recut against the live
+    * postings of the layout at `path` — [[refreshAt]]'s recut stage.
+    */
+  private def recut(s: SparkSession, path: String, deltaDocs: DataFrame,
+                    removedDocs: DataFrame): DataFrame = {
     val touched = Checkpoints.transient_(
-      segPostings(deltaDocs).select("term")
-        .union(segPostings(removedDocs).select("term"))
-        .distinct()) // backs the RETURNED plan — query-scoped release
-    val touchedBuckets = touched
-      .select(pmod(portableHash(col("term")), lit(NumBuckets)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq // ≤ NumBuckets values
-    val liveTouched = livePostings(s, path,
-        bucketFilter = Some(touchedBuckets),
-        termFilter = collectTermsIfBounded(touched))
-      .join(broadcast(touched), Seq("term"))
-    cutChampions(liveTouched)
+      touchedTerms(segPostings(deltaDocs), removedDocs)
+    ) // backs the RETURNED plan — query-scoped release
+    cutChampions(liveTouched(s, path, touched))
       .select(col("term"), col("doc_id"), col("tf"), col("dl"))
   }
 
@@ -1120,13 +815,8 @@ object IndexRefresh {
       .filter(pmod(col("doc_id"), lit(blocks.toLong)) === 0)
     val p0 = CorpusOps.prevSnapshot(docs)
       .filter(pmod(col("doc_id"), lit(blocks.toLong)) === 0)
-    val diff = CorpusOps.snapshotDiff(c0, p0)
-    (widenVocab(c0.join(
-        diff.filter(col("status").isin("added", "changed")).select("doc_id"),
-        Seq("doc_id"), "semi"), blocks),
-      widenVocab(p0.join(
-        diff.filter(col("status").isin("removed", "changed")).select("doc_id"),
-        Seq("doc_id"), "semi"), blocks))
+    val (delta, removed) = snapshotBatch(c0, p0)
+    (widenVocab(delta, blocks), widenVocab(removed, blocks))
   }
 
   /** Driver query: [[qIndexRecut]] in the REALISTIC regime — touched
@@ -1147,19 +837,7 @@ object IndexRefresh {
     val blocks = sparseBlocks(docs)
     val path = sparseArtifact(s, dir)
     val (deltaDocs, removedDocs) = sparseBatch(docs, blocks)
-    val touched = Checkpoints.transient_(
-      segPostings(deltaDocs).select("term")
-        .union(segPostings(removedDocs).select("term"))
-        .distinct()) // backs the RETURNED plan — query-scoped release
-    val touchedBuckets = touched
-      .select(pmod(portableHash(col("term")), lit(NumBuckets)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq // ≤ NumBuckets values
-    val liveTouched = livePostings(s, path,
-        bucketFilter = Some(touchedBuckets),
-        termFilter = collectTermsIfBounded(touched))
-      .join(broadcast(touched), Seq("term"))
-    cutChampions(liveTouched)
-      .select(col("term"), col("doc_id"), col("tf"), col("dl"))
+    recut(s, path, deltaDocs, removedDocs)
   }
 
   /** Oracle for [[qIndexRecutSparse]]: block count from the same
@@ -1220,30 +898,18 @@ object IndexRefresh {
 
   val indexRecutSparseOracle: String = indexRecutSparseSql()
 
-  /** Per-segment index-health report — the monitoring surface a
-    * deployed LSM index exposes (Lucene's segment infos; a compaction
-    * scheduler's inputs): each segment's document and token volume plus
-    * the kill volume its tombstone batch carries. Read-amplification
-    * and dead-fraction policies (when to [[compact]]) are decided from
-    * exactly these rows. Bounded output: |segments| rows, from the
-    * per-segment stats files and a tombstone rollup — never a corpus
-    * scan.
+  /** Per-segment index-health report ([[Segments.healthReport]]): each
+    * segment's document and token volume from its stats partials, plus
+    * the kill volume its tombstone batch carries — the inputs of
+    * [[compactionPlan]]. Bounded output, never a corpus scan.
     */
-  def indexStats(spark: SparkSession, path: String): DataFrame = {
-    val segs = segmentIds(path).map { s =>
-      spark.read.parquet(s"$path/seg=$s/stats").withColumn("seg", lit(s))
-    }.reduce(_.unionByName(_))
-    val tombs = tombstones(spark, path)
-      .groupBy(col("asof_seg").as("seg"))
-      .agg(count(lit(1)).as("t_docs"), sum("dl").as("t_dl"))
-    segs.join(tombs, Seq("seg"), "left")
-      .select(col("seg").cast("int").as("seg"),
-        col("n_docs").cast("long").as("n_docs"),
+  def indexStats(spark: SparkSession, path: String): DataFrame =
+    healthReport(spark, path, "stats", identity,
+      Seq(count(lit(1)).as("t_docs"), sum("dl").as("t_dl")),
+      Seq(col("n_docs").cast("long").as("n_docs"),
         coalesce(col("sum_dl"), lit(0.0)).cast("long").as("sum_dl"),
         coalesce(col("t_docs"), lit(0L)).cast("long").as("tomb_docs"),
-        coalesce(col("t_dl"), lit(0.0)).cast("long").as("tomb_dl"))
-      .orderBy("seg")
-  }
+        coalesce(col("t_dl"), lit(0.0)).cast("long").as("tomb_dl")))
 
   /** Driver query: the health report of the standing refreshed
     * artifact — oracle re-derives every segment's volumes from the
@@ -1253,39 +919,6 @@ object IndexRefresh {
     */
   def qIndexStats(s: SparkSession, dir: String): DataFrame =
     indexStats(s, refreshedArtifact(s, dir))
-
-  /** Compaction depth threshold: more live segments than this and the
-    * read-amplification (one union arm + one dict mask per segment, per
-    * probe) is worth folding away.
-    */
-  val MaxSegments = 4
-  /** Dead-fraction threshold: tombstoned doc versions / written doc
-    * versions — past this, probes and the tombstone broadcast carry
-    * more dead weight than a fold costs (Lucene's deletes-pct trigger;
-    * RocksDB's space-amp trigger).
-    */
-  val MaxDeadFrac = 0.2
-
-  /** The compaction DECISION from the health report — the policy half
-    * of [[compact]], derived arithmetic over [[indexStats]] (bounded
-    * rows, never a corpus scan): fold when the layout exceeds
-    * `maxSegments` live segments OR its dead fraction passes
-    * `maxDeadFrac`. One row: segment count, written/tombstoned doc
-    * versions, the fraction, and the decision.
-    */
-  def compactionPlan(spark: SparkSession, path: String,
-                     maxSegments: Int = MaxSegments,
-                     maxDeadFrac: Double = MaxDeadFrac): DataFrame =
-    indexStats(spark, path)
-      .agg(count(lit(1)).cast("int").as("n_segments"),
-        sum("n_docs").as("written_docs"),
-        sum("tomb_docs").as("tomb_docs"))
-      .select(col("n_segments"), col("written_docs"), col("tomb_docs"),
-        round(col("tomb_docs").cast("double") / col("written_docs"), 4)
-          .as("dead_frac"),
-        (col("n_segments") > maxSegments ||
-          col("tomb_docs").cast("double") / col("written_docs") >= maxDeadFrac)
-          .as("compact"))
 
   /** Driver query: the standing refreshed artifact's compaction
     * decision — oracle aggregates the [[indexStatsSql]] chain.

@@ -6,22 +6,19 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** INCREMENTALLY-REFRESHABLE IVF layout — the vector-side twin of
-  * [[IndexRefresh]]: a deployed ANN index ingests vector batches
-  * continuously (the reference's `batch_index_data` loop pushes vectors
-  * into the live Weaviate index, `weaviate_interface_v4.py:409-492`;
-  * the engine's streaming twin `stream_index_ingest` already appends
-  * cell files), but the standing centroid artifact and the queryable
-  * cell layout had no delta path short of full rebuild. Here a refresh
-  * batch writes ONLY its own cell-partitioned vectors plus a bounded
-  * per-(cell, dim) centroid-partial update, with tombstones killing
-  * replaced vector versions — per-batch cost proportional to the
-  * batch, never the corpus.
+  * [[IndexRefresh]] on the same [[Segments]] layout (segment files,
+  * commit marker, exactly-once replay, liveness, time travel,
+  * epoch-cached serving views, health report): a refresh batch writes
+  * ONLY its own cell-partitioned vectors plus a bounded per-(cell, dim)
+  * centroid-partial update, with tombstones killing replaced vector
+  * versions — per-batch cost proportional to the batch, never the
+  * corpus. Payload files of each segment:
   *
-  * Layout (the [[IndexRefresh]] segment convention):
+  *   vectors      cell-partitioned (vec_id, embedding, cell)
+  *   centparts    (cell, dim, sum_e, n) partial sums
+  *   codes        cell-partitioned (vec_id, codes, cell) — quantized mode
   *
-  *   path/seg=r/vectors      cell-partitioned (vec_id, embedding, cell)
-  *   path/seg=r/centparts    (cell, dim, sum_e, n) partial sums
-  *   path/tombstones/seg=r   killed versions, WITH their embeddings
+  * and tombstones carry the killed versions WITH their embeddings.
   *
   * Cell assignment is the corpus coarse quantizer (`label`; a learned
   * k-means quantizer slots in via [[IvfIndex.assignKmeansCells]]
@@ -44,8 +41,13 @@ import org.apache.spark.sql.functions._
   * performs across partitions; the 6-decimal cell-ranking round
   * absorbs it (oracle-gated at two SFs).
   */
-object VectorRefresh {
+object VectorRefresh extends Segments {
   import CorpusOps.{DiffAddStride, DiffChangeStride, DiffRemoveStride}
+
+  protected def idCol = "vec_id"
+  protected def emptyTombPayload = Seq(col("id").cast("int").as("cell"),
+    lit(Array.empty[Float]).as("embedding"))
+  protected def volume = "vectors"
 
   /** Current embeddings snapshot ([[CorpusOps]] stride convention on
     * vec_id — removed-stride rows absent).
@@ -62,61 +64,42 @@ object VectorRefresh {
         when(col("vec_id") % DiffChangeStride === 4,
           transform(col("embedding"), x => -x)).otherwise(col("embedding")))
 
-  private def writeSegment(path: String, r: Int, embs: DataFrame): Unit = {
-    // clear-first/commit-last for every writer (IndexRefresh contract)
-    IndexRefresh.uncommitSegment(s"$path/seg=$r")
-    // the empty-frame-readability contract of IndexRefresh.writeSegment
-    IndexRefresh.writePartitionedSafe(
-      embs.select(col("vec_id"), col("embedding"), col("label").as("cell")),
-      "cell", s"$path/seg=$r/vectors")
-    embs.select(col("label").as("cell"),
-        posexplode(col("embedding")).as(Seq("dim", "e")))
-      .groupBy("cell", "dim")
-      .agg(sum(col("e").cast("double")).as("sum_e"), count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$path/seg=$r/centparts")
-    // QUANTIZED layout mode: a layout carrying a codebook artifact also
-    // lands the segment's m-byte PQ codes, encoded against the STANDING
-    // codebook — refresh batches never retrain (FAISS IVFPQ add()
-    // encodes with the trained PQ; retrain is [[compactRetrain]]'s job)
-    if (hasCodebook(path))
-      IndexRefresh.writePartitionedSafe(
-        ProductQuantizer.encode(embs, readCodebook(embs.sparkSession, path))
-          .select(col("vec_id"), col("codes"), col("label").as("cell")),
-        "cell", s"$path/seg=$r/codes")
-    // marker LAST — the IndexRefresh.segmentIds completeness contract
-    IndexRefresh.commitSegment(s"$path/seg=$r")
-  }
+  private def landSegment(path: String, r: Int, embs: DataFrame): Unit =
+    writeSegment(path, r) { dir =>
+      writePartitionedSafe(
+        embs.select(col("vec_id"), col("embedding"), col("label").as("cell")),
+        "cell", s"$dir/vectors")
+      embs.select(col("label").as("cell"),
+          posexplode(col("embedding")).as(Seq("dim", "e")))
+        .groupBy("cell", "dim")
+        .agg(sum(col("e").cast("double")).as("sum_e"), count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$dir/centparts")
+      // QUANTIZED layout mode: a layout carrying a codebook artifact also
+      // lands the segment's m-byte PQ codes, encoded against the STANDING
+      // codebook — refresh batches never retrain (FAISS IVFPQ add()
+      // encodes with the trained PQ; retrain is [[compactRetrain]]'s job)
+      if (hasCodebook(path))
+        writePartitionedSafe(
+          ProductQuantizer.encode(embs, readCodebook(embs.sparkSession, path))
+            .select(col("vec_id"), col("codes"), col("label").as("cell")),
+          "cell", s"$dir/codes")
+    }
 
   /** Base build (segment 0). */
-  def buildBase(embs: DataFrame, path: String): Unit = writeSegment(path, 0, embs)
+  def buildBase(embs: DataFrame, path: String): Unit = landSegment(path, 0, embs)
 
-  /** Apply one refresh batch: `deltaEmbs` = added ∪ changed vectors
+  /** One refresh batch at segment `r` ([[Segments.refreshAt]]'s
+    * exactly-once contract): `deltaEmbs` = added ∪ changed vectors
     * (current values), `removedEmbs` = removed ∪ changed PRIOR versions
     * (their values feed the exact centroid correction). Work: one pass
     * over the batch — cell-partitioned append + a ≤ nlist×dim partials
     * frame + the tombstone write.
     */
-  def refresh(spark: SparkSession, path: String, deltaEmbs: DataFrame,
-              removedEmbs: DataFrame): Unit =
-    refreshAt(spark, path, IndexRefresh.segmentIds(path).max + 1,
-      deltaEmbs, removedEmbs)
-
-  /** [[refresh]] at an EXPLICIT segment id — the exactly-once form for
-    * micro-batch drivers (the [[IndexRefresh.refreshAt]] contract): a
-    * retried micro-batch replays at the SAME id and every write lands
-    * at a deterministic overwrite path with identical content, so the
-    * replay is a no-op-equivalent; the auto-incrementing form would
-    * land the delta in a second live segment and double its vectors
-    * and centroid partials.
-    */
   def refreshAt(spark: SparkSession, path: String, r: Int,
                 deltaEmbs: DataFrame, removedEmbs: DataFrame): Unit = {
-    // clear the marker first (replay contract — IndexRefresh.refreshAt)
-    IndexRefresh.uncommitSegment(s"$path/seg=$r")
-    removedEmbs.select(col("vec_id"), col("label").as("cell"), col("embedding"))
-      .withColumn("asof_seg", lit(r))
-      .write.mode("overwrite").parquet(s"$path/tombstones/seg=$r")
-    writeSegment(path, r, deltaEmbs)
+    openRefresh(path, r,
+      removedEmbs.select(col("vec_id"), col("label").as("cell"), col("embedding")))
+    landSegment(path, r, deltaEmbs)
   }
 
   /** Compaction — fold segments + tombstones into a fresh base at
@@ -134,10 +117,10 @@ object VectorRefresh {
     // a quantized layout keeps its STANDING codebook across a plain
     // fold (same codebook → identical codes for identical vectors)
     if (hasCodebook(path)) writeCodebook(spark, outPath, readCodebook(spark, path))
-    writeSegment(outPath, 0, live)
+    landSegment(outPath, 0, live)
     Checkpoints.release(live) // fully consumed by the fold's writes
     // release the retired generation's cached serving views
-    IndexRefresh.evictViews(path)
+    evictViews(path)
   }
 
   /** Compaction WITH quantizer retrain — the documented compaction-time
@@ -168,10 +151,10 @@ object VectorRefresh {
     if (hasCodebook(path))
       writeCodebook(spark, outPath, ProductQuantizer.train(
         assigned.filter(col("vec_id") % QuantSampleStride === 0)))
-    writeSegment(outPath, 0, assigned)
+    landSegment(outPath, 0, assigned)
     Checkpoints.release(assigned) // fully consumed by the fold's writes
     // release the retired generation's cached serving views
-    IndexRefresh.evictViews(path)
+    evictViews(path)
   }
 
   /** Assign vectors to their nearest merged centroid — how a refresh
@@ -191,31 +174,13 @@ object VectorRefresh {
       .select(col("vec_id"), col("b.embedding").as("embedding"),
         col("b.cell").as("label"))
 
-  private def tombstones(spark: SparkSession, path: String,
-                         asOf: Option[Int] = None): DataFrame = {
-    val d = new java.io.File(s"$path/tombstones")
-    val segs = Option(d.list()).getOrElse(Array.empty[String])
-    val all =
-      if (segs.isEmpty)
-        spark.range(0).select(col("id").as("vec_id"),
-          col("id").cast("int").as("cell"),
-          lit(Array.empty[Float]).as("embedding"),
-          lit(0).as("asof_seg"))
-      else spark.read.parquet(segs.map(s => s"$path/tombstones/$s").toSeq: _*)
-    asOf.fold(all)(a => all.filter(col("asof_seg") <= a))
-  }
-
   /** Merged serving centroids: per-segment partials summed, killed
     * versions' contributions subtracted, emptied cells dropped.
-    * `asOf` pins the time-travel read (the [[IndexRefresh]] as-of
-    * contract: segments + tombstone batches at or below the id).
+    * `asOf` pins the time-travel read.
     */
   private[graft] def centroidView(spark: SparkSession, path: String,
                                   asOf: Option[Int] = None): DataFrame = {
-    val parts = IndexRefresh.segmentIds(path)
-      .filter(s => asOf.forall(s <= _))
-      .map(s => spark.read.parquet(s"$path/seg=$s/centparts"))
-      .reduce(_.unionByName(_))
+    val parts = segmentUnion(spark, path, "centparts", asOf = asOf)
       .groupBy("cell", "dim").agg(sum("sum_e").as("s"), sum("n").as("n"))
     val tombParts = tombstones(spark, path, asOf)
       .select(col("cell"), posexplode(col("embedding")).as(Seq("dim", "e")))
@@ -232,30 +197,22 @@ object VectorRefresh {
         x => x.getField("c")).as("centroid"))
   }
 
-  /** Live vectors across segments — the [[IndexRefresh.livePostings]]
-    * tombstone rule keyed by vec_id.
+  /** Live rows of a cell-partitioned payload file (`vectors`/`codes`)
+    * under the [[Segments.liveRows]] rule, optionally cell-pruned.
     */
+  private def liveCells(spark: SparkSession, path: String, file: String,
+                        cellFilter: Option[Seq[Int]],
+                        asOf: Option[Int]): DataFrame =
+    liveRows(spark, path, file,
+      df => cellFilter.fold(df)(cs => df.filter(col("cell").isin(cs: _*))),
+      asOf = asOf).drop("seg")
+
+  /** Live vectors across segments. */
   private[graft] def liveVectors(spark: SparkSession, path: String,
                                  cellFilter: Option[Seq[Int]] = None,
-                                 asOf: Option[Int] = None): DataFrame = {
-    val all = IndexRefresh.segmentIds(path)
-      .filter(s => asOf.forall(s <= _)).map { s =>
-      val df = spark.read.parquet(s"$path/seg=$s/vectors")
-      cellFilter.fold(df)(cs => df.filter(col("cell").isin(cs: _*)))
-        .withColumn("seg", lit(s))
-    }.reduce(_.unionByName(_))
-    val kills = tombstones(spark, path, asOf).groupBy("vec_id")
-      .agg(max("asof_seg").as("dead_after"))
-    all.join(broadcast(kills), Seq("vec_id"), "left")
-      .filter(col("dead_after").isNull || col("seg") >= col("dead_after"))
-      .drop("dead_after", "seg")
-  }
+                                 asOf: Option[Int] = None): DataFrame =
+    liveCells(spark, path, "vectors", cellFilter, asOf)
 
-  /** IVF search over the refreshed layout: rank merged centroids, probe
-    * nprobe cells (collected to a literal predicate so every segment's
-    * scan partition-prunes, the [[IvfIndex.qSearchMaterialized]]
-    * convention), exact cosine over live probed vectors.
-    */
   /** nprobe cells for ONE query off the serving centroids, collected
     * to the bounded literal the segment scans partition-prune on —
     * from the EPOCH-CACHED view unless pinned or disabled (r15: every
@@ -273,6 +230,11 @@ object VectorRefresh {
       .collect().map(_.getInt(0)).toSeq
   }
 
+  /** IVF search over the refreshed layout: rank merged centroids, probe
+    * nprobe cells (collected to a literal predicate so every segment's
+    * scan partition-prunes, the [[IvfIndex.qSearchMaterialized]]
+    * convention), exact cosine over live probed vectors.
+    */
   def search(spark: SparkSession, path: String, qEmb: DataFrame,
              excludeVecId: Long, nprobe: Int = IvfIndex.NProbe,
              k: Int = IvfIndex.TopK, asOf: Option[Int] = None): DataFrame = {
@@ -286,29 +248,18 @@ object VectorRefresh {
       .limit(k)
   }
 
-  /** Per-segment health report for the VECTOR layout — the 13m twin,
-    * and like it derived WITHOUT a corpus scan: each segment's vector
-    * count comes from its centroid-partials artifact (`n` at dim 0 is
-    * the cell's vector count — the partials are ≤ nlist·dim rows), the
-    * kill volume from its tombstone batch. The same compaction policy
-    * ([[IndexRefresh.compactionPlan]]'s trigger pair) reads these rows.
+  /** Per-segment health report for the VECTOR layout
+    * ([[Segments.healthReport]]), derived WITHOUT a corpus scan: each
+    * segment's vector count comes from its centroid-partials artifact
+    * (`n` at dim 0 is the cell's vector count — the partials are
+    * ≤ nlist·dim rows), the kill volume from its tombstone batch.
     */
-  def indexStats(spark: SparkSession, path: String): DataFrame = {
-    val segs = IndexRefresh.segmentIds(path).map { s =>
-      spark.read.parquet(s"$path/seg=$s/centparts")
-        .filter(col("dim") === 0)
-        .agg(coalesce(sum("n"), lit(0L)).as("n_vectors"))
-        .withColumn("seg", lit(s))
-    }.reduce(_.unionByName(_))
-    val tombs = tombstones(spark, path)
-      .groupBy(col("asof_seg").as("seg"))
-      .agg(count(lit(1)).as("t"))
-    segs.join(tombs, Seq("seg"), "left")
-      .select(col("seg").cast("int").as("seg"),
-        col("n_vectors").cast("long").as("n_vectors"),
-        coalesce(col("t"), lit(0L)).cast("long").as("tomb_vectors"))
-      .orderBy("seg")
-  }
+  def indexStats(spark: SparkSession, path: String): DataFrame =
+    healthReport(spark, path, "centparts",
+      _.filter(col("dim") === 0).agg(coalesce(sum("n"), lit(0L)).as("n_vectors")),
+      Seq(count(lit(1)).as("t")),
+      Seq(col("n_vectors").cast("long").as("n_vectors"),
+        coalesce(col("t"), lit(0L)).cast("long").as("tomb_vectors")))
 
   /** Driver query: the standing refreshed vector layout's health
     * report — oracle re-derives each segment's volumes from the
@@ -316,25 +267,6 @@ object VectorRefresh {
     */
   def qIndexStats(s: SparkSession, dir: String): DataFrame =
     indexStats(s, refreshedArtifact(s, dir))
-
-  /** The vector layout's compaction DECISION — the
-    * [[IndexRefresh.compactionPlan]] trigger pair over [[indexStats]]:
-    * fold on depth or on dead fraction (tombstoned / written vector
-    * versions).
-    */
-  def compactionPlan(spark: SparkSession, path: String,
-                     maxSegments: Int = IndexRefresh.MaxSegments,
-                     maxDeadFrac: Double = IndexRefresh.MaxDeadFrac): DataFrame =
-    indexStats(spark, path)
-      .agg(count(lit(1)).cast("int").as("n_segments"),
-        sum("n_vectors").as("written_vectors"),
-        sum("tomb_vectors").as("tomb_vectors"))
-      .select(col("n_segments"), col("written_vectors"), col("tomb_vectors"),
-        round(col("tomb_vectors").cast("double") / col("written_vectors"), 4)
-          .as("dead_frac"),
-        (col("n_segments") > maxSegments ||
-          col("tomb_vectors").cast("double") / col("written_vectors") >= maxDeadFrac)
-          .as("compact"))
 
   /** Oracle for [[qIndexStats]]: segment 0 = the previous snapshot,
     * segment 1 = the added∪changed delta, its tombstone batch = the
@@ -417,6 +349,20 @@ object VectorRefresh {
         round(cosineSim(col("embedding"), col("q_emb")), 4).as("score"))
   }
 
+  /** Epoch-cached merged centroids (the [[Segments.cachedView]]
+    * warm-reader contract): the nlist·dim centroid rollup is paid once
+    * per refresh epoch, not per micro-batch. The live-vector merge stays
+    * a per-probe scan — it is corpus-sized and is never pinned in the
+    * JVM.
+    */
+  private[graft] def cachedCentroidView(spark: SparkSession, path: String): DataFrame =
+    cachedView("vec_centroids", path)(centroidView(spark, path))
+
+  /** Serving centroid view through the [[Segments.servingView]] switch. */
+  private[graft] def servingCentroidView(spark: SparkSession, path: String,
+                                         asOf: Option[Int]): DataFrame =
+    servingView("vec_centroids", path, asOf)((a, _) => centroidView(spark, path, a))
+
   /** Batch candidate fan-out over the refreshed layout — the vector leg
     * of the refreshed hybrid fusion: per-query top-nprobe cells ranked
     * against the merged serving centroids
@@ -425,28 +371,6 @@ object VectorRefresh {
     * the exact cosine. Same (q_id, doc_id, vscore) shape as
     * [[HybridSearch]]'s ivfVparts.
     */
-  /** Epoch-cached merged centroids (the [[IndexRefresh.cachedView]]
-    * warm-reader contract, bounded-views-only rule): the nlist·dim
-    * centroid rollup is paid once per refresh epoch, not per
-    * micro-batch. The live-vector merge stays a per-probe scan — it is
-    * corpus-sized and is never pinned in the JVM.
-    */
-  private[graft] def cachedCentroidView(spark: SparkSession, path: String): DataFrame =
-    IndexRefresh.cachedView("vec_centroids", path)(centroidView(spark, path))
-
-  /** Serving centroid view picked by state (r15, the [[IndexRefresh
-    * .servingDictView]] convention): epoch-cached latest merge, epoch-
-    * cached PINNED view keyed by the pinned segment id (immutable
-    * function of (path, asOf), nlist-bounded), or uncached when the
-    * cache is disabled.
-    */
-  private[graft] def servingCentroidView(spark: SparkSession, path: String,
-                                         asOf: Option[Int]): DataFrame =
-    if (IndexRefresh.servingCacheDisabled) centroidView(spark, path, asOf)
-    else asOf.fold(cachedCentroidView(spark, path))(a =>
-      IndexRefresh.cachedView(s"vec_centroids@$a", path)(
-        centroidView(spark, path, Some(a))))
-
   private[graft] def batchVparts(spark: SparkSession, path: String,
                                  queries: DataFrame,
                                  nprobe: Int = IvfIndex.NProbe,
@@ -560,7 +484,7 @@ object VectorRefresh {
   /** Read-back with a content-fingerprint memo: the artifact is m·k
     * rows (bounded — the cache rule's index-artifact class), re-read
     * only when a retrain rewrites it. The memo key is the sorted file
-    * LISTING (the [[IndexRefresh.epochOf]] convention), not
+    * LISTING (the [[Segments.epochOf]] convention), not
     * lastModified: every parquet overwrite lands fresh
     * `part-<task>-<uuid>` names, so an in-place [[writeCodebook]]
     * within one second-granularity mtime tick still rolls the key —
@@ -591,7 +515,7 @@ object VectorRefresh {
 
   /** Base build in QUANTIZED mode: train the codebook on a stride
     * sample of the base snapshot, then land segment 0 — codes included
-    * (the [[writeSegment]] layout-mode hook).
+    * (the [[landSegment]] layout-mode hook).
     */
   def buildBaseQuantized(embs: DataFrame, path: String): Unit = {
     writeCodebook(embs.sparkSession, path,
@@ -605,19 +529,8 @@ object VectorRefresh {
     */
   private[graft] def liveCodes(spark: SparkSession, path: String,
                                cellFilter: Option[Seq[Int]] = None,
-                               asOf: Option[Int] = None): DataFrame = {
-    val all = IndexRefresh.segmentIds(path)
-      .filter(s => asOf.forall(s <= _)).map { s =>
-      val df = spark.read.parquet(s"$path/seg=$s/codes")
-      cellFilter.fold(df)(cs => df.filter(col("cell").isin(cs: _*)))
-        .withColumn("seg", lit(s))
-    }.reduce(_.unionByName(_))
-    val kills = tombstones(spark, path, asOf).groupBy("vec_id")
-      .agg(max("asof_seg").as("dead_after"))
-    all.join(broadcast(kills), Seq("vec_id"), "left")
-      .filter(col("dead_after").isNull || col("seg") >= col("dead_after"))
-      .drop("dead_after", "seg")
-  }
+                               asOf: Option[Int] = None): DataFrame =
+    liveCells(spark, path, "codes", cellFilter, asOf)
 
   /** ADC search over the refreshed QUANTIZED layout — at 100 TB this IS
     * the vector serving path: IVF prunes WHICH cells are scanned
@@ -810,7 +723,7 @@ object VectorRefresh {
     // candidate (q_id, vec_id, codes): the probed (q_id, cell) pairs —
     // each carrying its query's flat m×k table — broadcast into the
     // standing code scan; cell is the partition column of every
-    // seg=r/codes write, so the isin-free join still reads only probed
+    // segment's codes write, so the isin-free join still reads only probed
     // cells' files at scale via DPP, no full-precision vector is
     // touched past the query rows themselves, and each candidate row
     // pays exactly m in-register j-ordered lookups inside whole-stage
@@ -926,7 +839,7 @@ object VectorRefresh {
   }
 
   /** Driver query: the vector layout's TIME-TRAVEL read — the same
-    * search pinned AS OF segment 0 (the [[IndexRefresh]] as-of
+    * search pinned AS OF segment 0 (the [[Segments]] as-of
     * contract on the vector family): centroids merged from segment-0
     * partials only, live set = segment-0 vectors, the seed vector read
     * from the pinned state itself. Oracle replays the IVF chain on the

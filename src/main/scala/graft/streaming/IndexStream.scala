@@ -335,7 +335,7 @@ object IndexStream {
           val ids = batch.select("vec_id").distinct()
           if (!batch.isEmpty) {
             // batchId-derived segment id (exactly-once by overwrite);
-            // the codes file rides writeSegment's layout-mode hook
+            // the codes file rides landSegment's layout-mode hook
             VectorRefresh.refreshAt(spark, p, 1 + batchId.toInt,
               delta.join(ids, Seq("vec_id"), "semi"),
               removed.join(ids, Seq("vec_id"), "semi"))

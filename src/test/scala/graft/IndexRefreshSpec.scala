@@ -168,6 +168,20 @@ class IndexRefreshSpec extends SparkSpec {
     IndexRefresh.buildBase(base, gap)
     IndexRefresh.refreshAt(spark, gap, 7, deltaDocs, removedDocs)
     assert(views(gap) == views(once))
+    // a fold that died mid-write: the output seg=0 has files but no
+    // marker — readers refuse it, and re-running the fold heals it to
+    // exactly the uncrashed fold
+    val folded = tmp()
+    IndexRefresh.compact(spark, once, folded)
+    val crashed = tmp()
+    IndexRefresh.compact(spark, once, crashed)
+    Seq("champions", "stats", IndexRefresh.CommitMarker).foreach(f =>
+      rmrf(java.nio.file.Paths.get(crashed, "seg=0", f)))
+    assert(intercept[IllegalArgumentException] {
+      views(crashed)
+    }.getMessage.contains("partially-written"))
+    IndexRefresh.compact(spark, once, crashed)
+    assert(views(crashed) == views(folded))
   }
 
   test("as-of reads reproduce every past commit from the standing layout") {

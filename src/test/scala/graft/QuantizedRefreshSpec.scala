@@ -121,6 +121,58 @@ class QuantizedRefreshSpec extends SparkSpec {
     assert(new java.io.File(s"$out/seg=1/codes").exists())
   }
 
+  test("exactly-once: a crashed quantized refresh or fold replays to the uncrashed layout") {
+    val curr = VectorRefresh.currSnapshot(embs)
+    val prev = VectorRefresh.prevSnapshot(embs)
+    val delta = VectorRefresh.deltaEmbs(curr, prev).localCheckpoint()
+    val removed = VectorRefresh.removedEmbs(curr, prev).localCheckpoint()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    def views(p: String) = Seq(
+      rows(VectorRefresh.liveCodes(spark, p)),
+      rows(VectorRefresh.liveVectors(spark, p)),
+      rows(VectorRefresh.centroidView(spark, p)),
+      rows(VectorRefresh.searchQuantized(spark, p,
+        qOf(p, VectorSearch.QueryVecId), VectorSearch.QueryVecId)))
+    def rmrf(p: java.nio.file.Path): Unit = {
+      import scala.jdk.CollectionConverters._
+      if (java.nio.file.Files.exists(p))
+        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
+          .foreach(java.nio.file.Files.delete)
+    }
+    val once = tmp("pq_once")
+    VectorRefresh.buildBaseQuantized(prev, once)
+    VectorRefresh.refreshAt(spark, once, 1, delta, removed)
+    // a refresh that died after its codes write, before the marker:
+    // readers refuse it; replaying at the same id equals the uncrashed
+    // refresh
+    val crashed = tmp("pq_crashed")
+    VectorRefresh.writeCodebook(spark, crashed, VectorRefresh.readCodebook(spark, once))
+    VectorRefresh.buildBase(prev, crashed)
+    VectorRefresh.refreshAt(spark, crashed, 1, delta, removed)
+    assert(new java.io.File(s"$crashed/seg=1/codes").exists())
+    rmrf(java.nio.file.Paths.get(crashed, "seg=1", VectorRefresh.CommitMarker))
+    assert(intercept[IllegalArgumentException] {
+      VectorRefresh.liveCodes(spark, crashed)
+    }.getMessage.contains("partially-written"))
+    VectorRefresh.refreshAt(spark, crashed, 1, delta, removed)
+    assert(views(crashed) == views(once))
+    // a fold that died mid-write: the output seg=0 has codes but no
+    // marker — readers refuse it; re-running the fold equals the
+    // uncrashed fold
+    val folded = tmp("pq_folded")
+    VectorRefresh.compact(spark, once, folded)
+    val crashedFold = tmp("pq_crashed_fold")
+    VectorRefresh.compact(spark, once, crashedFold)
+    Seq("centparts", VectorRefresh.CommitMarker).foreach(f =>
+      rmrf(java.nio.file.Paths.get(crashedFold, "seg=0", f)))
+    assert(intercept[IllegalArgumentException] {
+      VectorRefresh.liveCodes(spark, crashedFold)
+    }.getMessage.contains("partially-written"))
+    VectorRefresh.compact(spark, once, crashedFold)
+    assert(views(crashedFold) == views(folded))
+  }
+
   test("batch quantized serving matches the single-query ADC contract per query") {
     val dir = TestSpark.Sf0001
     val path = VectorRefresh.quantizedArtifact(spark, dir)

@@ -190,6 +190,23 @@ class VectorRefreshSpec extends SparkSpec {
     VectorRefresh.refreshAt(spark, broken, 1, delta, removed)
     assert(sortedRows(VectorRefresh.liveVectors(spark, broken)) ==
       sortedRows(VectorRefresh.liveVectors(spark, once)))
+    // a fold that died mid-write: the output seg=0 has files but no
+    // marker — readers refuse it, and re-running the fold heals it to
+    // exactly the uncrashed fold
+    def views(p: String) = Seq(
+      sortedRows(VectorRefresh.liveVectors(spark, p)),
+      sortedRows(VectorRefresh.centroidView(spark, p)))
+    val folded = tmp()
+    VectorRefresh.compact(spark, once, folded)
+    val crashed = tmp()
+    VectorRefresh.compact(spark, once, crashed)
+    Seq("centparts", VectorRefresh.CommitMarker).foreach(f =>
+      rmrf(java.nio.file.Paths.get(crashed, "seg=0", f)))
+    assert(intercept[IllegalArgumentException] {
+      views(crashed)
+    }.getMessage.contains("partially-written"))
+    VectorRefresh.compact(spark, once, crashed)
+    assert(views(crashed) == views(folded))
   }
 
   test("as-of reads serve the pinned commit's vectors and centroids") {
