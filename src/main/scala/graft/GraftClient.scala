@@ -41,14 +41,24 @@ import org.apache.spark.sql.functions._
   * (the current snapshot of the diff convention — in a deployment, the
   * table and the artifact describe the same state). Spec-pinned: each
   * routing reproduces its oracle-gated operator.
+  *
+  * A client serves one collection as it stands: the schemas of
+  * `documents` and `embeddings` are resolved once and fixed for the
+  * client's lifetime, like [[corpusDim]] and the standing artifacts
+  * keyed on `dir`, so a request lists the table files but launches no
+  * schema-inference job.
   */
 class GraftClient(spark: SparkSession, dir: String, embedDim: Int = 64,
                   indexMode: String = GraftClient.IndexExact) {
   require(GraftClient.IndexModes.contains(indexMode),
     s"unknown indexMode '$indexMode' — one of ${GraftClient.IndexModes.mkString(", ")}")
 
-  private def docs: DataFrame = Tables.documents(spark, dir)
-  private def embs: DataFrame = Tables.embeddings(spark, dir)
+  private lazy val schemas = Seq("documents", "embeddings")
+    .map(n => n -> Tables(spark, dir, n).schema).toMap
+  private def table(name: String): DataFrame =
+    spark.read.schema(schemas(name)).parquet(s"$dir/$name.parquet")
+  private def docs: DataFrame = table("documents")
+  private def embs: DataFrame = table("embeddings")
   private def pruned: Boolean = indexMode == GraftClient.IndexPruned
   private def refreshed: Boolean = indexMode == GraftClient.IndexRefreshed
   private def quantized: Boolean = indexMode == GraftClient.IndexQuantized

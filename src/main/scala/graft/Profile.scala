@@ -5,8 +5,10 @@ package graft
   * then the median and min of 3 [[BenchForce.force]] runs, printed on
   * one line with the operator census of the AQE-final plan; the
   * formatted plan plus the AQE-final plan land in
-  * `plans/profile/<query>.txt`. The quick before/after harness for
-  * serving-latency and plan work; not part of the library API.
+  * `plans/profile/<query>.txt`, and the query's oracle SQL, if it has
+  * one, in `plans/profile/<query>.oracle.sql` for local DuckDB diffing. The
+  * quick before/after harness for serving-latency and plan work; not
+  * part of the library API.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -28,10 +30,7 @@ object Profile {
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       BenchForce.force(df) // finalize AQE on this queryExecution
       val full = df.queryExecution.executedPlan.toString
-      // the census counts the AQE FINAL plan only (the PlanAudit rule)
-      val ini = full.indexOf("== Initial Plan ==")
-      val fin = if (ini >= 0) full.substring(0, ini) else full
-      def c(pat: String) = fin.linesIterator.count(_.contains(pat))
+      def c(pat: String) = finalPlan(full).linesIterator.count(_.contains(pat))
       println(f"PROFILE $q median=${ts(1)}%.2f min=${ts(0)}%.2f " +
         s"ex=${c("Exchange")} reused=${c("ReusedExchange")} " +
         s"bhj=${c("BroadcastHashJoin")} smj=${c("SortMergeJoin")} " +
@@ -40,8 +39,29 @@ object Profile {
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.writeString(out,
         formatted + "\n\n== AQE FINAL EXECUTED PLAN ==\n\n" + full)
+      SparkEntry.oracleSql.get(q).foreach(sql =>
+        java.nio.file.Files.writeString(out.resolveSibling(s"$q.oracle.sql"), sql))
       operators.Checkpoints.releaseTransients() // query boundary
     }
     spark.stop()
+  }
+
+  /** The plan census's view of an executed plan's string (shared with
+    * `PlanAudit`): the outer AQE-final plan, every `== Initial Plan ==`
+    * section dropped. A section runs from its header to the next line
+    * indented less than the header's text, so an adaptive subquery's
+    * initial plan nested inside the final plan is dropped too, and the
+    * outer final plan's lines after it are kept.
+    */
+  def finalPlan(executedPlan: String): String = {
+    var cut = Int.MaxValue // text column of the section being dropped
+    executedPlan.linesIterator.filter { l =>
+      val at = l.indexWhere(ch => !" :+-".contains(ch))
+      if (at < 0 || at >= cut) false
+      else {
+        cut = if (l.startsWith("== Initial Plan ==", at)) at else Int.MaxValue
+        cut == Int.MaxValue
+      }
+    }.mkString("\n")
   }
 }

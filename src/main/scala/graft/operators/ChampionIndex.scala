@@ -82,12 +82,9 @@ object ChampionIndex {
   /** The standing champion artifact for a source dir ([[IndexCache]]) —
     * built once from the standing postings, probed by every query.
     */
-  private[graft] def cachedChampions(s: SparkSession, dir: String): DataFrame = {
-    val p = IndexCache.getOrBuild("kw_champion_index", dir)(path =>
-      buildChampions(KeywordSearch.cachedBatchPostings(s, dir))
-        .write.mode("overwrite").parquet(path))
-    s.read.parquet(p)
-  }
+  private[graft] def cachedChampions(s: SparkSession, dir: String): DataFrame =
+    IndexCache.artifact(s, "kw_champion_index", dir)(
+      buildChampions(KeywordSearch.cachedBatchPostings(s, dir)))
 
   /** The champion artifact WITH each row's per-term impact rank — a
     * pure function of the artifact (the build heap's (imp desc, doc_id)
@@ -97,11 +94,9 @@ object ChampionIndex {
     */
   private[graft] def cachedChampionsRanked(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val p = IndexCache.getOrBuild("kw_champion_ranked", dir)(path =>
+    IndexCache.artifact(s, "kw_champion_ranked", dir)(
       cachedChampions(s, dir).withColumn("crn", row_number().over(
-        Window.partitionBy("term").orderBy(desc("imp"), asc("doc_id"))))
-        .write.mode("overwrite").parquet(path))
-    s.read.parquet(p)
+        Window.partitionBy("term").orderBy(desc("imp"), asc("doc_id")))))
   }
 
   /** The champion-scored sparse frame `(q_id, doc_id, raw_score)` —

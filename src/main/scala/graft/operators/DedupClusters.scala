@@ -143,10 +143,8 @@ object DedupClusters {
     */
   def query(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val docs = graft.sources.Tables.documents(s, dir)
-    val pairsPath = IndexCache.getOrBuild("minhash_pairs", dir) { p =>
-      Dedup.minhashLsh(docs).write.mode("overwrite").parquet(p)
-    }
-    clusters(docs, s.read.parquet(pairsPath))
+    clusters(docs, IndexCache.artifact(s, "minhash_pairs", dir)(
+      Dedup.minhashLsh(docs)))
   }
 
   val oracle: String = clustersOracle(Dedup.minhashLshOracle)

@@ -522,11 +522,9 @@ object IvfIndex {
     centroidArrays(embs).write.mode("overwrite").parquet(path)
 
   /** The standing centroid table for a source dir ([[IndexCache]]). */
-  private[graft] def cachedCentroids(s: SparkSession, dir: String): DataFrame = {
-    val p = IndexCache.getOrBuild("ivf_centroids", dir)(
-      writeCentroids(Tables.embeddings(s, dir), _))
-    s.read.parquet(p)
-  }
+  private[graft] def cachedCentroids(s: SparkSession, dir: String): DataFrame =
+    IndexCache.artifact(s, "ivf_centroids", dir)(
+      centroidArrays(Tables.embeddings(s, dir)))
 
   /** Multi-query IVF search — the INDEX-ACCELERATED serving/backfill
     * path ([[VectorSearch.batchTopK]] is the brute-force form: every

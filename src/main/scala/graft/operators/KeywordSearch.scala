@@ -444,12 +444,9 @@ object KeywordSearch {
   /** The standing batch-postings table for a source dir ([[IndexCache]])
     * — built once, served by every batch/serving query thereafter.
     */
-  private[graft] def cachedBatchPostings(s: SparkSession, dir: String): DataFrame = {
-    val p = IndexCache.getOrBuild("kw_batch_postings", dir)(path =>
-      buildBatchPostings(Tables.documents(s, dir))
-        .write.mode("overwrite").parquet(path))
-    s.read.parquet(p)
-  }
+  private[graft] def cachedBatchPostings(s: SparkSession, dir: String): DataFrame =
+    IndexCache.artifact(s, "kw_batch_postings", dir)(
+      buildBatchPostings(Tables.documents(s, dir)))
 
   /** Standing per-term dictionary `(term, df, ctf)` for a source dir —
     * the vocabulary-sized summary the PRUNED serving paths probe for
@@ -461,26 +458,20 @@ object KeywordSearch {
     * dictionary every inverted index keeps beside its postings
     * ([[IndexRefresh]]'s `dict` file is its refresh-maintained form).
     */
-  private[graft] def cachedTermDict(s: SparkSession, dir: String): DataFrame = {
-    val p = IndexCache.getOrBuild("kw_term_dict", dir)(path =>
+  private[graft] def cachedTermDict(s: SparkSession, dir: String): DataFrame =
+    IndexCache.artifact(s, "kw_term_dict", dir)(
       cachedBatchPostings(s, dir).groupBy("term")
-        .agg(count(lit(1)).as("df"), sum("tf").as("ctf"))
-        .write.mode("overwrite").parquet(path))
-    s.read.parquet(p)
-  }
+        .agg(count(lit(1)).as("df"), sum("tf").as("ctf")))
 
   /** Standing 1-row corpus stats (n_docs, avgdl over docs with
     * postings) — the other per-batch-invariant the serving paths probe.
     * avg over integral dl doubles is an exact sum/count, so the value
     * is bit-identical to the inline aggregation.
     */
-  private[graft] def cachedCorpusStats(s: SparkSession, dir: String): DataFrame = {
-    val p = IndexCache.getOrBuild("kw_corpus_stats", dir)(path =>
+  private[graft] def cachedCorpusStats(s: SparkSession, dir: String): DataFrame =
+    IndexCache.artifact(s, "kw_corpus_stats", dir)(
       cachedBatchPostings(s, dir).groupBy("doc_id").agg(first("dl").as("d"))
-        .agg(count(lit(1)).as("n_docs"), avg("d").as("avgdl"))
-        .write.mode("overwrite").parquet(path))
-    s.read.parquet(p)
-  }
+        .agg(count(lit(1)).as("n_docs"), avg("d").as("avgdl")))
 
   /** [[batchQueryDict]] served from the standing dictionary artifact —
     * a |query vocabulary| probe of a |vocab|-row table, no postings

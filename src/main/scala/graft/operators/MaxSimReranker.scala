@@ -254,12 +254,9 @@ object MaxSimReranker {
     * the candidate index of the pruned MaxSim retrieval (and exactly
     * the refresh-stable cut [[IndexRefresh]] maintains incrementally).
     */
-  private def cachedTfChampions(s: SparkSession, dir: String): DataFrame = {
-    val p = IndexCache.getOrBuild("maxsim_tf_champions", dir)(path =>
-      IndexRefresh.cutChampions(KeywordSearch.cachedBatchPostings(s, dir))
-        .write.mode("overwrite").parquet(path))
-    s.read.parquet(p)
-  }
+  private def cachedTfChampions(s: SparkSession, dir: String): DataFrame =
+    IndexCache.artifact(s, "maxsim_tf_champions", dir)(
+      IndexRefresh.cutChampions(KeywordSearch.cachedBatchPostings(s, dir)))
 
   private[graft] def searchPrunedCore(s: SparkSession, docs: DataFrame,
                                       postings: DataFrame, champs: DataFrame,

@@ -317,12 +317,9 @@ object QueryLikelihood {
   }
 
   /** The standing QL champion artifact for a source dir. */
-  private[graft] def cachedQlChampions(s: SparkSession, dir: String): DataFrame = {
-    val p = IndexCache.getOrBuild("ql_champion_index", dir)(path =>
-      buildQlChampions(KeywordSearch.cachedBatchPostings(s, dir))
-        .write.mode("overwrite").parquet(path))
-    s.read.parquet(p)
-  }
+  private[graft] def cachedQlChampions(s: SparkSession, dir: String): DataFrame =
+    IndexCache.artifact(s, "ql_champion_index", dir)(
+      buildQlChampions(KeywordSearch.cachedBatchPostings(s, dir)))
 
   /** CHAMPION-PRUNED batch QL — [[qlBatch]]'s at-scale twin, completing
     * the LM family the way [[ChampionIndex]] completes BM25: the sparse
@@ -421,12 +418,9 @@ object QueryLikelihood {
     * per micro-batch.
     */
   private[graft] def cachedShortest(s: SparkSession, dir: String,
-                                    k: Int = KeywordSearch.BatchK): DataFrame = {
-    val p = IndexCache.getOrBuild(s"ql_shortest_$k", dir)(path =>
-      shortestDocs(Tables.documents(s, dir), k)
-        .write.mode("overwrite").parquet(path))
-    s.read.parquet(p)
-  }
+                                    k: Int = KeywordSearch.BatchK): DataFrame =
+    IndexCache.artifact(s, s"ql_shortest_$k", dir)(
+      shortestDocs(Tables.documents(s, dir), k))
 
   /** Driver query: champion-pruned batch QL over the standing artifacts
     * (postings, QL champions, term dictionary, shortest closure).

@@ -154,29 +154,27 @@ object VectorSearch {
   def searchQuantized(s: SparkSession, dir: String): DataFrame =
     topKQuantized(Tables.embeddings(s, dir))
 
-  /** Materialize the SQ8 copy with `array<byte>` codes — the literal
+  /** The SQ8 copy with `array<byte>` codes, materialized once as the
+    * `sq8` artifact ([[IndexCache]]) — the literal
     * "hot quantized copy" of the tiering story: 1 byte/dim on disk and
     * in Tungsten rows (4× less than int codes, ~4× less than floats),
     * and [[cosineSim]] reads byte arrays natively so the scan scores
     * straight off the compact codes. SQ8 codes are in [-127, 127] by
     * construction, so the byte cast is exact.
     */
-  def writeQuantized(embs: DataFrame, path: String): Unit =
+  def quantizedBytes(embs: DataFrame): DataFrame =
     quantize(embs)
       .select(col("vec_id"), col("label"), col("scale"),
         col("qv").cast("array<byte>").as("qv"))
-      .write.mode("overwrite").parquet(path)
 
   /** Search over the MATERIALIZED byte-code copy. The registered oracle
     * IS [[searchQuantizedOracle]] — the on-disk byte path must reproduce
     * the inline int-code search bitwise (cosine is representation-
     * independent on equal code values).
     */
-  def searchQuantizedMaterialized(s: SparkSession, dir: String): DataFrame = {
-    val path = IndexCache.getOrBuild("sq8", dir)(
-      writeQuantized(Tables.embeddings(s, dir), _))
-    rankQuantized(s.read.parquet(path), QueryVecId, TopK)
-  }
+  def searchQuantizedMaterialized(s: SparkSession, dir: String): DataFrame =
+    rankQuantized(IndexCache.artifact(s, "sq8", dir)(
+      quantizedBytes(Tables.embeddings(s, dir))), QueryVecId, TopK)
 
   val searchQuantizedOracle: String = {
     val scale = "greatest(list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))), 1e-30)"

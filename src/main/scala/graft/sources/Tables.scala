@@ -8,7 +8,10 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   *
   * Reads stay fully declarative (`spark.read.parquet`) so Catalyst keeps
   * predicate pushdown, column pruning and partition pruning; never collect
-  * or pre-materialize here.
+  * or pre-materialize here. A bare per-call `spark.read.parquet` costs
+  * one schema-inference job, so long-lived serving callers
+  * ([[graft.GraftClient]], the standing artifacts of
+  * [[graft.operators.IndexCache]]) hold the schema and read with it.
   */
 object Tables {
   val all: Seq[String] = Seq(

@@ -401,4 +401,31 @@ class GraftClientSpec extends SparkSpec {
       .map(_.getAs[String]("name"))
     assert(props.contains("text"))
   }
+
+  test("building a warm request launches no Spark job") {
+    import org.apache.spark.SpecJobs
+    val pruned = new GraftClient(TestSpark.spark, TestSpark.Sf0001,
+      indexMode = GraftClient.IndexPruned)
+    val req = "spark hash join fast"
+    val routes: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "keyword.exact" -> (() => client.keywordSearch(req)),
+      "vector.exact" -> (() => client.vectorSearch(req)),
+      "hybrid.exact" -> (() => client.hybridSearch(req)),
+      "keyword.pruned" -> (() => pruned.keywordSearch(req)),
+      "vector.pruned" -> (() => pruned.vectorSearch(req)),
+      "vector.pruned.filtered" ->
+        (() => pruned.vectorSearch(req, filter = col("lang") === "en")))
+    // one warm call per route builds its artifacts and the corpus dim
+    routes.foreach { case (_, route) => route().collect() }
+    val jobs = routes.map { case (name, route) =>
+      name -> SpecJobs.count(spark.sparkContext)(route()) }
+    assert(jobs.forall(_._2 == 0), jobs)
+    // unfiltered pruned hybrid: only its two eager transient candidate
+    // frames (HybridSearch.fusePrep) run while the request is built —
+    // two SQL executions, whatever jobs their adaptive stages take
+    pruned.hybridSearch(req).collect()
+    val execs = SpecJobs.executions(spark.sparkContext)(pruned.hybridSearch(req))
+    assert(!execs.contains(null) && execs.distinct.size == 2, execs)
+    graft.operators.Checkpoints.releaseTransients()
+  }
 }
