@@ -202,9 +202,7 @@ object GoldenEval {
     val asOf = Some(0)
     val qterms = golden.select(col("query_id").as("q_id"),
       explode(array_distinct(tokens(col("query")))).as("term"))
-    val buckets = qterms
-      .select(pmod(portableHash(col("term")), lit(IndexRefresh.NumBuckets)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq // ≤ NumBuckets values
+    val buckets = IndexRefresh.bucketsOf(qterms)
     val qdict = IndexRefresh.dictView(s, path, Some(buckets), asOf)
       .join(broadcast(qterms.select("term").distinct()), Seq("term"))
       .select(col("term"), col("df"))

@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   * exactly the added∪changed∪removed classification
   * [[CorpusOps.snapshotDiff]] computes. Payload files of each segment:
   *
-  * - `postings(doc_id, dl, term, tf)`, term_bucket-partitioned: a
+  * - `postings(doc_id, dl, term, tf)`, keyed by `term_bucket`
+  *   ([[Segments.writePayload]]: directory-partitioned in `seg=0`,
+  *   bucket-then-term sorted files in a delta): a
   *   refresh WRITES only the delta docs' rows; replaced versions are
   *   killed by tombstones `(doc_id, dl, asof_seg)`. The merged live
   *   multiset is bitwise the full rebuild's postings (spec-pinned).
@@ -73,8 +75,11 @@ object IndexRefresh extends Segments {
   private def bucketOf(term: Column): Column =
     pmod(portableHash(term), lit(NumBuckets))
 
-  /** The distinct buckets of a `term` frame (≤ [[NumBuckets]] values). */
-  private def bucketsOf(terms: DataFrame): Seq[Long] =
+  /** The distinct buckets of a `term` frame (≤ [[NumBuckets]] values)
+    * — the one distributed form of the layout's bucket rule; its
+    * driver twin is [[termBucket]].
+    */
+  private[graft] def bucketsOf(terms: DataFrame): Seq[Long] =
     terms.select(bucketOf(col("term")).as("b"))
       .distinct().collect().map(_.getLong(0)).toSeq
 
@@ -123,15 +128,8 @@ object IndexRefresh extends Segments {
   private def TermPushdownCap: Long =
     sys.props.get("graft.refresh.termPushdownCap").map(_.toLong).getOrElse(4096L)
 
-  /** The touched-term list when bounded (one cheap count over the
-    * already-checkpointed frame), else None.
-    */
-  private def collectTermsIfBounded(touched: DataFrame): Option[Seq[String]] =
-    if (touched.count() <= TermPushdownCap)
-      Some(touched.select("term").collect().map(_.getString(0)).toSeq)
-    else None
-
-  /** Per-segment prune of a term-keyed file: bucket partitions, then —
+  /** Per-segment prune of a term-keyed file: bucket partitions (`seg=0`)
+    * or bucket page ranges (a delta's sorted files), then —
     * for a BOUNDED touched-term set — a term predicate pushed to the
     * parquet scan (pages prune by term min/max; the clustered write
     * makes ranges tight; above ~10 values Spark pushes In as a range).
@@ -144,14 +142,22 @@ object IndexRefresh extends Segments {
 
   /** Merged live postings of a touched vocabulary: bucket-pruned AND
     * (for a bounded set) term-pushdown-pruned, semi-joined to the set —
-    * the recut input of [[refreshAt]] and the recut queries.
+    * the recut input of [[refreshAt]] and the recut queries. One
+    * collect of at most cap + 1 terms over the checkpointed set decides
+    * the regime: under the cap the buckets derive on the driver
+    * ([[termBucket]]); above it only the distributed bucket collect runs.
     */
   private def liveTouched(spark: SparkSession, path: String, touched: DataFrame,
                           pending: Option[(Int, DataFrame)] = None,
-                          belowSeg: Option[Int] = None): DataFrame =
-    livePostings(spark, path, Some(bucketsOf(touched)), pending, belowSeg,
-        termFilter = collectTermsIfBounded(touched))
+                          belowSeg: Option[Int] = None): DataFrame = {
+    val head = touched.select("term").limit((TermPushdownCap + 1).min(Int.MaxValue).toInt)
+      .collect().map(_.getString(0)).toSeq
+    val (buckets, terms) =
+      if (head.length <= TermPushdownCap) (head.map(termBucket).distinct, Some(head))
+      else (bucketsOf(touched), None)
+    livePostings(spark, path, Some(buckets), pending, belowSeg, termFilter = terms)
       .join(broadcast(touched), Seq("term"))
+  }
 
   /** Touched vocabulary of a batch: every term its new OR replaced
     * versions use.
@@ -162,21 +168,22 @@ object IndexRefresh extends Segments {
   private def landSegment(path: String, r: Int, postings: DataFrame,
                           docstats: DataFrame, dict: DataFrame,
                           champs: DataFrame): Unit = writeSegment(path, r) { dir =>
-    // term-keyed files land CLUSTERED BY TERM within each bucket file
-    // (Lucene's sorted term dictionary, as a parquet layout property):
-    // rows sorted by term give every page a tight term min/max, so a
-    // touched-terms read with a pushed term predicate prunes at the
-    // PAGE level inside a bucket — bucket-grain pruning alone cannot
-    // help a touched set whose ~|vocab-per-batch| terms hash across
-    // most of the 64 buckets (the r14 sparse-recut finding: r100 = 18
-    // bucket-pruned only). Leading the sort with term_bucket satisfies
-    // the partitioned writer's required ordering, so no second sort.
-    def clustered(df: DataFrame) =
-      df.sortWithinPartitions(col("term_bucket"), col("term"))
-    writePartitionedSafe(clustered(postings), "term_bucket", s"$dir/postings")
+    // term-keyed files land CLUSTERED BY (term_bucket, term) in either
+    // payload shape (Lucene's sorted term dictionary, as a parquet
+    // layout property): rows sorted by term give every page a tight
+    // term min/max, so a touched-terms read with a pushed term
+    // predicate prunes at the PAGE level inside a bucket — bucket-grain
+    // pruning alone cannot help a touched set whose ~|vocab-per-batch|
+    // terms hash across most of the 64 buckets (the r14 sparse-recut
+    // finding: r100 = 18 bucket-pruned only). In a delta's unpartitioned
+    // files the leading term_bucket makes the bucket prune a page prune
+    // too; in seg=0 it is the partitioned writer's required ordering.
+    def termKeyed(df: DataFrame, file: String) =
+      writePayload(df, r, s"$dir/$file", "term_bucket", "term")
+    termKeyed(postings, "postings")
     docstats.write.mode("overwrite").parquet(s"$dir/docstats")
-    writePartitionedSafe(clustered(dict), "term_bucket", s"$dir/dict")
-    writePartitionedSafe(clustered(champs), "term_bucket", s"$dir/champions")
+    termKeyed(dict, "dict")
+    termKeyed(champs, "champions")
     docstats.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
       .write.mode("overwrite").parquet(s"$dir/stats")
   }
@@ -209,9 +216,10 @@ object IndexRefresh extends Segments {
     val deltaPost = segPostings(deltaDocs).localCheckpoint()
     val touched = touchedTerms(deltaPost, removedDocs).localCheckpoint()
     // the delta joins the merge in view form; a failed prior attempt
-    // at r stays invisible to its replay
+    // at r stays invisible to its replay. Materialized once: the dict
+    // and the champion recut both read it
     val live = liveTouched(spark, path, touched,
-      pending = Some((r, deltaPost)), belowSeg = Some(r))
+      pending = Some((r, deltaPost)), belowSeg = Some(r)).localCheckpoint()
     // dict rows for ALL touched terms, df = 0 when the term vanished —
     // the zero row masks older segments in the serving view
     val dict = dictOf(live)
@@ -220,8 +228,8 @@ object IndexRefresh extends Segments {
       .withColumn("term_bucket", bucketOf(col("term")))
     landSegment(path, r, deltaPost, segDocStats(deltaDocs), dict,
       cutChampions(live))
-    // both batch-scoped checkpoints are fully consumed by the writes
-    Checkpoints.release(deltaPost); Checkpoints.release(touched)
+    // the batch-scoped checkpoints are fully consumed by the writes
+    Seq(deltaPost, touched, live).foreach(Checkpoints.release)
   }
 
   // --- compaction -----------------------------------------------------------

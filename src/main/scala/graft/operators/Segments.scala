@@ -15,6 +15,16 @@ import org.apache.spark.sql.functions._
   *   path/seg=r/<payload>      refresh r
   *   path/tombstones/seg=r     kills of refresh r: (id, payload…, asof_seg)
   *
+  * A payload keyed by term bucket or IVF cell lands in one of two
+  * shapes, picked by the segment level ([[writePayload]]):
+  *
+  *   seg=0/<payload>/<key>=k/…  base and fold: directory-partitioned, so
+  *                              reads partition-prune at any corpus size
+  *   seg=r/<payload>/part-…     delta (r ≥ 1): a few files sorted by
+  *                              (key, …), pruned by page min/max — a
+  *                              batch-bounded delta's file count scales
+  *                              with its payloads, not keys × tasks
+  *
   * - COMMIT: a segment writer clears `seg=r/`[[CommitMarker]] FIRST and
   *   writes it LAST ([[writeSegment]]). A directory without it is a
   *   failed attempt's partial write; [[segmentIds]] refuses to build on
@@ -110,17 +120,35 @@ private[graft] trait Segments {
     commitSegment(dir)
   }
 
-  /** partitionBy write that stays READABLE when the frame is empty: an
-    * empty partitioned write lands no data files and the read-back then
-    * fails schema inference — a pure-removal batch (empty delta) would
-    * otherwise poison every later full-layout read. Empty frames land
-    * as ONE unpartitioned empty file carrying the partition column as a
-    * data column (same merged schema after the union's type widening).
+  /** Land one bucket- or cell-keyed payload file of segment `r`; the
+    * shape follows the segment level:
+    * - DELTA (`r ≥ 1`): plain parquet, sorted within each write task by
+    *   (`partCol`, `clusterBy`…). A delta is bounded by its batch, so a
+    *   directory fan-out would only multiply its files — up to one per
+    *   bucket per write task, each a local-FS create + chmod — while the
+    *   sort keeps bucket/cell prunes effective through Parquet row-group
+    *   and page min/max. An empty delta lands as one schema-bearing file.
+    * - BASE / FOLD (`r = 0`): directory-partitioned by `partCol`, so
+    *   reads partition-prune at any corpus size; a rebalance on
+    *   `partCol` first sends each bucket to one task range (AQE
+    *   coalesces small buckets and splits skewed ones). An empty frame
+    *   lands no `partCol=` directory and its read-back would fail
+    *   schema inference, so it then lands ONE empty file carrying
+    *   `partCol` as a data column (same merged schema after the
+    *   union's type widening).
     */
-  protected def writePartitionedSafe(df: DataFrame, partCol: String,
-                                     path: String): Unit =
-    if (df.isEmpty) df.write.mode("overwrite").parquet(path)
-    else df.write.mode("overwrite").partitionBy(partCol).parquet(path)
+  protected def writePayload(df: DataFrame, r: Int, path: String,
+                             partCol: String, clusterBy: String*): Unit = {
+    val sortCols = (partCol +: clusterBy).map(col)
+    if (r > 0) df.sortWithinPartitions(sortCols: _*).write.mode("overwrite").parquet(path)
+    else {
+      df.hint("rebalance", col(partCol)).sortWithinPartitions(sortCols: _*)
+        .write.mode("overwrite").partitionBy(partCol).parquet(path)
+      val landed = Option(new java.io.File(path).list())
+        .exists(_.exists(_.startsWith(s"$partCol=")))
+      if (!landed) df.limit(0).write.mode("overwrite").parquet(path)
+    }
+  }
 
   /** Committed segment ids under `path`, FAIL-FAST on corruption: a seg
     * dir without its [[CommitMarker]] is a failed attempt's partial

@@ -9,14 +9,17 @@ import org.apache.spark.sql.functions._
   * [[IndexRefresh]] on the same [[Segments]] layout (segment files,
   * commit marker, exactly-once replay, liveness, time travel,
   * epoch-cached serving views, health report): a refresh batch writes
-  * ONLY its own cell-partitioned vectors plus a bounded per-(cell, dim)
+  * ONLY its own cell-keyed vectors plus a bounded per-(cell, dim)
   * centroid-partial update, with tombstones killing replaced vector
   * versions — per-batch cost proportional to the batch, never the
   * corpus. Payload files of each segment:
   *
-  *   vectors      cell-partitioned (vec_id, embedding, cell)
+  *   vectors      cell-keyed (vec_id, embedding, cell)
   *   centparts    (cell, dim, sum_e, n) partial sums
-  *   codes        cell-partitioned (vec_id, codes, cell) — quantized mode
+  *   codes        cell-keyed (vec_id, codes, cell) — quantized mode
+  *
+  * (cell-keyed: cell-partitioned in `seg=0`, cell-sorted files in a
+  * delta — [[Segments.writePayload]])
   *
   * and tombstones carry the killed versions WITH their embeddings.
   *
@@ -64,11 +67,17 @@ object VectorRefresh extends Segments {
         when(col("vec_id") % DiffChangeStride === 4,
           transform(col("embedding"), x => -x)).otherwise(col("embedding")))
 
+  /** Land segment `r` of `embs` (`vec_id`, `embedding`, `label` = its
+    * cell): the cell-keyed `vectors` and `codes` payloads in the level's
+    * shape ([[Segments.writePayload]] — cell-partitioned in `seg=0`,
+    * cell-sorted files in a delta, where cell pruning works through
+    * page min/max), plus the bounded centroid partials.
+    */
   private def landSegment(path: String, r: Int, embs: DataFrame): Unit =
     writeSegment(path, r) { dir =>
-      writePartitionedSafe(
+      writePayload(
         embs.select(col("vec_id"), col("embedding"), col("label").as("cell")),
-        "cell", s"$dir/vectors")
+        r, s"$dir/vectors", "cell")
       embs.select(col("label").as("cell"),
           posexplode(col("embedding")).as(Seq("dim", "e")))
         .groupBy("cell", "dim")
@@ -79,10 +88,10 @@ object VectorRefresh extends Segments {
       // codebook — refresh batches never retrain (FAISS IVFPQ add()
       // encodes with the trained PQ; retrain is [[compactRetrain]]'s job)
       if (hasCodebook(path))
-        writePartitionedSafe(
+        writePayload(
           ProductQuantizer.encode(embs, readCodebook(embs.sparkSession, path))
             .select(col("vec_id"), col("codes"), col("label").as("cell")),
-          "cell", s"$dir/codes")
+          r, s"$dir/codes", "cell")
     }
 
   /** Base build (segment 0). */
@@ -722,9 +731,10 @@ object VectorRefresh extends Segments {
     //
     // candidate (q_id, vec_id, codes): the probed (q_id, cell) pairs —
     // each carrying its query's flat m×k table — broadcast into the
-    // standing code scan; cell is the partition column of every
-    // segment's codes write, so the isin-free join still reads only probed
-    // cells' files at scale via DPP, no full-precision vector is
+    // standing code scan; cell is the partition column of the base's
+    // codes write, so the isin-free join still reads only probed cells'
+    // base files at scale via DPP (a delta's batch-bounded codes are
+    // read whole), no full-precision vector is
     // touched past the query rows themselves, and each candidate row
     // pays exactly m in-register j-ordered lookups inside whole-stage
     // codegen ([[org.apache.spark.sql.graftshim.PqAdcScoreDyn]] —
