@@ -259,6 +259,37 @@ class SearchSpec extends SparkSpec {
     assert(capped.size == uncapped.size)
   }
 
+  test("champion depth-sweep top-C cut at full depth is bitwise the uncapped sweep") {
+    // the capped depth sweep (one vector cut shared by every depth,
+    // per-(m, q_id) keyword cuts, dropped winners re-scored once per
+    // pair): C >= every candidate count makes the cuts no-ops at EVERY
+    // swept depth, and at the default C the m = M slice is the capped
+    // doubly-pruned fusion's ranking
+    val docs = Tables.documents(spark, TestSpark.Sf001)
+    val embs = Tables.embeddings(spark, TestSpark.Sf001)
+    val postings = KeywordSearch.cachedBatchPostings(spark, TestSpark.Sf001)
+    val champs = ChampionIndex.cachedChampions(spark, TestSpark.Sf001)
+    val selV: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+      _.filter(col("vec_id") % KeywordSearch.BatchStride === 0)
+    val selD: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+      _.filter(col("doc_id") % KeywordSearch.BatchStride === 0)
+    def sweep(topC: Option[Int]) =
+      HybridSearch.fusedBatchChampionDepthSweepSel(docs, embs, postings, champs,
+        selV, selD, RetrievalEval.SweepMs, topC = topC)
+    val fullC = sweep(Some(1 << 24)).collect().toSeq
+    val uncapped = sweep(None).collect().toSeq
+    RetrievalEval.SweepMs.foreach { m =>
+      val (f, u) = (fullC.filter(_.getInt(0) == m), uncapped.filter(_.getInt(0) == m))
+      assert(f.nonEmpty && f == u, s"m = $m")
+    }
+    val defaultC = HybridSearch.topCFor(HybridSearch.BatchK)
+    val cappedM = sweep(Some(defaultC)).filter(col("m") === ChampionIndex.M)
+      .drop("m").collect().toSeq
+    val single = HybridSearch.fusedBatchChampionSel(docs, embs, postings,
+      champs, selV, selD, topC = Some(defaultC)).collect().toSeq
+    assert(cappedM.nonEmpty && cappedM == single)
+  }
+
   test("the serving cut engages by corpus size, oracle-replayably") {
     // the r13 regime switch: below CutMinDocs the per-leg top-C cut is
     // skipped (its heap stages cost more than the frame they bound at
