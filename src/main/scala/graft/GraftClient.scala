@@ -342,59 +342,52 @@ class GraftClient(spark: SparkSession, dir: String, embedDim: Int = 64,
                    limit: Int = 10, filter: Option[Column] = None,
                    asOf: Option[Int] = None): DataFrame = {
     requireAsOfMode(asOf)
-    if (quantized && (filter.isEmpty || asOf.nonEmpty)) {
-      // the quantized route: ADC vector leg over the standing codes +
-      // the refreshed champion keyword leg (15i's single-request form);
-      // filter/pin semantics exactly as the refreshed route below
-      val kwPath = IndexRefresh.refreshedArtifact(spark, dir)
-      val universe = asOfDocs(asOf, kwPath)
-      HybridSearch.fusedQuantizedWithQuery(spark, kwPath,
-          VectorRefresh.quantizedArtifact(spark, dir),
-          requestTerms(request), requestVector(request), qId = -1L,
-          alpha = alpha, k = limit, asOf = asOf,
-          allowedDocs = filter.map(f => universe.filter(f)))
-        .join(universe.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .select(col("doc_id"), col("source"), col("score"))
-        .orderBy(desc("score"), asc("doc_id"))
-    } else if (refreshed && (filter.isEmpty || asOf.nonEmpty)) {
-      // a PINNED request routes through the refreshed walk even when
-      // filtered: the filter applies DURING the pinned walk (the
-      // IvfIndex filtered-search pattern over pinned views) against the
-      // pin's own document universe — the incident-replay read "what
-      // would this filtered page have been at commit r". An UNPINNED
-      // filtered request keeps the exact path below (the documented
-      // Weaviate-config trade: the pruned/champion artifacts are
-      // filter-agnostic, and with no pin there is no universe mismatch
-      // to protect).
-      val kwPath = IndexRefresh.refreshedArtifact(spark, dir)
-      // ONE universe resolution for both the walk filter and the
-      // metadata join (the pin validates once, against the keyword
-      // artifact — the vector artifact shares the facade's two-segment
-      // commit convention by construction)
-      val universe = asOfDocs(asOf, kwPath)
-      HybridSearch.fusedRefreshedWithQuery(spark, kwPath,
-          VectorRefresh.refreshedArtifact(spark, dir),
-          requestTerms(request), requestVector(request), qId = -1L,
-          alpha = alpha, k = limit, asOf = asOf,
-          allowedDocs = filter.map(f => universe.filter(f)))
-        .join(universe.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .select(col("doc_id"), col("source"), col("score"))
-        .orderBy(desc("score"), asc("doc_id"))
-    } else if (pruned && filter.isEmpty)
-      HybridSearch.fusedPrunedWithQuery(embs,
+    // the routed forms: the fused page and the universe its doc_ids
+    // resolve in
+    val routed: Option[(DataFrame, DataFrame)] =
+      if ((quantized || refreshed) && (filter.isEmpty || asOf.nonEmpty)) {
+        // a PINNED request routes through the refreshed walk even when
+        // filtered: the filter applies DURING the pinned walk (the
+        // IvfIndex filtered-search pattern over pinned views) against
+        // the pin's own document universe — the incident-replay read
+        // "what would this filtered page have been at commit r". An
+        // UNPINNED filtered request keeps the exact path below (the
+        // documented Weaviate-config trade: the pruned/champion
+        // artifacts are filter-agnostic, and with no pin there is no
+        // universe mismatch to protect). The quantized route swaps the
+        // vector leg for the ADC fan-out over the standing codes.
+        val kwPath = IndexRefresh.refreshedArtifact(spark, dir)
+        // ONE universe resolution for both the walk filter and the
+        // metadata join (the pin validates once, against the keyword
+        // artifact — the vector artifact shares the facade's two-segment
+        // commit convention by construction)
+        val universe = asOfDocs(asOf, kwPath)
+        val (fuse, vecPath) =
+          if (quantized) (HybridSearch.fusedQuantizedWithQuery _,
+            VectorRefresh.quantizedArtifact(spark, dir))
+          else (HybridSearch.fusedRefreshedWithQuery _,
+            VectorRefresh.refreshedArtifact(spark, dir))
+        Some(fuse(spark, kwPath, vecPath, requestTerms(request),
+          requestVector(request), -1L, alpha, limit, IvfIndex.NProbe, asOf,
+          filter.map(f => universe.filter(f))) -> universe)
+      } else if (pruned && filter.isEmpty)
+        Some(HybridSearch.fusedPrunedWithQuery(embs,
           ChampionIndex.cachedChampions(spark, dir),
           requestTerms(request), requestVector(request), qId = -1L,
           centroids = Some(IvfIndex.cachedCentroids(spark, dir)),
-          alpha = alpha, k = limit)
-        .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .select(col("doc_id"), col("source"), col("score"))
-        .orderBy(desc("score"), asc("doc_id"))
-    else
+          alpha = alpha, k = limit) -> docs)
+      else None
+    routed.fold(
       // exact fallback over the MODE's corpus universe: in refreshed
       // mode a filtered fusion scores the current snapshot — the same
       // corpus state the unfiltered refreshed route serves
       HybridSearch.fusedWithQuery(modeDocs, modeEmbs, requestTerms(request),
-        requestVector(request), alpha, limit, filter.getOrElse(lit(true)))
+        requestVector(request), alpha, limit, filter.getOrElse(lit(true)))) {
+      case (page, universe) =>
+        page.join(universe.select(col("doc_id"), col("source")), Seq("doc_id"))
+          .select(col("doc_id"), col("source"), col("score"))
+          .orderBy(desc("score"), asc("doc_id"))
+    }
   }
 
   /** v4 `near_object(uuid)` — seed the vector search with an EXISTING

@@ -9,13 +9,35 @@ import org.apache.spark.sql.functions._
 /** Hybrid (keyword + vector) search with relative-score fusion — the
   * Spark-native `hybrid_search` (reference
   * `src/database/weaviate_interface_v4.py:308-361`): BM25 and cosine
-  * scores are min-max normalized over the corpus and combined as
+  * scores are min-max normalized and combined as
   * `alpha * vector + (1 - alpha) * keyword` (alpha=0 pure BM25, alpha=1
   * pure vector — reference docstring L330-335).
   *
-  * Scale design: one scan computes both signals (documents⋈embeddings is
-  * a co-partitioned 1:1 key join); min/max normalization is a single-row
-  * aggregate broadcast back — no window-over-everything. Top-k via heap.
+  * Single-query exact forms ([[fused]], [[fusedRrf]]): one scan computes
+  * both signals (documents⋈embeddings is a co-partitioned 1:1 key join);
+  * min/max normalization is a single-row aggregate broadcast back.
+  *
+  * Batch and request forms are ONE vector leg ([[VecLeg]]) and one
+  * keyword leg `(q_id, doc_id, raw_score)` fed to one prep
+  * ([[fusePrep]], capped by the per-leg top-C cut or not) and one tail
+  * keyed by `q_id` (or `m, q_id` for the depth sweep) over one alpha or
+  * an alpha list ([[fuse]]). An alpha or depth sweep is one more key on
+  * the same candidate set, not another copy of the tail:
+  *
+  * | entry | vector leg | keyword leg | capped by `servingTopC`? | candidates materialized? |
+  * |---|---|---|---|---|
+  * | `fusedBatchSel`, `fusedBatchSweepSel` | brute fan-out | exact BM25 | no | no |
+  * | `fusedBatchIvfSel` | probed cells | exact BM25 | no | with a standing postings index |
+  * | `fusedBatchChampionSel`, `…SweepSel`, `…DepthSweepSel` | probed cells | champion lists | yes | yes, uncapped |
+  * | `fusedBatchRefreshedPaths` | probed live cells | refreshed champions | yes | no |
+  * | `fusedBatchQuantizedSel` | ADC over codes | refreshed champions | yes | no |
+  * | `fusedPrunedWithQuery` | probed cells | champion impacts | no | yes |
+  * | `fusedRefreshedWithQuery` | probed live cells | refreshed champions | no | yes |
+  * | `fusedQuantizedWithQuery` | ADC over codes | refreshed champions | no | yes |
+  *
+  * Pruned legs restrict keyword parts to their candidates; the brute
+  * leg to the embedded universe. The SQL oracles mirror the split:
+  * prefix CTEs ending in `joined`, then one [[fuseTailSql]].
   */
 object HybridSearch {
   val Alpha = 0.5
@@ -177,15 +199,15 @@ object HybridSearch {
   val searchRrfOracle: String =
     fusedRrfSql(KeywordSearch.QueryTerms, VectorSearch.QueryVecId)
 
-  // --- batch serving pattern ----------------------------------------------
+  // --- batch and request fusion: vector legs + one keyed tail ------------
 
   val BatchK = 5
 
   /** The per-(query, leg) candidate bound for capped fusion paths (see
-    * [[cappedChampionParts]]): C = 4·k keeps every plausible fused winner
-    * (a doc outside BOTH legs' top-4k cannot reach the fused top-k at
-    * any alpha unless ≥3k stronger candidates tie it out of both lists)
-    * while making the normalize+fuse tail O(C·|Q|) instead of
+    * [[cappedCut]]): C = 4·k keeps every plausible fused winner (a doc
+    * outside BOTH legs' top-4k cannot reach the fused top-k at any alpha
+    * unless ≥3k stronger candidates tie it out of both lists) while
+    * making the normalize+fuse tail O(C·|Q|) instead of
     * O(nprobe·|cell|·|Q|) — the number that grows with the corpus.
     */
   def topCFor(k: Int): Int = 4 * k
@@ -228,96 +250,334 @@ object HybridSearch {
     s"CASE WHEN (SELECT count(*) FROM documents) >= $CutMinDocs " +
       s"THEN $topC ELSE 2147483647 END"
 
+  /** The golden query set of the batch forms: every
+    * [[KeywordSearch.BatchStride]]-th id (vector side keys on vec_id,
+    * keyword side on doc_id).
+    */
+  private def everyStride(id: String): DataFrame => DataFrame =
+    _.filter(col(id) % KeywordSearch.BatchStride === 0)
+
+  private def queriesOf(embs: DataFrame): DataFrame =
+    embs.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
+  /** One vector leg of the fusion:
+    *   - `vparts` — the `(q_id, doc_id, vscore)` candidate fan-out;
+    *   - `kwDomain` — keyword parts restricted to the leg's candidate
+    *     domain without reading the fan-out (cell membership against
+    *     the broadcast probe pairs; the brute leg's embedded universe);
+    *   - `rescore` — the true vscore of `(q_id, doc_id)` keys the
+    *     vector cut dropped (same expression over the same rows, so
+    *     bitwise the fan-out's);
+    *   - `pruned` — the uncapped prep restricts keyword parts by a
+    *     semi-join on the post-exchange candidate frame (a third
+    *     ReusedExchange consumer, not a recompute of the fan-out)
+    *     instead of `kwDomain`;
+    *   - `materialize` — the bounded candidate frame and the restricted
+    *     keyword parts are materialized once (eager query-scoped
+    *     checkpoints). Only fan-outs bounded per query earn it: a batch
+    *     over refreshed cells is queries × corpus × nprobe/nlist rows —
+    *     the class a serving system never persists (the r11 48g OOM at
+    *     100× was that frame's localCheckpoint).
+    */
+  private final case class VecLeg(vparts: DataFrame,
+                                  kwDomain: DataFrame => DataFrame,
+                                  rescore: DataFrame => DataFrame,
+                                  pruned: Boolean = true,
+                                  materialize: Boolean = false)
+
+  private def cosineRescore(corpus: DataFrame, queries: DataFrame)
+                           (keys: DataFrame): DataFrame =
+    corpus.select(col("vec_id").as("doc_id"), col("embedding"))
+      .join(broadcast(keys.join(queries, Seq("q_id"))), Seq("doc_id"))
+      .select(col("q_id"), col("doc_id"),
+        cosineSim(col("embedding"), col("q_emb")).as("vscore"))
+
+  /** Keyword parts whose doc lies in one of its query's probed cells —
+    * a featherweight column-pruned pass over `docCells(doc_id, cell)`,
+    * not a semi-join against the fan-out.
+    */
+  private def inProbedCells(docCells: => DataFrame, probed: DataFrame)
+                           (kparts: DataFrame): DataFrame =
+    kparts.join(docCells, Seq("doc_id"))
+      .join(broadcast(probed), Seq("q_id", "cell"), "semi")
+      .filter(col("doc_id") =!= col("q_id"))
+      .drop("cell")
+
+  /** The brute-force leg: every query fans out over the whole embedded
+    * corpus. Keyword scores are restricted to the EMBEDDED universe: the
+    * corpora are not guaranteed 1:1 (sf0.1 testdata: 5000 documents,
+    * 2000 embeddings), and an un-embedded document's keyword match must
+    * contribute to neither the fusion nor the normalization stats
+    * (caught by the sf0.1 oracle run: sparse stats over all documents
+    * skewed kmax and every fused score with it).
+    */
+  private def bruteLeg(embs: DataFrame, queries: DataFrame): VecLeg =
+    VecLeg(
+      Tables.parallel(embs)
+        .join(broadcast(queries), col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id").as("doc_id"),
+          cosineSim(col("embedding"), col("q_emb")).as("vscore")),
+      _.join(embs.select(col("vec_id").as("doc_id")), Seq("doc_id"), "semi"),
+      cosineRescore(embs, queries), pruned = false)
+
+  /** The probed-cell leg over `corpus(vec_id, cell, embedding)`: each
+    * query's cosine fan-out over its probed cells only. Query embeddings
+    * are folded into the probe frame (|Q|·nprobe rows) before the
+    * fan-out — ONE broadcast hash probe on the corpus stream instead of
+    * a cell probe plus a q_id probe (guide §2.3/§3.1). `spread` re-slices
+    * a standing table's scan ([[Tables.parallel]]).
+    */
+  private def cellLeg(corpus: DataFrame, probed: DataFrame, queries: DataFrame,
+                      spread: Boolean, materialize: Boolean): VecLeg =
+    VecLeg(
+      (if (spread) Tables.parallel(corpus) else corpus)
+        .join(broadcast(probed.join(queries, Seq("q_id"))), Seq("cell"))
+        .filter(col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id").as("doc_id"),
+          cosineSim(col("embedding"), col("q_emb")).as("vscore")),
+      inProbedCells(corpus.select(col("vec_id").as("doc_id"), col("cell")), probed),
+      cosineRescore(corpus, queries), materialize = materialize)
+
+  /** Probed cells of the standing embeddings, off the standing centroids
+    * when given ([[IvfIndex.batchProbedCellsFrom]]) or derived inline.
+    */
+  private def ivfLeg(embs: DataFrame, queries: DataFrame, nprobe: Int,
+                     centroids: Option[DataFrame],
+                     materialize: Boolean = true): VecLeg =
+    cellLeg(embs.withColumnRenamed("label", "cell"),
+      centroids.fold(IvfIndex.batchProbedCells(embs, queries, nprobe))(
+        IvfIndex.batchProbedCellsFrom(_, queries, nprobe)),
+      queries, spread = true, materialize)
+
+  /** Probed LIVE cells of a refreshed vector layout: cells ranked against
+    * the merged serving centroids, live vectors of those cells only;
+    * `asOf` pins both.
+    */
+  private def liveLeg(s: SparkSession, vecPath: String, queries: DataFrame,
+                      nprobe: Int, asOf: Option[Int]): VecLeg = {
+    val probed = IvfIndex.batchProbedCellsFrom(
+      VectorRefresh.servingCentroidView(s, vecPath, asOf), queries, nprobe)
+    cellLeg(VectorRefresh.liveVectors(s, vecPath, asOf = asOf), probed,
+      queries, spread = false, materialize = false)
+  }
+
+  /** The ADC leg over a quantized layout's standing codes
+    * ([[VectorRefresh.batchAdcParts]]): vscore = −adc (distance negated
+    * into a similarity; min-max normalization is the same affine family
+    * either way, and the oracle replays the negation literally); dropped
+    * keyword winners recover their TRUE adc by a keyed re-lookup
+    * ([[VectorRefresh.adcForKeys]]); cell membership reads the live
+    * codes' (vec_id, cell) projection.
+    */
+  private def adcLeg(s: SparkSession, vecPath: String, queries: DataFrame,
+                     nprobe: Int, asOf: Option[Int]): VecLeg = {
+    val (adcs, probed, tbls) =
+      VectorRefresh.batchAdcParts(s, vecPath, queries, nprobe, asOf)
+    VecLeg(adcs.select(col("q_id"), col("vec_id").as("doc_id"),
+        (-col("adc")).as("vscore")),
+      inProbedCells(VectorRefresh.liveCodes(s, vecPath, None, asOf)
+        .select(col("vec_id").as("doc_id"), col("cell")), probed),
+      keys => VectorRefresh.adcForKeys(s, vecPath, keys, tbls, asOf)
+        .select(col("q_id"), col("doc_id"), (-col("adc")).as("vscore")))
+  }
+
+  /** Fuse a vector leg with sparse keyword parts `(q_id[, m], doc_id,
+    * raw_score)` and rank: [[fusePrep]] then the tail — one bounded heap
+    * per key at `alpha`, or, given `alphas`, |alphas| heaps side by side
+    * in ONE `groupBy` (the candidate frame is never replicated
+    * ×|alphas|), unpivoted to `(alpha, q_id, rn, doc_id, score)`. `ms`
+    * (champion depths; the keyword parts carry `m`) adds the depth key:
+    * `(m, q_id, rn, doc_id, score)`. Per-alpha arithmetic uses literal
+    * `alpha` / `1−alpha` factors — bit-identical across the single and
+    * swept forms and to the column-alpha oracle.
+    */
+  private def fuse(leg: VecLeg, kparts: DataFrame, topC: Option[Int],
+                   alpha: Double, k: Int, alphas: Option[Seq[Double]] = None,
+                   ms: Option[Seq[Int]] = None): DataFrame = {
+    val keys = ms.fold(Seq("q_id"))(_ => Seq("m", "q_id"))
+    val kc = keys.map(col)
+    val (joined, qstats) = fusePrep(leg, kparts, topC,
+      ms.map(ChampionIndex.msFrame(kparts.sparkSession, _)))
+    def fscore(a: Double) = round(
+      lit(a) * (col("vscore") - col("vmin")) /
+        when(col("vmax") === col("vmin"), 1.0).otherwise(col("vmax") - col("vmin")) +
+        lit(1 - a) * (col("kscore") - col("kmin")) /
+          when(col("kmax") === col("kmin"), 1.0).otherwise(col("kmax") - col("kmin")),
+      4)
+    // heaps unpivot to one row per (lead keys, rank)
+    def ranked(heaps: DataFrame, lead: Seq[Column], top: Column, out: Seq[Column]) =
+      heaps.select(lead :+ posexplode(top).as(Seq("i", "t")): _*)
+        .select(out ++ Seq((col("i") + 1).as("rn"), col("t.id").as("doc_id"),
+          col("t.score").as("score")): _*)
+    val scored = joined.join(broadcast(qstats), keys)
+    alphas match {
+      case None =>
+        ranked(scored.select(kc :+ col("doc_id") :+ fscore(alpha).as("fs"): _*)
+          .groupBy(kc: _*)
+          .agg(topKByScore(col("fs"), col("doc_id"), k).as("top")),
+          kc, col("top"), kc)
+          .orderBy(kc :+ col("rn"): _*)
+      case Some(as) =>
+        val heaps = as.zipWithIndex.map { case (a, i) =>
+          topKByScore(fscore(a), col("doc_id"), k).as(s"top_$i") }
+        ranked(scored.groupBy(kc: _*).agg(heaps.head, heaps.tail: _*)
+          .select(kc :+ explode(array(as.zipWithIndex.map { case (a, i) =>
+            struct(lit(a).as("alpha"), col(s"top_$i").as("top")) }: _*)).as("slice"): _*),
+          kc :+ col("slice.alpha").as("alpha"), col("slice.top"), col("alpha") +: kc)
+          .orderBy((col("alpha") +: kc) :+ col("rn"): _*)
+    }
+  }
+
+  /** The ONE normalize-and-join prep of every batch and request fusion:
+    * `(joined(keys, doc_id, vscore, kscore), qstats(keys, vmin, vmax,
+    * kmin, kmax))`.
+    *
+    * Uncapped (`topC = None`): the candidate frame goes behind ONE
+    * explicit (q_id, doc_id) exchange that every consumer reuses (stats
+    * aggregate, fusion join, keyword restriction), so the fan-out is
+    * computed and shuffled exactly once — (q_id, doc_id), NOT q_id
+    * alone: a brute fan-out holds ~|corpus| rows per query. The
+    * explicit not-null filters keep every consumer's subtree
+    * canonically identical (the join branch would otherwise push
+    * IsNotNull below the exchange asymmetrically and defeat
+    * ReusedExchange — the recorded lm-bigram failure mode). A
+    * `materialize` leg checkpoints the frame once instead (eager vs lazy
+    * A/B-measured in r9: the two eager barriers cost nothing detectable
+    * at micro-batch scale, and they guarantee exactly-once computation
+    * where a lazy persist races concurrent consumers). With `ms` the
+    * candidate frame is replicated per depth for the join against the
+    * per-m keyword frames — bounded by the toy corpus that runs uncapped.
+    *
+    * Capped (`Some(c)`): [[cappedCut]] first, then the ≤2C-per-query
+    * union behind the same exchange (per-depth frames skip it: they are
+    * bounded and already keyed by (m, q_id)).
+    *
+    * Normalization: vector min/max over the candidate set; keyword
+    * min/max from the SPARSE matched rows, range clamped to include the
+    * implicit 0 whenever a candidate matched no query term
+    * (n_matched < n_cand), all-zeros when nothing matched.
+    */
+  private def fusePrep(leg: VecLeg, kparts: DataFrame, topC: Option[Int],
+                       ms: Option[DataFrame]): (DataFrame, DataFrame) = {
+    val keys = ms.fold(Seq("q_id"))(_ => Seq("m", "q_id"))
+    def exchanged(vparts: DataFrame, materialize: Boolean) = {
+      val v = vparts.filter(col("q_id").isNotNull && col("doc_id").isNotNull)
+        .repartition(col("q_id"), col("doc_id"))
+      if (materialize) Checkpoints.transient_(v) else v
+    }
+    val (vcand, kcand) = topC match {
+      case Some(c) =>
+        val (v, kcut) = cappedCut(leg, kparts, c, ms)
+        (if (ms.isDefined) v else exchanged(v, materialize = false), kcut)
+      case None =>
+        val v = exchanged(leg.vparts, leg.materialize)
+        val k =
+          if (leg.pruned)
+            kparts.join(v.select(col("q_id"), col("doc_id")),
+              Seq("q_id", "doc_id"), "semi")
+          else leg.kwDomain(kparts)
+        (ms.fold(v)(m => v.join(broadcast(m)).select("m", "q_id", "doc_id", "vscore")),
+          if (leg.materialize) Checkpoints.transient_(k) else k)
+    }
+    val vstats = vcand.groupBy(keys.head, keys.tail: _*)
+      .agg(min("vscore").as("vmin"), max("vscore").as("vmax"),
+        count(col("doc_id")).as("n_cand"))
+    val kagg = kcand.groupBy(keys.head, keys.tail: _*)
+      .agg(min("raw_score").as("krmin"), max("raw_score").as("krmax"),
+        count(col("doc_id")).as("n_matched"))
+    val qstats = vstats.join(kagg, keys, "left")
+      .select(keys.map(col) ++ Seq(col("vmin"), col("vmax"),
+        when(col("n_matched").isNull, lit(0.0))
+          .when(col("n_matched") < col("n_cand"), least(col("krmin"), lit(0.0)))
+          .otherwise(col("krmin")).as("kmin"),
+        when(col("n_matched").isNull, lit(0.0))
+          .when(col("n_matched") < col("n_cand"), greatest(col("krmax"), lit(0.0)))
+          .otherwise(col("krmax")).as("kmax")): _*)
+    val joined = vcand.join(kcand, keys :+ "doc_id", "left")
+      .withColumn("kscore", coalesce(col("raw_score"), lit(0.0)))
+    (joined, qstats)
+  }
+
+  /** The per-(q_id, leg) top-C serving cut — the 100 TB shape: the
+    * vector fan-out is consumed by EXACTLY ONE streaming pass into
+    * bounded map-side heaps (partial [[graft.functions.VectorFunctions
+    * .topKByScore]] per q_id ahead of the q_id exchange, so the shuffle
+    * carries ≤C rows per query per task), and it is NEVER materialized,
+    * exchanged whole, or probed a second time — the r11 capped form
+    * checkpointed and semi-join-probed the full frame, which
+    * re-introduced the corpus-fraction-checkpoint failure mode (executor
+    * OOM at 100×). The two other uses of the frame come from the leg's
+    * bounded artifacts instead: the keyword candidate restriction is
+    * `kwDomain` (cell membership), and keyword winners the vector cut
+    * dropped recover their vscore through `rescore` for the ≤C·|Q|
+    * missing pairs. Output: the ≤2C-per-query vector union and the
+    * keyword cut (⊆ its keys), so the prep's stats/clamp/join semantics
+    * are unchanged and the SQL oracle ([[cappedJoinedSqlCtes]]) replays
+    * it row-for-row. With `ms` the vector cut is depth-independent and
+    * computed once; keyword cuts are per (m, q_id), and dropped winners
+    * are re-scored once per DISTINCT (q_id, doc_id) pair, then
+    * re-attached to their depths — ≤C·|Q| pairs regardless of |ms|.
+    */
+  private def cappedCut(leg: VecLeg, kparts: DataFrame, c: Int,
+                        ms: Option[DataFrame]): (DataFrame, DataFrame) = {
+    def heap(df: DataFrame, keys: Seq[String], score: String) =
+      df.groupBy(keys.head, keys.tail: _*)
+        .agg(topKByScore(col(score), col("doc_id"), c).as("top"))
+        .select(keys.map(col) :+ explode(col("top")).as("t"): _*)
+        .select(keys.map(col) ++ Seq(col("t.id").as("doc_id"),
+          col("t.score").as(score)): _*)
+    val keys = ms.fold(Seq("q_id"))(_ => Seq("m", "q_id"))
+    val on = keys :+ "doc_id"
+    val vcut = heap(leg.vparts, Seq("q_id"), "vscore")
+    val kcut = heap(leg.kwDomain(kparts), keys, "raw_score")
+    val vcutK = ms.fold(vcut)(m => vcut.join(broadcast(m)))
+    val extraKeys = kcut.join(vcutK, on, "anti").select(on.map(col): _*)
+    val vcand = ms match {
+      case None => vcut.unionByName(leg.rescore(extraKeys))
+      case Some(_) =>
+        val extraV = leg.rescore(extraKeys.select("q_id", "doc_id").distinct())
+        vcutK.select("m", "q_id", "doc_id", "vscore")
+          .unionByName(broadcast(extraKeys).join(extraV, Seq("q_id", "doc_id"))
+            .select("m", "q_id", "doc_id", "vscore"))
+    }
+    (vcand, kcut)
+  }
+
+  // --- batch entries ---
+
   /** Multi-query hybrid search in one composition — completes the batch
     * triad (vector [[VectorSearch.batchTopK]], keyword
-    * [[KeywordSearch.bm25Batch]], hybrid here). Per golden query (every
-    * [[KeywordSearch.BatchStride]]-th doc: its embedding + its rarest
-    * corpus tokens), both signals fan out once — the vector side over
-    * the broadcast query batch, the keyword side through the shared
-    * postings pass — LEFT-join on (q_id, doc_id) (docs matching no query
-    * term carry kscore 0, exactly the single-query `base` semantics),
-    * min-max normalize PER QUERY (one groupBy over the fan-out, Q-row
-    * broadcast back), fuse with alpha, rank through the bounded heap.
-    * Same documented normalization semantics as [[fused]], over the
-    * self-excluded corpus.
-    */
-  def fusedBatch(docs: DataFrame, embs: DataFrame,
-                 stride: Int = KeywordSearch.BatchStride,
-                 nTerms: Int = KeywordSearch.BatchTerms,
-                 alpha: Double = Alpha, k: Int = BatchK): DataFrame =
-    fusedBatchFor(docs, embs, col("vec_id") % stride === 0,
-      col("doc_id") % stride === 0, nTerms, alpha, k)
-
-  /** [[fusedBatch]] over an arbitrary query-id predicate pair (vector
-    * side keys on vec_id, keyword side on doc_id) — the micro-batch
-    * serving entry ([[graft.streaming.ServeStream.hybridServe]]).
-    * Normalization stats are per query and corpus stats global, so a
-    * query's fused scores are batch-split invariant.
-    */
-  private[graft] def fusedBatchFor(docs: DataFrame, embs: DataFrame,
-                                   vecPred: Column, docPred: Column,
-                                   nTerms: Int = KeywordSearch.BatchTerms,
-                                   alpha: Double = Alpha,
-                                   k: Int = BatchK): DataFrame =
-    fusedBatchSel(docs, embs, _.filter(vecPred), _.filter(docPred),
-      nTerms, alpha, k)
-
-  /** [[fusedBatchFor]] with selector functions for both query sides —
-    * the serving path passes broadcast semi-joins of the micro-batch's
-    * id frame (see [[KeywordSearch.batchKwRawSel]]).
+    * [[KeywordSearch.bm25Batch]], hybrid here). Per golden query (its
+    * embedding + its rarest corpus tokens), both signals fan out once —
+    * the brute vector leg over the broadcast query batch, the keyword
+    * side through the shared postings pass — LEFT-join on (q_id,
+    * doc_id) (docs matching no query term carry kscore 0, exactly the
+    * single-query `base` semantics), min-max normalize PER QUERY, fuse
+    * with alpha, rank through the bounded heap. Same normalization
+    * semantics as [[fused]], over the self-excluded corpus. The
+    * selectors pick the queries (the micro-batch serving path passes
+    * broadcast semi-joins of its id frame — [[KeywordSearch
+    * .batchKwRawSel]]); normalization stats are per query and corpus
+    * stats global, so a query's fused scores are batch-split invariant.
     */
   private[graft] def fusedBatchSel(docs: DataFrame, embs: DataFrame,
-                                   selectVecQueries: DataFrame => DataFrame,
-                                   selectDocQueries: DataFrame => DataFrame,
+                                   selectVecQueries: DataFrame => DataFrame = everyStride("vec_id"),
+                                   selectDocQueries: DataFrame => DataFrame = everyStride("doc_id"),
                                    nTerms: Int = KeywordSearch.BatchTerms,
                                    alpha: Double = Alpha,
                                    k: Int = BatchK,
                                    kwIndex: Option[DataFrame] = None,
                                    kwDict: Option[DataFrame] = None,
-                                   kwStats: Option[DataFrame] = None): DataFrame = {
-    val (vparts, kparts) = batchParts(docs, embs, selectVecQueries,
-      selectDocQueries, nTerms, kwIndex, kwDict, kwStats)
-    fuseTail(vparts, kparts, alpha, k)
-  }
-
-  /** The brute-force batch fusion's two signal frames — shared by the
-    * single-alpha entry ([[fusedBatchSel]]) and the alpha sweep
-    * ([[fusedBatchSweepSel]]).
-    */
-  private def batchParts(docs: DataFrame, embs: DataFrame,
-                         selectVecQueries: DataFrame => DataFrame,
-                         selectDocQueries: DataFrame => DataFrame,
-                         nTerms: Int,
-                         kwIndex: Option[DataFrame],
-                         kwDict: Option[DataFrame] = None,
-                         kwStats: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    val queries = selectVecQueries(embs)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val vparts = Tables.parallel(embs)
-      .join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("doc_id"),
-        cosineSim(col("embedding"), col("q_emb")).as("vscore"))
-    // keyword scores restricted to the EMBEDDED universe up front: the
-    // dense fan-out domain is `embeddings`, and the corpora are not
-    // guaranteed 1:1 (sf0.1 testdata: 5000 documents, 2000 embeddings) —
-    // an un-embedded document's keyword match must contribute to neither
-    // the fusion nor the normalization stats (caught by the sf0.1 oracle
-    // run: sparse stats over all documents skewed kmax and every fused
-    // score with it)
-    val kparts = KeywordSearch.batchKwRawSel(docs, selectDocQueries, nTerms,
-        kwIndex, kwDict, kwStats)
-      .join(embs.select(col("vec_id").as("doc_id")), Seq("doc_id"), "semi")
-    (vparts, kparts)
-  }
+                                   kwStats: Option[DataFrame] = None): DataFrame =
+    fuse(bruteLeg(embs, queriesOf(selectVecQueries(embs))),
+      KeywordSearch.batchKwRawSel(docs, selectDocQueries, nTerms, kwIndex,
+        kwDict, kwStats), None, alpha, k)
 
   /** [[fusedBatchSel]] swept over MULTIPLE alphas in ONE plan — the
     * hyperparameter-tuning form behind `eval_alpha_sweep`: the dense
-    * fan-out, sparse keyword stats and per-query normalization (the
-    * expensive part) compute once behind the same shared exchange; the
-    * alpha dimension explodes MAP-SIDE on the fused frame, so only the
-    * final fuse expression and the bounded per-(alpha, query) heap
-    * multiply by |alphas| — no additional corpus work, no new
-    * corpus-sized shuffle.
+    * fan-out, sparse keyword stats and per-query normalization compute
+    * once; only the fuse expression and the bounded per-(alpha, query)
+    * heaps multiply by |alphas|.
     */
   private[graft] def fusedBatchSweepSel(docs: DataFrame, embs: DataFrame,
                                         selectVecQueries: DataFrame => DataFrame,
@@ -327,239 +587,24 @@ object HybridSearch {
                                         k: Int = BatchK,
                                         kwIndex: Option[DataFrame] = None,
                                         kwDict: Option[DataFrame] = None,
-                                        kwStats: Option[DataFrame] = None): DataFrame = {
-    val (vparts, kparts) = batchParts(docs, embs, selectVecQueries,
-      selectDocQueries, nTerms, kwIndex, kwDict, kwStats)
-    fuseTailSweep(vparts, kparts, alphas, k)
-  }
+                                        kwStats: Option[DataFrame] = None): DataFrame =
+    fuse(bruteLeg(embs, queriesOf(selectVecQueries(embs))),
+      KeywordSearch.batchKwRawSel(docs, selectDocQueries, nTerms, kwIndex,
+        kwDict, kwStats), None, Alpha, k, alphas = Some(alphas))
 
-  /** Index-accelerated batch hybrid fusion — the serving-path form: the
-    * vector signal scans only each query's nprobe IVF cells
-    * ([[IvfIndex.batchProbedCells]]) instead of fanning every query over
-    * the whole corpus, and the keyword signal is restricted to the same
-    * pruned candidate set (a search system normalizes over what it
-    * retrieves). Fusion semantics are [[fusedBatchSel]]'s, with the
-    * candidate domain = the probed cells' vectors.
-    */
-  private[graft] def fusedBatchIvf(docs: DataFrame, embs: DataFrame,
-                                   stride: Int = KeywordSearch.BatchStride,
-                                   nTerms: Int = KeywordSearch.BatchTerms,
-                                   nprobe: Int = IvfIndex.NProbe,
-                                   alpha: Double = Alpha,
-                                   k: Int = BatchK,
-                                   centroids: Option[DataFrame] = None,
-                                   kwIndex: Option[DataFrame] = None): DataFrame =
-    fusedBatchIvfSel(docs, embs, _.filter(col("vec_id") % stride === 0),
-      _.filter(col("doc_id") % stride === 0), nTerms, nprobe, alpha, k,
-      centroids, kwIndex)
-
-  /** The IVF-pruned dense candidate frame `(q_id, doc_id, vscore)` —
-    * each query's cosine fan-out over its nprobe probed cells only.
-    * Shared by the IVF and champion fusion forms.
-    */
-  private def ivfVparts(embs: DataFrame,
-                        selectVecQueries: DataFrame => DataFrame,
-                        nprobe: Int, centroids: Option[DataFrame]): DataFrame =
-    ivfVpartsFor(embs,
-      selectVecQueries(embs)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-      nprobe, centroids)
-
-  /** [[ivfVparts]] over an arbitrary query frame `queries(q_id, q_emb)`
-    * — the single-request pruned entry passes an embedded request (its
-    * q_id chosen to collide with no corpus vec_id, or with the seed
-    * object's own id for self-exclusion).
-    */
-  private def ivfVpartsFor(embs: DataFrame, queries: DataFrame,
-                           nprobe: Int, centroids: Option[DataFrame]): DataFrame = {
-    val probed = centroids
-      .map(c => IvfIndex.batchProbedCellsFrom(c, queries, nprobe))
-      .getOrElse(IvfIndex.batchProbedCells(embs, queries, nprobe))
-    // query embeddings folded into the probe frame (|Q|·nprobe rows)
-    // before the corpus fan-out — ONE broadcast hash probe on the
-    // corpus stream instead of a cell probe plus a q_id probe (guide
-    // §2.3/§3.1); identical rows, identical cosine inputs
-    Tables.parallel(embs)
-      .join(broadcast(probed.join(queries, Seq("q_id"))),
-        col("label") === col("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("doc_id"),
-        cosineSim(col("embedding"), col("q_emb")).as("vscore"))
-  }
-
-  /** SINGLE-query doubly-pruned hybrid search — [[fusedWithQuery]]'s
-    * at-scale serving twin and the facade's pruned-index routing target
-    * ([[graft.GraftClient]] `indexMode = "pruned"`): the vector signal
-    * scans only the request's nprobe IVF cells off the standing
-    * centroids, the keyword signal sums the query terms' champion
-    * impacts restricted to those candidates, and the fusion tail is
-    * [[fuseTail]]'s (sparse keyword stats + implicit-zero clamp) for a
-    * one-query batch. Per-request cost nprobe·|cell| + |terms|·M
-    * regardless of corpus size. `qId` both names the output rows and —
-    * when it matches a corpus vec_id (the near-object form) — excludes
-    * the seed object itself; embedded free-text requests pass a
-    * non-colliding id (-1).
-    */
-  private[graft] def fusedPrunedWithQuery(embs: DataFrame, champs: DataFrame,
-                                          terms: Seq[String], q: DataFrame,
-                                          qId: Long,
-                                          centroids: Option[DataFrame] = None,
-                                          alpha: Double = Alpha, k: Int = TopK,
-                                          nprobe: Int = IvfIndex.NProbe): DataFrame = {
-    val queries = q.select(lit(qId).as("q_id"), col("q_emb"))
-    val vparts = ivfVpartsFor(embs, queries, nprobe, centroids)
-    val kparts = champs
-      .filter(col("term").isin(terms.distinct.sorted: _*))
-      .groupBy("doc_id")
-      .agg(KeywordSearch.fixedPointSum6(col("imp")).as("raw_score"))
-      .withColumn("q_id", lit(qId))
-    fuseTail(vparts, kparts, alpha, k,
-      restrictKwToCandidates = true, materializeCandidates = true)
-      .select(col("rn"), col("doc_id"), col("score"))
-  }
-
-  /** Single-request doubly-pruned fusion over BOTH refreshable layouts
-    * — the facade's refreshed `hybridSearch` route: vector candidates
-    * from the refreshed IVF segments' merged centroids + live cells,
-    * keyword scores from the refreshed champion views with probe-time
-    * idf ([[IndexRefresh.requestScored]]), the one shared fusion tail.
-    */
-  private[graft] def fusedRefreshedWithQuery(s: SparkSession,
-                                             kwPath: String, vecPath: String,
-                                             terms: Seq[String], q: DataFrame,
-                                             qId: Long,
-                                             alpha: Double = Alpha, k: Int = TopK,
-                                             nprobe: Int = IvfIndex.NProbe,
-                                             asOf: Option[Int] = None,
-                                             allowedDocs: Option[DataFrame] = None): DataFrame = {
-    val queries = q.select(lit(qId).as("q_id"), col("q_emb"))
-    val vparts0 = VectorRefresh.batchVparts(s, vecPath, queries, nprobe, asOf)
-    // filter-during-pinned-walk (the IvfIndex filtered-search pattern
-    // over refreshed views): the metadata predicate restricts the
-    // candidate domain BEFORE the normalization stats — and because the
-    // keyword leg is candidate-restricted below, one semi-join filters
-    // both legs. `allowedDocs` carries doc_ids from the SAME corpus
-    // state the pin serves (the caller's as-of universe).
-    // no broadcast hint: a selective filter broadcasts via AQE, a weak
-    // one must not be forced driver-side at corpus scale
-    val vparts = allowedDocs.fold(vparts0)(a =>
-      vparts0.join(a.select(col("doc_id")), Seq("doc_id"), "semi"))
-    val kparts = IndexRefresh.requestScored(s, kwPath, terms.distinct.sorted, asOf)
-      .withColumn("q_id", lit(qId))
-    fuseTail(vparts, kparts, alpha, k,
-      restrictKwToCandidates = true, materializeCandidates = true)
-      .select(col("rn"), col("doc_id"), col("score"))
-  }
-
-  /** Single-request QUANTIZED hybrid — the facade's quantized route
-    * ([[graft.GraftClient]] `indexMode = "quantized"`): the vector leg
-    * is the single-query ADC fan-out over the quantized layout's
-    * standing codes (vscore = −adc, the 15i convention), the keyword
-    * leg is the refreshed champion probe ([[IndexRefresh
-    * .requestScored]]), fused by the house tail. `allowedDocs` is the
-    * filter-during-the-walk hook (the [[fusedRefreshedWithQuery]]
-    * pattern — one semi-join restricts both legs); `asOf` pins codes,
-    * centroids, and keyword views consistently.
-    */
-  private[graft] def fusedQuantizedWithQuery(s: SparkSession,
-                                             kwPath: String, vecPath: String,
-                                             terms: Seq[String], q: DataFrame,
-                                             qId: Long,
-                                             alpha: Double = Alpha, k: Int = TopK,
-                                             nprobe: Int = IvfIndex.NProbe,
-                                             asOf: Option[Int] = None,
-                                             allowedDocs: Option[DataFrame] = None): DataFrame = {
-    val queries = q.select(lit(qId).as("q_id"), col("q_emb"))
-    val (adcs, _, _) = VectorRefresh.batchAdcParts(s, vecPath, queries, nprobe, asOf)
-    val vparts0 = adcs.select(col("q_id"), col("vec_id").as("doc_id"),
-      (-col("adc")).as("vscore"))
-    val vparts = allowedDocs.fold(vparts0)(a =>
-      vparts0.join(a.select(col("doc_id")), Seq("doc_id"), "semi"))
-    val kparts = IndexRefresh.requestScored(s, kwPath, terms.distinct.sorted, asOf)
-      .withColumn("q_id", lit(qId))
-    fuseTail(vparts, kparts, alpha, k,
-      restrictKwToCandidates = true, materializeCandidates = true)
-      .select(col("rn"), col("doc_id"), col("score"))
-  }
-
-  /** Driver query: the single-query pruned hybrid, seeded like
-    * [[search]] by the benchmark object's stored vector, over the
-    * standing champion + centroid artifacts.
-    */
-  def searchPruned(s: SparkSession, dir: String): DataFrame = {
-    val embs = Tables.embeddings(s, dir)
-    val q = embs.filter(col("vec_id") === VectorSearch.QueryVecId)
-      .select(col("embedding").as("q_emb"))
-    fusedPrunedWithQuery(embs, ChampionIndex.cachedChampions(s, dir),
-      KeywordSearch.QueryTerms, q, VectorSearch.QueryVecId,
-      centroids = Some(IvfIndex.cachedCentroids(s, dir)))
-  }
-
-  /** Oracle for [[searchPruned]]: champion index + probed cells
-    * re-derived from the raw corpus, the one-query fusion replayed on
-    * the coalesced joined frame (equivalent to the engine's
-    * sparse-stats + clamp form, as in [[fusedBatchChampionSql]]).
-    */
-  def searchPrunedSql(terms: Seq[String] = KeywordSearch.QueryTerms,
-                      qId: Long = VectorSearch.QueryVecId,
-                      nprobe: Int = IvfIndex.NProbe,
-                      m: Int = ChampionIndex.M,
-                      alpha: Double = Alpha, k: Int = TopK): String = {
-    val qList = terms.distinct.sorted.map(t => s"'$t'").mkString(", ")
-    s"""WITH ${ChampionIndex.championChampsSqlCtes(m)},
-       |${IvfIndex.batchProbedSqlCtes(s"vec_id = $qId", nprobe)},
-       |kscored AS (
-       |  SELECT CAST($qId AS BIGINT) AS q_id, doc_id,
-       |    ${KeywordSearch.fixedPointSum6Sql("imp")} AS raw_score
-       |  FROM champs WHERE term IN ($qList)
-       |  GROUP BY doc_id),
-       |vparts AS (
-       |  SELECT p.q_id, e.vec_id AS doc_id,
-       |    ${VectorSearch.cosineSql("e.embedding", "q.q_emb")} AS vscore
-       |  FROM embeddings e
-       |  JOIN probed p ON e.label = p.cell
-       |  JOIN queries q ON q.q_id = p.q_id
-       |  WHERE e.vec_id <> p.q_id),
-       |joined AS (
-       |  SELECT vparts.q_id, vparts.doc_id, vscore,
-       |    coalesce(raw_score, 0.0) AS kscore
-       |  FROM vparts LEFT JOIN kscored
-       |    ON vparts.q_id = kscored.q_id AND vparts.doc_id = kscored.doc_id),
-       |qstats AS (
-       |  SELECT q_id, min(vscore) AS vmin, max(vscore) AS vmax,
-       |    min(kscore) AS kmin, max(kscore) AS kmax
-       |  FROM joined GROUP BY 1),
-       |fusedt AS (
-       |  SELECT q_id, doc_id,
-       |    round($alpha * (vscore - vmin) /
-       |            (CASE WHEN vmax = vmin THEN 1.0 ELSE vmax - vmin END)
-       |        + ${1 - alpha} * (kscore - kmin) /
-       |            (CASE WHEN kmax = kmin THEN 1.0 ELSE kmax - kmin END), 4) AS score
-       |  FROM joined JOIN qstats USING (q_id))
-       |SELECT row_number() OVER (ORDER BY score DESC, doc_id) AS rn,
-       |  doc_id, score
-       |FROM fusedt
-       |ORDER BY score DESC, doc_id
-       |LIMIT $k""".stripMargin
-  }
-
-  val searchPrunedOracle: String = searchPrunedSql()
-
-  /** The IVF-fused batch over either the raw corpus (inline index build,
-    * spec-gated ≡ the serving form) or — the serving form, the driver
-    * query — the STANDING index artifacts: materialized centroids
-    * ([[IvfIndex.writeCentroids]]) and batch postings
-    * ([[KeywordSearch.cachedBatchPostings]]). Served, every prep frame
-    * (cell ranking, query terms, df dictionary, corpus stats) is a
-    * column-pruned scan of a compact parquet artifact — nothing
-    * re-tokenizes or re-aggregates the corpus, so the plan is a shallow
-    * diamond instead of the r3 101-exchange tower, and the per-batch
-    * cost is the probe cost (the deployed shape: indexes are built once,
-    * probed forever).
+  /** Index-accelerated batch fusion: the vector leg scans only each
+    * query's nprobe IVF cells ([[IvfIndex.batchProbedCells]]) and the
+    * exact keyword leg is restricted to the same candidates (a search
+    * system normalizes over what it retrieves). Served off the STANDING
+    * artifacts (centroids, batch postings, df dictionary, corpus
+    * stats), every prep frame is a column-pruned scan of a compact
+    * artifact, so the plan is a shallow diamond instead of the r3
+    * 101-exchange tower; the inline form (no postings index) is
+    * spec-gated ≡ the served one and keeps its candidates lazy.
     */
   private[graft] def fusedBatchIvfSel(docs: DataFrame, embs: DataFrame,
-                                      selectVecQueries: DataFrame => DataFrame,
-                                      selectDocQueries: DataFrame => DataFrame,
+                                      selectVecQueries: DataFrame => DataFrame = everyStride("vec_id"),
+                                      selectDocQueries: DataFrame => DataFrame = everyStride("doc_id"),
                                       nTerms: Int = KeywordSearch.BatchTerms,
                                       nprobe: Int = IvfIndex.NProbe,
                                       alpha: Double = Alpha,
@@ -567,35 +612,24 @@ object HybridSearch {
                                       centroids: Option[DataFrame] = None,
                                       kwIndex: Option[DataFrame] = None,
                                       kwDict: Option[DataFrame] = None,
-                                      kwStats: Option[DataFrame] = None): DataFrame = {
-    val vparts = ivfVparts(embs, selectVecQueries, nprobe, centroids)
-    // keyword scores restricted to the PRUNED candidate pairs: a doc
-    // outside a query's probed cells contributes to neither fusion nor
-    // that query's normalization stats (the semi-join happens INSIDE
-    // fuseTail against the post-exchange candidate frame, so it reuses
-    // the one materialized fan-out instead of recomputing it)
-    fuseTail(vparts,
+                                      kwStats: Option[DataFrame] = None): DataFrame =
+    fuse(ivfLeg(embs, queriesOf(selectVecQueries(embs)), nprobe, centroids,
+        materialize = kwIndex.isDefined),
       KeywordSearch.batchKwRawSel(docs, selectDocQueries, nTerms, kwIndex,
-        kwDict, kwStats),
-      alpha, k, restrictKwToCandidates = true,
-      materializeCandidates = kwIndex.isDefined)
-  }
+        kwDict, kwStats), None, alpha, k)
 
-  /** DOUBLY-PRUNED batch fusion — the at-scale serving form of the
-    * hybrid family: the vector signal scans only each query's nprobe
-    * IVF cells AND the keyword signal probes only the champion lists
-    * ([[ChampionIndex]]) of the query's terms, so per-query cost is
-    * bounded by nprobe·|cell| + nTerms·M REGARDLESS of corpus size —
-    * the fusion form whose 100× SCALE row stays measurable while every
-    * exact-keyword-leg fusion is `cap`ped (SCALE.md). Fusion semantics
-    * are [[fusedBatchIvfSel]]'s: candidate domain = the probed cells'
-    * vectors, keyword contributions restricted to those candidates,
-    * sparse keyword stats + implicit-zero clamp.
+  /** DOUBLY-PRUNED batch fusion — the at-scale serving form: the vector
+    * leg scans each query's nprobe IVF cells AND the keyword leg probes
+    * only the champion lists ([[ChampionIndex]]) of the query's terms,
+    * so per-query cost is bounded by nprobe·|cell| + nTerms·M
+    * REGARDLESS of corpus size — the fusion form whose 100× SCALE row
+    * stays measurable while every exact-keyword-leg fusion is `cap`ped
+    * (SCALE.md).
     */
   private[graft] def fusedBatchChampionSel(docs: DataFrame, embs: DataFrame,
                                            postings: DataFrame, champs: DataFrame,
-                                           selectVecQueries: DataFrame => DataFrame,
-                                           selectDocQueries: DataFrame => DataFrame,
+                                           selectVecQueries: DataFrame => DataFrame = everyStride("vec_id"),
+                                           selectDocQueries: DataFrame => DataFrame = everyStride("doc_id"),
                                            nTerms: Int = KeywordSearch.BatchTerms,
                                            nprobe: Int = IvfIndex.NProbe,
                                            alpha: Double = Alpha,
@@ -604,142 +638,15 @@ object HybridSearch {
                                            topC: Option[Int] = Some(topCFor(BatchK))): DataFrame = {
     val kparts = ChampionIndex.championScored(docs, postings, champs,
       selectDocQueries, nTerms)
-    topC match {
-      case Some(c) =>
-        val (vcand, kcut) = cappedChampionParts(embs, selectVecQueries,
-          kparts, nprobe, centroids, c)
-        fuseTail(vcand, kcut, alpha, k)
-      case None =>
-        fuseTail(ivfVparts(embs, selectVecQueries, nprobe, centroids),
-          kparts, alpha, k,
-          restrictKwToCandidates = true, materializeCandidates = true)
-    }
-  }
-
-  /** The capped champion-fusion candidate prep — the 100 TB shape of
-    * the per-(q_id, leg) top-C serving cut: the probed-cell cosine
-    * fan-out is consumed by EXACTLY ONE streaming pass into bounded
-    * map-side heaps (partial [[graft.functions.VectorFunctions
-    * .topKByScore]] per q_id ahead of the q_id exchange, so the
-    * shuffle carries ≤C rows per query per task), and it is NEVER
-    * materialized, exchanged whole, or probed a second time — the r11
-    * capped form checkpointed and semi-join-probed the full frame,
-    * which re-introduced the corpus-fraction-checkpoint failure mode
-    * the refreshed path had already shed (executor OOM at 100×). The
-    * two other uses of the frame come from bounded artifacts instead:
-    *   - the keyword leg's candidate-domain restriction is CELL
-    *     membership — the corpus' (vec_id, label) projection joined to
-    *     the broadcast (q_id, cell) probe pairs — a featherweight
-    *     column-pruned pass, not a semi-join against the fan-out;
-    *   - keyword winners the vector cut dropped recover their true
-    *     vscore by recomputing the SAME cosine expression for the
-    *     ≤C·|Q| missing (q_id, doc_id) pairs directly from the
-    *     embeddings (bitwise identical — same expression, same rows).
-    * Output feeds [[fuseTail]] uncapped: vcand is the ≤2C-per-query
-    * union, kcut ⊆ vcand's keys, so stats/clamp/join semantics are
-    * unchanged and the committed SQL oracle (vtop/ktop/cand CTEs)
-    * replays it row-for-row.
-    */
-  private def cappedChampionParts(embs: DataFrame,
-                                  selectVecQueries: DataFrame => DataFrame,
-                                  kparts: DataFrame,
-                                  nprobe: Int, centroids: Option[DataFrame],
-                                  c: Int): (DataFrame, DataFrame) = {
-    val queries = selectVecQueries(embs)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val probed = centroids
-      .map(cs => IvfIndex.batchProbedCellsFrom(cs, queries, nprobe))
-      .getOrElse(IvfIndex.batchProbedCells(embs, queries, nprobe))
-    // queries folded into the probe frame pre-fan-out (r15, guide §2.3)
-    val vparts = Tables.parallel(embs)
-      .join(broadcast(probed.join(queries, Seq("q_id"))),
-        col("label") === col("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("doc_id"),
-        cosineSim(col("embedding"), col("q_emb")).as("vscore"))
-    val kdom = kparts
-      .join(embs.select(col("vec_id").as("doc_id"), col("label").as("cell")),
-        Seq("doc_id"))
-      .join(broadcast(probed), Seq("q_id", "cell"), "semi")
-      .filter(col("doc_id") =!= col("q_id"))
-      .drop("cell")
-    cappedCut(vparts, kdom, extraKeys =>
-      embs.select(col("vec_id").as("doc_id"), col("embedding"))
-        .join(broadcast(extraKeys.join(queries, Seq("q_id"))), Seq("doc_id"))
-        .select(col("q_id"), col("doc_id"),
-          cosineSim(col("embedding"), col("q_emb")).as("vscore")), c)
-  }
-
-  /** The shared tail of every capped fusion prep: one streaming heap
-    * pass per leg, the anti-join for keyword winners the vector cut
-    * dropped, and the ≤2C-per-query union — `vscoreOf` recomputes the
-    * true vscore for those ≤C·|Q| missing (q_id, doc_id) pairs from
-    * the caller's corpus (bitwise the fan-out's cosine: same
-    * expression, same rows).
-    */
-  private def cappedCut(vparts: DataFrame, kdom: DataFrame,
-                        vscoreOf: DataFrame => DataFrame,
-                        c: Int): (DataFrame, DataFrame) = {
-    val vcut = vparts.groupBy("q_id")
-      .agg(topKByScore(col("vscore"), col("doc_id"), c).as("top"))
-      .select(col("q_id"), explode(col("top")).as("t"))
-      .select(col("q_id"), col("t.id").as("doc_id"),
-        col("t.score").as("vscore"))
-    val kcut = kdom.groupBy("q_id")
-      .agg(topKByScore(col("raw_score"), col("doc_id"), c).as("top"))
-      .select(col("q_id"), explode(col("top")).as("t"))
-      .select(col("q_id"), col("t.id").as("doc_id"),
-        col("t.score").as("raw_score"))
-    val extraKeys = kcut.join(vcut, Seq("q_id", "doc_id"), "anti")
-      .select(col("q_id"), col("doc_id"))
-    (vcut.unionByName(vscoreOf(extraKeys)), kcut)
-  }
-
-  /** [[cappedChampionParts]] for the REFRESHED layouts — the same
-    * one-streaming-pass discipline over [[VectorRefresh.liveVectors]]'
-    * merged live cells: the fan-out (live vectors of each query's
-    * nprobe probed cells off the merged serving centroids) feeds the
-    * per-leg heaps directly, the refreshed keyword scores restrict to
-    * the candidate domain via live cell membership against the
-    * broadcast probe pairs, and dropped keyword winners recover their
-    * vscore from the live corpus. `asOf` pins centroids, live
-    * vectors, and the keyword views consistently (the caller passes
-    * kparts already pinned).
-    */
-  private def cappedRefreshedParts(s: SparkSession, vecPath: String,
-                                   queries: DataFrame, kparts: DataFrame,
-                                   nprobe: Int, asOf: Option[Int],
-                                   c: Int): (DataFrame, DataFrame) = {
-    val probed = IvfIndex.batchProbedCellsFrom(
-      VectorRefresh.servingCentroidView(s, vecPath, asOf), queries, nprobe)
-    val live = VectorRefresh.liveVectors(s, vecPath, asOf = asOf)
-    // queries folded into the probe frame pre-fan-out (r15, guide §2.3)
-    val vparts = live
-      .join(broadcast(probed.join(queries, Seq("q_id"))), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("doc_id"),
-        cosineSim(col("embedding"), col("q_emb")).as("vscore"))
-    val kdom = kparts
-      .join(live.select(col("vec_id").as("doc_id"), col("cell")), Seq("doc_id"))
-      .join(broadcast(probed), Seq("q_id", "cell"), "semi")
-      .filter(col("doc_id") =!= col("q_id"))
-      .drop("cell")
-    cappedCut(vparts, kdom, extraKeys =>
-      live.select(col("vec_id").as("doc_id"), col("embedding"))
-        .join(broadcast(extraKeys.join(queries, Seq("q_id"))), Seq("doc_id"))
-        .select(col("q_id"), col("doc_id"),
-          cosineSim(col("embedding"), col("q_emb")).as("vscore")), c)
+    fuse(ivfLeg(embs, queriesOf(selectVecQueries(embs)), nprobe, centroids),
+      kparts, topC, alpha, k)
   }
 
   /** [[fusedBatchChampionSel]] swept over MULTIPLE alphas in ONE plan —
-    * hyperparameter tuning over the retriever that stays runnable at
-    * the scale the engine targets: candidate prep is the doubly-pruned
-    * fusion's (nprobe IVF cells × champion lists, both bounded per
-    * query, materialized once) and — as in [[fusedBatchSweepSel]] —
-    * only the map-side fuse and the bounded per-(alpha, query) heap
-    * multiply by |alphas|. The exact sweep ([[fusedBatchSweepSel]])
-    * shares the exact-BM25 keyword leg and caps at 100×; this is the
-    * sweep a practitioner runs against the deployed pruned index.
+    * the tuning run a practitioner can afford against the deployed
+    * pruned index at any corpus size (the exact sweep,
+    * [[fusedBatchSweepSel]], shares the exact-BM25 keyword leg and caps
+    * at 100×).
     */
   private[graft] def fusedBatchChampionSweepSel(docs: DataFrame, embs: DataFrame,
                                                 postings: DataFrame, champs: DataFrame,
@@ -753,80 +660,19 @@ object HybridSearch {
                                                 topC: Option[Int] = Some(topCFor(BatchK))): DataFrame = {
     val kparts = ChampionIndex.championScored(docs, postings, champs,
       selectDocQueries, nTerms)
-    topC match {
-      case Some(c) =>
-        val (vcand, kcut) = cappedChampionParts(embs, selectVecQueries,
-          kparts, nprobe, centroids, c)
-        fuseTailSweep(vcand, kcut, alphas, k)
-      case None =>
-        fuseTailSweep(ivfVparts(embs, selectVecQueries, nprobe, centroids),
-          kparts, alphas, k,
-          restrictKwToCandidates = true, materializeCandidates = true)
-    }
+    fuse(ivfLeg(embs, queriesOf(selectVecQueries(embs)), nprobe, centroids),
+      kparts, topC, Alpha, k, alphas = Some(alphas))
   }
 
-  /** SQL replay of [[fusedBatchChampionSweepSel]]: the champion-fusion
-    * CTE skeleton (including the per-leg top-C cut) with the alpha list
-    * cross-joined into the fuse expression, ranking per (alpha, q_id).
-    */
-  def fusedBatchChampionSweepSql(alphas: Seq[Double],
-                                 stride: Int = KeywordSearch.BatchStride,
-                                 nTerms: Int = KeywordSearch.BatchTerms,
-                                 nprobe: Int = IvfIndex.NProbe,
-                                 m: Int = ChampionIndex.M,
-                                 k: Int = BatchK): String =
-    s"""WITH ${ChampionIndex.championScoredSqlCtes(stride, nTerms, m)},
-       |${IvfIndex.batchProbedSqlCtes(s"vec_id % $stride = 0", nprobe)},
-       |vparts AS (
-       |  SELECT p.q_id, e.vec_id AS doc_id,
-       |    ${VectorSearch.cosineSql("e.embedding", "q.q_emb")} AS vscore
-       |  FROM embeddings e
-       |  JOIN probed p ON e.label = p.cell
-       |  JOIN queries q ON q.q_id = p.q_id
-       |  WHERE e.vec_id <> p.q_id),
-       |${cappedJoinedSqlCtes(topCFor(k))},
-       |qstats AS (
-       |  SELECT q_id, min(vscore) AS vmin, max(vscore) AS vmax,
-       |    min(kscore) AS kmin, max(kscore) AS kmax
-       |  FROM joined GROUP BY 1),
-       |alphas AS (SELECT unnest([${alphaListSql(alphas)}]) AS alpha),
-       |fusedt AS (
-       |  SELECT alpha, q_id, doc_id,
-       |    round(alpha * (vscore - vmin) /
-       |            (CASE WHEN vmax = vmin THEN 1.0 ELSE vmax - vmin END)
-       |        + (1.0 - alpha) * (kscore - kmin) /
-       |            (CASE WHEN kmax = kmin THEN 1.0 ELSE kmax - kmin END), 4) AS score
-       |  FROM joined JOIN qstats USING (q_id), alphas),
-       |ranked AS (
-       |  SELECT alpha, q_id, doc_id, score,
-       |    row_number() OVER (PARTITION BY alpha, q_id ORDER BY score DESC, doc_id) AS rn
-       |  FROM fusedt
-       |  QUALIFY rn <= $k)
-       |SELECT alpha, q_id, rn, doc_id, score
-       |FROM ranked
-       |ORDER BY alpha, q_id, rn""".stripMargin
-
   /** [[fusedBatchChampionSel]] swept over MULTIPLE champion DEPTHS in
-    * ONE plan — the M knob's quality curve (`eval_champion_sweep`),
-    * the tuning run a deployment needs before trusting 13e's pruning
-    * at 100 TB, built the way 23e built alpha's: candidates come from
-    * the standing M=max artifact ONCE
-    * ([[ChampionIndex.championScoredByDepth]] — per-depth membership
-    * by re-derived impact rank), the vector leg's probed-cell fan-out
-    * and its top-C cut compute ONCE (depth-independent), and only the
-    * per-(m, q_id) keyword cuts, stats, fuse and bounded heaps carry
-    * the depth dimension — every per-m frame on the capped path is
-    * ≤2C rows per query, so the ×|ms| factor multiplies bounded
-    * frames, never the corpus fan-out. The m = [[ChampionIndex.M]]
-    * slice is bitwise [[fusedBatchChampionSel]]'s ranking
-    * (spec-pinned): same candidate domain, same cuts, same stats
-    * clamp, same fused arithmetic.
-    *
-    * Uncapped regime (corpora below [[CutMinDocs]] — the local gates):
-    * the candidate fan-out is materialized once and replicated per
-    * depth for the join against the per-m keyword frames; bounded
-    * there by the toy corpus, and never the shape that runs at scale
-    * (the cut is on for every corpus the 100× rows measure).
+    * ONE plan — the M knob's quality curve (`eval_champion_sweep`):
+    * keyword candidates come from the standing M=max artifact ONCE
+    * ([[ChampionIndex.championScoredByDepth]] — per-depth membership by
+    * re-derived impact rank), the vector leg and its top-C cut compute
+    * ONCE (depth-independent), and only the per-(m, q_id) keyword cuts,
+    * stats, fuse and heaps carry the depth key. The m =
+    * [[ChampionIndex.M]] slice is bitwise [[fusedBatchChampionSel]]'s
+    * ranking (spec-pinned, capped and uncapped).
     */
   private[graft] def fusedBatchChampionDepthSweepSel(docs: DataFrame, embs: DataFrame,
                                                      postings: DataFrame, champs: DataFrame,
@@ -842,319 +688,141 @@ object HybridSearch {
                                                      rankedChamps: Option[DataFrame] = None): DataFrame = {
     val kpartsM = ChampionIndex.championScoredByDepth(docs, postings, champs,
       selectDocQueries, ms, nTerms, rankedChamps = rankedChamps)
-    val msDf = ChampionIndex.msFrame(docs.sparkSession, ms)
-    topC match {
-      case Some(c) =>
-        val queries = selectVecQueries(embs)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        val probed = centroids
-          .map(cs => IvfIndex.batchProbedCellsFrom(cs, queries, nprobe))
-          .getOrElse(IvfIndex.batchProbedCells(embs, queries, nprobe))
-        // the fan-out feeds its ONE streaming heap pass (the
-        // cappedChampionParts discipline) — depth-independent; queries
-        // folded into the probe frame pre-fan-out (r15, guide §2.3)
-        val vparts = Tables.parallel(embs)
-          .join(broadcast(probed.join(queries, Seq("q_id"))),
-            col("label") === col("cell"))
-          .filter(col("vec_id") =!= col("q_id"))
-          .select(col("q_id"), col("vec_id").as("doc_id"),
-            cosineSim(col("embedding"), col("q_emb")).as("vscore"))
-        val vcut = vparts.groupBy("q_id")
-          .agg(topKByScore(col("vscore"), col("doc_id"), c).as("top"))
-          .select(col("q_id"), explode(col("top")).as("t"))
-          .select(col("q_id"), col("t.id").as("doc_id"),
-            col("t.score").as("vscore"))
-        val kdomM = kpartsM
-          .join(embs.select(col("vec_id").as("doc_id"), col("label").as("cell")),
-            Seq("doc_id"))
-          .join(broadcast(probed), Seq("q_id", "cell"), "semi")
-          .filter(col("doc_id") =!= col("q_id"))
-          .drop("cell")
-        val kcutM = kdomM.groupBy("m", "q_id")
-          .agg(topKByScore(col("raw_score"), col("doc_id"), c).as("top"))
-          .select(col("m"), col("q_id"), explode(col("top")).as("t"))
-          .select(col("m"), col("q_id"), col("t.id").as("doc_id"),
-            col("t.score").as("raw_score"))
-        val vcutM = vcut.join(broadcast(msDf))
-        // keyword winners the vector cut dropped recover their true
-        // vscore once per DISTINCT (q_id, doc_id) pair, then re-attach
-        // their depths — ≤C·|Q| pairs regardless of |ms|
-        val extraKeysM = kcutM.join(vcutM, Seq("m", "q_id", "doc_id"), "anti")
-          .select(col("m"), col("q_id"), col("doc_id"))
-        val extraV = embs.select(col("vec_id").as("doc_id"), col("embedding"))
-          .join(broadcast(extraKeysM.select("q_id", "doc_id").distinct()
-            .join(queries, Seq("q_id"))), Seq("doc_id"))
-          .select(col("q_id"), col("doc_id"),
-            cosineSim(col("embedding"), col("q_emb")).as("vscore"))
-        val vcandM = vcutM.select("m", "q_id", "doc_id", "vscore")
-          .unionByName(broadcast(extraKeysM).join(extraV, Seq("q_id", "doc_id"))
-            .select("m", "q_id", "doc_id", "vscore"))
-        fuseTailDepthSweep(vcandM, kcutM, alpha, k)
-      case None =>
-        val vparts1 = ivfVparts(embs, selectVecQueries, nprobe, centroids)
-          .filter(col("q_id").isNotNull && col("doc_id").isNotNull)
-          .repartition(col("q_id"), col("doc_id"))
-        val vcand = Checkpoints.transient_(vparts1)
-        val kM = Checkpoints.transient_(
-          kpartsM.join(vcand.select(col("q_id"), col("doc_id")),
-            Seq("q_id", "doc_id"), "semi"))
-        val vcandM = vcand.join(broadcast(msDf))
-          .select("m", "q_id", "doc_id", "vscore")
-        fuseTailDepthSweep(vcandM, kM, alpha, k)
-    }
+    fuse(ivfLeg(embs, queriesOf(selectVecQueries(embs)), nprobe, centroids),
+      kpartsM, topC, alpha, k, ms = Some(ms))
   }
 
-  /** [[fuseTail]] keyed by (m, q_id) — identical stats clamp, fused
-    * arithmetic and heap ordering, with the depth dimension carried
-    * through every stage. Bitwise [[fuseTail]] per m on equal inputs.
+  /** Doubly-pruned batch fusion over BOTH refreshable layouts: probed
+    * live cells of the refreshed IVF segments and the refreshed
+    * champion views with probe-time idf ([[IndexRefresh.batchScoredSel]])
+    * — a deployment that appends documents and vectors daily serves
+    * its hybrid workload with zero full rebuilds and zero score
+    * staleness. `asOf` pins centroids, live vectors and keyword views
+    * consistently; queries come from the caller's snapshot.
     */
-  private def fuseTailDepthSweep(vcandM: DataFrame, kM: DataFrame,
-                                 alpha: Double, k: Int): DataFrame = {
-    val vstats = vcandM.groupBy("m", "q_id")
-      .agg(min("vscore").as("vmin"), max("vscore").as("vmax"),
-        count(col("doc_id")).as("n_cand"))
-    val kagg = kM.groupBy("m", "q_id")
-      .agg(min("raw_score").as("krmin"), max("raw_score").as("krmax"),
-        count(col("doc_id")).as("n_matched"))
-    val qstats = vstats.join(kagg, Seq("m", "q_id"), "left")
-      .select(col("m"), col("q_id"), col("vmin"), col("vmax"),
-        when(col("n_matched").isNull, lit(0.0))
-          .when(col("n_matched") < col("n_cand"), least(col("krmin"), lit(0.0)))
-          .otherwise(col("krmin")).as("kmin"),
-        when(col("n_matched").isNull, lit(0.0))
-          .when(col("n_matched") < col("n_cand"), greatest(col("krmax"), lit(0.0)))
-          .otherwise(col("krmax")).as("kmax"))
-    val joined = vcandM.join(kM, Seq("m", "q_id", "doc_id"), "left")
-      .withColumn("kscore", coalesce(col("raw_score"), lit(0.0)))
-    val fscore = round(
-      lit(alpha) * (col("vscore") - col("vmin")) /
-        when(col("vmax") === col("vmin"), 1.0).otherwise(col("vmax") - col("vmin")) +
-        lit(1 - alpha) * (col("kscore") - col("kmin")) /
-          when(col("kmax") === col("kmin"), 1.0).otherwise(col("kmax") - col("kmin")),
-      4)
-    joined.join(broadcast(qstats), Seq("m", "q_id"))
-      .select(col("m"), col("q_id"), col("doc_id"), fscore.as("fs"))
-      .groupBy("m", "q_id")
-      .agg(graft.functions.VectorFunctions.topKByScore(col("fs"), col("doc_id"), k).as("top"))
-      .select(col("m"), col("q_id"), posexplode(col("top")).as(Seq("i", "t")))
-      .select(col("m"), col("q_id"), (col("i") + 1).as("rn"),
-        col("t.id").as("doc_id"), col("t.score").as("score"))
-      .orderBy("m", "q_id", "rn")
+  private[graft] def fusedBatchRefreshedPaths(s: SparkSession,
+                                              kwPath: String, vecPath: String,
+                                              currDocs: DataFrame,
+                                              currEmbs: DataFrame,
+                                              stride: Int = KeywordSearch.BatchStride,
+                                              nTerms: Int = KeywordSearch.BatchTerms,
+                                              nprobe: Int = IvfIndex.NProbe,
+                                              alpha: Double = Alpha,
+                                              k: Int = BatchK,
+                                              asOf: Option[Int] = None,
+                                              topC: Option[Int] = Some(topCFor(BatchK))): DataFrame = {
+    val queries = queriesOf(currEmbs.filter(col("vec_id") % stride === 0))
+    val kparts = IndexRefresh.batchScoredSel(s, kwPath, currDocs,
+      _.filter(col("doc_id") % stride === 0), nTerms, asOf)
+    fuse(liveLeg(s, vecPath, queries, nprobe, asOf), kparts, topC, alpha, k)
   }
 
-  /** Driver form: the champion-depth sweep over the standing artifacts
-    * (postings + champions + IVF centroids), the
-    * [[batchSearchChampion]] convention — so the m = max slice is the
-    * doubly-pruned serving ranking itself.
+  /** DOUBLY-COMPRESSED batch fusion — the 100 TB serving form: the ADC
+    * leg over the refreshed quantized layout's STANDING codes (IVF-probed
+    * cells via DPP, per-query distance tables broadcast, no
+    * full-precision vector touched past the query rows) fused with the
+    * refreshed champion probe. Every score input is a standing artifact,
+    * so a query's fused page is identical whichever micro-batch it
+    * arrives in (batch-split invariance). Oracle: literal-codebook
+    * encode + ADC chain composed with the full-rebuild champion chain
+    * and the capped fusion tail, one statement.
     */
-  def batchSearchChampionDepthSweep(s: SparkSession, dir: String,
-                                    ms: Seq[Int]): DataFrame =
-    fusedBatchChampionDepthSweepSel(Tables.documents(s, dir), Tables.embeddings(s, dir),
-      KeywordSearch.cachedBatchPostings(s, dir),
-      ChampionIndex.cachedChampions(s, dir),
-      _.filter(col("vec_id") % KeywordSearch.BatchStride === 0),
-      _.filter(col("doc_id") % KeywordSearch.BatchStride === 0),
-      ms,
-      centroids = Some(IvfIndex.cachedCentroids(s, dir)),
-      topC = servingTopC(s, dir),
-      rankedChamps = Some(ChampionIndex.cachedChampionsRanked(s, dir)))
-
-  /** The ONE copy of the per-query normalize + fuse + rank tail, over an
-    * arbitrary candidate frame `vparts(q_id, doc_id, vscore)` and sparse
-    * keyword frame `kparts(q_id, doc_id, raw_score)` (⊆ vparts domain).
-    *
-    * Plan shape: `vparts` goes behind ONE explicit q_id exchange that
-    * every consumer reuses (stats aggregate, fusion join, and — on the
-    * IVF path — the candidate semi-join), so the dense cosine fan-out is
-    * computed and shuffled exactly once; q_id partitioning satisfies the
-    * (q_id, doc_id) join clustering and the final per-query heap, so
-    * nothing downstream re-exchanges. Stats aggregates reference the
-    * full (q_id, doc_id, score) column set on both legs — diverging
-    * column pruning would otherwise split the subtrees and defeat
-    * ReusedExchange (the span-profile lesson).
-    *
-    * Normalization: vector min/max over the candidate set; keyword
-    * min/max from the SPARSE matched rows, range clamped to include the
-    * implicit 0 whenever a candidate matched no query term
-    * (n_matched < n_cand), all-zeros when nothing matched.
-    */
-  private def fuseTail(vparts0: DataFrame, kparts0: DataFrame,
-                       alpha: Double, k: Int,
-                       restrictKwToCandidates: Boolean = false,
-                       materializeCandidates: Boolean = false): DataFrame = {
-    val (joined, qstats) =
-      fusePrep(vparts0, kparts0, restrictKwToCandidates, materializeCandidates)
-    val fscore = round(
-      lit(alpha) * (col("vscore") - col("vmin")) /
-        when(col("vmax") === col("vmin"), 1.0).otherwise(col("vmax") - col("vmin")) +
-        lit(1 - alpha) * (col("kscore") - col("kmin")) /
-          when(col("kmax") === col("kmin"), 1.0).otherwise(col("kmax") - col("kmin")),
-      4)
-    joined.join(broadcast(qstats), Seq("q_id"))
-      .select(col("q_id"), col("doc_id"), fscore.as("fs"))
-      .groupBy("q_id")
-      .agg(graft.functions.VectorFunctions.topKByScore(col("fs"), col("doc_id"), k).as("top"))
-      .select(col("q_id"), posexplode(col("top")).as(Seq("i", "t")))
-      .select(col("q_id"), (col("i") + 1).as("rn"), col("t.id").as("doc_id"),
-        col("t.score").as("score"))
-      .orderBy("q_id", "rn")
+  private[graft] def fusedBatchQuantizedSel(s: SparkSession,
+                                            kwPath: String, vecPath: String,
+                                            currDocs: DataFrame,
+                                            selectVecQueries: DataFrame => DataFrame = everyStride("vec_id"),
+                                            selectDocQueries: DataFrame => DataFrame = everyStride("doc_id"),
+                                            nTerms: Int = KeywordSearch.BatchTerms,
+                                            nprobe: Int = IvfIndex.NProbe,
+                                            alpha: Double = Alpha,
+                                            k: Int = BatchK,
+                                            asOf: Option[Int] = None,
+                                            topC: Option[Int] = Some(topCFor(BatchK))): DataFrame = {
+    val queries = queriesOf(
+      selectVecQueries(VectorRefresh.liveVectors(s, vecPath, asOf = asOf)))
+    val kparts = IndexRefresh.batchScoredSel(s, kwPath, currDocs,
+      selectDocQueries, nTerms, asOf)
+    fuse(adcLeg(s, vecPath, queries, nprobe, asOf), kparts, topC, alpha, k)
   }
 
-  /** [[fuseTail]]'s alpha-SWEEP twin: identical prep (ONE dense fan-out
-    * + stats), then ONE pass over the candidate stream carrying
-    * |alphas| bounded heaps side by side — each alpha's fused score is
-    * its own aggregate column in a single `groupBy(q_id)`, so the
-    * candidate frame is never replicated ×|alphas| (the r8 form
-    * exploded the alpha dimension onto the fused frame before the heap;
-    * at 100× the sweep's candidate volume already grows as
-    * corpus × queries, and the ×|alphas| row replication multiplied the
-    * whole map-side stream plus every per-row aggregate-hash probe).
-    * Per-alpha arithmetic uses literal `alpha` / `1−alpha` factors —
-    * bit-identical to [[fuseTail]]'s single-alpha form and to the
-    * column-alpha oracle (the swept alphas are exact doubles). The
-    * heaps unpivot to the same (alpha, q_id, rn, doc_id, score) output.
+  // --- single-request entries ---
+
+  /** One request's fusion: the leg's candidates (optionally restricted
+    * to `allowedDocs` — the filter-during-the-walk hook: one semi-join
+    * before the stats restricts both legs, because the keyword leg is
+    * candidate-restricted) are bounded by nprobe cells, so they are
+    * materialized; `qId` names the output rows and — when it matches a
+    * corpus vec_id — excludes the seed object itself (embedded requests
+    * pass -1). Output `(rn, doc_id, score)`.
     */
-  private def fuseTailSweep(vparts0: DataFrame, kparts0: DataFrame,
-                            alphas: Seq[Double], k: Int,
-                            restrictKwToCandidates: Boolean = false,
-                            materializeCandidates: Boolean = false): DataFrame = {
-    val (joined, qstats) = fusePrep(vparts0, kparts0,
-      restrictKwToCandidates, materializeCandidates)
-    def fscoreFor(a: Double) = round(
-      lit(a) * (col("vscore") - col("vmin")) /
-        when(col("vmax") === col("vmin"), 1.0).otherwise(col("vmax") - col("vmin")) +
-        lit(1.0 - a) * (col("kscore") - col("kmin")) /
-          when(col("kmax") === col("kmin"), 1.0).otherwise(col("kmax") - col("kmin")),
-      4)
-    val heaps = alphas.zipWithIndex.map { case (a, i) =>
-      graft.functions.VectorFunctions
-        .topKByScore(fscoreFor(a), col("doc_id"), k).as(s"top_$i")
-    }
-    joined.join(broadcast(qstats), Seq("q_id"))
-      .groupBy("q_id")
-      .agg(heaps.head, heaps.tail: _*)
-      .select(col("q_id"), explode(array(alphas.zipWithIndex.map { case (a, i) =>
-        struct(lit(a).as("alpha"), col(s"top_$i").as("top")) }: _*)).as("slice"))
-      .select(col("q_id"), col("slice.alpha").as("alpha"),
-        posexplode(col("slice.top")).as(Seq("i", "t")))
-      .select(col("alpha"), col("q_id"), (col("i") + 1).as("rn"),
-        col("t.id").as("doc_id"), col("t.score").as("score"))
-      .orderBy("alpha", "q_id", "rn")
+  private def fuseRequest(leg: VecLeg, kparts: DataFrame, qId: Long,
+                          alpha: Double, k: Int,
+                          allowedDocs: Option[DataFrame] = None): DataFrame = {
+    // no broadcast hint: a selective filter broadcasts via AQE, a weak
+    // one must not be forced driver-side at corpus scale
+    val vparts = allowedDocs.fold(leg.vparts)(a =>
+      leg.vparts.join(a.select(col("doc_id")), Seq("doc_id"), "semi"))
+    fuse(leg.copy(vparts = vparts, materialize = true),
+      kparts.withColumn("q_id", lit(qId)), None, alpha, k)
+      .select(col("rn"), col("doc_id"), col("score"))
   }
 
-  /** The shared normalize-and-join prefix of both fusion tails:
-    * candidate frame behind its one exchange, sparse keyword
-    * restriction, per-query stats with the implicit-zero clamp, and the
-    * LEFT-joined (q_id, doc_id, vscore, kscore) frame. Capped fusion
-    * paths pre-cut each leg in [[cappedChampionParts]] and arrive here
-    * with the ≤2C-per-query union as `vparts0` — the stats/clamp/join
-    * semantics are identical either way because the keyword frame is a
-    * subset of the candidate keys in both shapes.
+  /** SINGLE-request doubly-pruned hybrid — [[fusedWithQuery]]'s
+    * at-scale twin and the facade's pruned routing target
+    * ([[graft.GraftClient]] `indexMode = "pruned"`): the request's
+    * nprobe IVF cells off the standing centroids, the query terms'
+    * champion impacts. Per-request cost nprobe·|cell| + |terms|·M
+    * regardless of corpus size.
     */
-  private def fusePrep(vparts0: DataFrame, kparts0: DataFrame,
-                       restrictKwToCandidates: Boolean,
-                       materializeCandidates: Boolean): (DataFrame, DataFrame) = {
-    // (q_id, doc_id) — NOT q_id alone: the fan-out holds ~|corpus| rows
-    // per query, so single-key partitioning would put a whole corpus
-    // copy on one task. The explicit not-null filters keep every
-    // consumer's subtree canonically identical (the join branch would
-    // otherwise push IsNotNull below the exchange asymmetrically and
-    // defeat ReusedExchange — the recorded lm-bigram failure mode).
-    val vparts1 = vparts0
-      .filter(col("q_id").isNotNull && col("doc_id").isNotNull)
-      .repartition(col("q_id"), col("doc_id"))
-    // On the PRUNED (IVF) path the candidate frame is bounded by
-    // construction (Q · nprobe/nlist of the corpus), so it is
-    // materialized ONCE (localCheckpoint preserves the (q_id, doc_id)
-    // partitioning) and every fusion consumer — stats aggregate, fusion
-    // join, keyword restriction — reads the materialized frame instead
-    // of re-deriving the fan-out subtree. Eager vs lazy was A/B-measured
-    // (r9): the two eager job barriers cost nothing detectable at
-    // micro-batch scale (4.02 vs 4.01 s medians, same JVM), so the
-    // eager form stays — it guarantees exactly-once computation of the
-    // fan-out where the lazy persist races concurrent consumers. The
-    // brute-force path keeps the declarative shared exchange
-    // (ReusedExchange), because its fan-out is corpus×Q and a serving
-    // system would not persist that.
-    val vparts =
-      if (materializeCandidates) Checkpoints.transient_(vparts1) else vparts1
-    // candidate restriction (IVF path) probes the POST-exchange frame so
-    // the semi-join is a third ReusedExchange consumer, not a recompute
-    // of the pruned fan-out
-    val kparts1 =
-      if (restrictKwToCandidates)
-        kparts0.join(vparts.select(col("q_id"), col("doc_id")),
-          Seq("q_id", "doc_id"), "semi")
-      else kparts0
-    val kparts2 =
-      if (materializeCandidates) Checkpoints.transient_(kparts1) else kparts1
-    // the per-leg top-C serving cut does NOT live here: it must consume
-    // the fan-out in ONE streaming map-side pass BEFORE any exchange or
-    // checkpoint of the full frame (see [[cappedChampionParts]]) — an
-    // in-prep cut over the materialized frame re-created the
-    // corpus-fraction-checkpoint OOM at 100×
-    val (vcand, kparts) = (vparts, kparts2)
-    val vstats = vcand.groupBy("q_id")
-      .agg(min("vscore").as("vmin"), max("vscore").as("vmax"),
-        count(col("doc_id")).as("n_cand"))
-    val kagg = kparts.groupBy("q_id")
-      .agg(min("raw_score").as("krmin"), max("raw_score").as("krmax"),
-        count(col("doc_id")).as("n_matched"))
-    val qstats = vstats.join(kagg, Seq("q_id"), "left")
-      .select(col("q_id"), col("vmin"), col("vmax"),
-        when(col("n_matched").isNull, lit(0.0))
-          .when(col("n_matched") < col("n_cand"), least(col("krmin"), lit(0.0)))
-          .otherwise(col("krmin")).as("kmin"),
-        when(col("n_matched").isNull, lit(0.0))
-          .when(col("n_matched") < col("n_cand"), greatest(col("krmax"), lit(0.0)))
-          .otherwise(col("krmax")).as("kmax"))
-    val joined = vcand.join(kparts, Seq("q_id", "doc_id"), "left")
-      .withColumn("kscore", coalesce(col("raw_score"), lit(0.0)))
-    (joined, qstats)
-  }
+  private[graft] def fusedPrunedWithQuery(embs: DataFrame, champs: DataFrame,
+                                          terms: Seq[String], q: DataFrame,
+                                          qId: Long,
+                                          centroids: Option[DataFrame] = None,
+                                          alpha: Double = Alpha, k: Int = TopK,
+                                          nprobe: Int = IvfIndex.NProbe): DataFrame =
+    fuseRequest(
+      ivfLeg(embs, q.select(lit(qId).as("q_id"), col("q_emb")), nprobe, centroids),
+      champs.filter(col("term").isin(terms.distinct.sorted: _*))
+        .groupBy("doc_id")
+        .agg(KeywordSearch.fixedPointSum6(col("imp")).as("raw_score")),
+      qId, alpha, k)
 
-  /** The shared CTE chain of [[fusedBatchSql]] and
-    * [[fusedBatchSweepSql]] — one copy of the normalize-and-join prefix
-    * (the SQL twin of [[fusePrep]] over [[batchParts]]).
+  /** Single-request fusion over BOTH refreshable layouts — the facade's
+    * refreshed route: probed live cells, refreshed champion views with
+    * probe-time idf ([[IndexRefresh.requestScored]]). `asOf` pins both;
+    * `allowedDocs` carries doc_ids from the SAME corpus state the pin
+    * serves (the caller's as-of universe).
     */
-  private def fusedBatchSqlCtes(stride: Int, nTerms: Int): String =
-    s"""${KeywordSearch.batchKwRawSqlCtes(stride, nTerms)},
-       |queries AS (
-       |  SELECT vec_id AS q_id, embedding AS q_emb
-       |  FROM embeddings WHERE vec_id % $stride = 0),
-       |vparts AS (
-       |  SELECT q_id, vec_id AS doc_id,
-       |    ${VectorSearch.cosineSql("embedding", "q_emb")} AS vscore
-       |  FROM embeddings JOIN queries ON vec_id <> q_id),
-       |joined AS (
-       |  SELECT vparts.q_id, vparts.doc_id, vscore,
-       |    coalesce(raw_score, 0.0) AS kscore
-       |  FROM vparts LEFT JOIN scored
-       |    ON vparts.q_id = scored.q_id AND vparts.doc_id = scored.doc_id),
-       |qstats AS (
-       |  SELECT q_id, min(vscore) AS vmin, max(vscore) AS vmax,
-       |    min(kscore) AS kmin, max(kscore) AS kmax
-       |  FROM joined GROUP BY 1)""".stripMargin
+  private[graft] def fusedRefreshedWithQuery(s: SparkSession,
+                                             kwPath: String, vecPath: String,
+                                             terms: Seq[String], q: DataFrame,
+                                             qId: Long,
+                                             alpha: Double = Alpha, k: Int = TopK,
+                                             nprobe: Int = IvfIndex.NProbe,
+                                             asOf: Option[Int] = None,
+                                             allowedDocs: Option[DataFrame] = None): DataFrame =
+    fuseRequest(
+      liveLeg(s, vecPath, q.select(lit(qId).as("q_id"), col("q_emb")), nprobe, asOf),
+      IndexRefresh.requestScored(s, kwPath, terms.distinct.sorted, asOf),
+      qId, alpha, k, allowedDocs)
 
-  def fusedBatchSql(stride: Int = KeywordSearch.BatchStride,
-                    nTerms: Int = KeywordSearch.BatchTerms,
-                    alpha: Double = Alpha, k: Int = BatchK): String =
-    s"""WITH ${fusedBatchSqlCtes(stride, nTerms)},
-       |fusedt AS (
-       |  SELECT q_id, doc_id,
-       |    round($alpha * (vscore - vmin) /
-       |            (CASE WHEN vmax = vmin THEN 1.0 ELSE vmax - vmin END)
-       |        + ${1 - alpha} * (kscore - kmin) /
-       |            (CASE WHEN kmax = kmin THEN 1.0 ELSE kmax - kmin END), 4) AS score
-       |  FROM joined JOIN qstats USING (q_id)),
-       |ranked AS (
-       |  SELECT q_id, doc_id, score,
-       |    row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rn
-       |  FROM fusedt
-       |  QUALIFY rn <= $k)
-       |SELECT q_id, rn, doc_id, score
-       |FROM ranked
-       |ORDER BY q_id, rn""".stripMargin
+  /** [[fusedRefreshedWithQuery]] with the ADC leg over the quantized
+    * layout's standing codes — the facade's quantized route.
+    */
+  private[graft] def fusedQuantizedWithQuery(s: SparkSession,
+                                             kwPath: String, vecPath: String,
+                                             terms: Seq[String], q: DataFrame,
+                                             qId: Long,
+                                             alpha: Double = Alpha, k: Int = TopK,
+                                             nprobe: Int = IvfIndex.NProbe,
+                                             asOf: Option[Int] = None,
+                                             allowedDocs: Option[DataFrame] = None): DataFrame =
+    fuseRequest(
+      adcLeg(s, vecPath, q.select(lit(qId).as("q_id"), col("q_emb")), nprobe, asOf),
+      IndexRefresh.requestScored(s, kwPath, terms.distinct.sorted, asOf),
+      qId, alpha, k, allowedDocs)
+
+  // --- SQL oracles: prefix CTEs ending in `joined`, one fusion tail ---
 
   /** Each alpha as a correctly-rounded DOUBLE literal: VARCHAR→DOUBLE
     * parse (IEEE round-to-nearest of the shortest round-trip repr) is
@@ -1166,127 +834,82 @@ object HybridSearch {
   private[operators] def alphaListSql(alphas: Seq[Double]): String =
     alphas.map(a => s"CAST('$a' AS DOUBLE)").mkString(", ")
 
-  /** SQL replay of [[fusedBatchSweepSel]]: same prefix CTEs, the alpha
-    * list cross-joined into the fuse expression, ranking per
-    * (alpha, q_id).
+  /** SQL twin of [[fuse]]'s stats and tail over a `joined(q_id, doc_id,
+    * vscore, kscore)` CTE. The stats derive from the coalesced joined
+    * frame, which is equivalent to the engine's sparse-stats + clamp
+    * form. Ranks per q_id (per (alpha, q_id) given `alphas`, the alpha
+    * list cross-joined into the fuse expression), or — `page` — one
+    * request's top-k page `(rn, doc_id, score)`.
     */
-  def fusedBatchSweepSql(alphas: Seq[Double],
-                         stride: Int = KeywordSearch.BatchStride,
-                         nTerms: Int = KeywordSearch.BatchTerms,
-                         k: Int = BatchK): String =
-    s"""WITH ${fusedBatchSqlCtes(stride, nTerms)},
-       |alphas AS (SELECT unnest([${alphaListSql(alphas)}]) AS alpha),
-       |fusedt AS (
-       |  SELECT alpha, q_id, doc_id,
-       |    round(alpha * (vscore - vmin) /
-       |            (CASE WHEN vmax = vmin THEN 1.0 ELSE vmax - vmin END)
-       |        + (1.0 - alpha) * (kscore - kmin) /
-       |            (CASE WHEN kmax = kmin THEN 1.0 ELSE kmax - kmin END), 4) AS score
-       |  FROM joined JOIN qstats USING (q_id), alphas),
-       |ranked AS (
-       |  SELECT alpha, q_id, doc_id, score,
-       |    row_number() OVER (PARTITION BY alpha, q_id ORDER BY score DESC, doc_id) AS rn
-       |  FROM fusedt
-       |  QUALIFY rn <= $k)
-       |SELECT alpha, q_id, rn, doc_id, score
-       |FROM ranked
-       |ORDER BY alpha, q_id, rn""".stripMargin
-
-  /** Driver query: the SERVING form — keyword signal from the standing
-    * postings artifact (identical results to the inline [[fusedBatch]];
-    * spec-pinned), vector signal the dense fan-out (the brute-force
-    * baseline by design — [[fusedBatchIvf]] is the pruned form).
-    */
-  def batchSearch(s: SparkSession, dir: String): DataFrame =
-    fusedBatchSel(Tables.documents(s, dir), Tables.embeddings(s, dir),
-      _.filter(col("vec_id") % KeywordSearch.BatchStride === 0),
-      _.filter(col("doc_id") % KeywordSearch.BatchStride === 0),
-      kwIndex = Some(KeywordSearch.cachedBatchPostings(s, dir)),
-      // r15: df dictionary + corpus stats from the standing artifacts
-      // too (the batchSearchIvf convention — value-identical summaries
-      // of the same postings; guide §2.4: the per-run postings
-      // re-aggregation was two corpus-sized exchanges per execution)
-      kwDict = Some(KeywordSearch.cachedTermDict(s, dir)),
-      kwStats = Some(KeywordSearch.cachedCorpusStats(s, dir)))
-
-  val batchSearchOracle: String = fusedBatchSql()
-
-  /** Oracle for the IVF-pruned batch fusion: the keyword CTE chain and
-    * the per-query probed-cell CTEs compose; the candidate domain is the
-    * probed cells' vectors and — as in [[fusedBatchSql]] — the
-    * normalization stats derive from the coalesced joined frame, which
-    * is equivalent to the engine's sparse-stats + clamp formulation.
-    */
-  def fusedBatchIvfSql(stride: Int = KeywordSearch.BatchStride,
-                       nTerms: Int = KeywordSearch.BatchTerms,
-                       nprobe: Int = IvfIndex.NProbe,
-                       alpha: Double = Alpha, k: Int = BatchK): String =
-    s"""WITH ${KeywordSearch.batchKwRawSqlCtes(stride, nTerms)},
-       |${IvfIndex.batchProbedSqlCtes(s"vec_id % $stride = 0", nprobe)},
-       |vparts AS (
-       |  SELECT p.q_id, e.vec_id AS doc_id,
-       |    ${VectorSearch.cosineSql("e.embedding", "q.q_emb")} AS vscore
-       |  FROM embeddings e
-       |  JOIN probed p ON e.label = p.cell
-       |  JOIN queries q ON q.q_id = p.q_id
-       |  WHERE e.vec_id <> p.q_id),
-       |joined AS (
-       |  SELECT vparts.q_id, vparts.doc_id, vscore,
-       |    coalesce(raw_score, 0.0) AS kscore
-       |  FROM vparts LEFT JOIN scored
-       |    ON vparts.q_id = scored.q_id AND vparts.doc_id = scored.doc_id),
-       |qstats AS (
+  private def fuseTailSql(alpha: Double, k: Int,
+                          alphas: Option[Seq[Double]] = None,
+                          page: Boolean = false): String = {
+    val (sweepCte, by, wv, wk, from) = alphas.fold(
+      ("", "", s"$alpha", s"${1 - alpha}", ""))(as =>
+      (s"alphas AS (SELECT unnest([${alphaListSql(as)}]) AS alpha),\n",
+        "alpha, ", "alpha", "(1.0 - alpha)", ", alphas"))
+    val ranked =
+      if (page)
+        s"""
+           |SELECT row_number() OVER (ORDER BY score DESC, doc_id) AS rn,
+           |  doc_id, score
+           |FROM fusedt
+           |ORDER BY score DESC, doc_id
+           |LIMIT $k""".stripMargin
+      else
+        s""",
+           |ranked AS (
+           |  SELECT ${by}q_id, doc_id, score,
+           |    row_number() OVER (PARTITION BY ${by}q_id ORDER BY score DESC, doc_id) AS rn
+           |  FROM fusedt
+           |  QUALIFY rn <= $k)
+           |SELECT ${by}q_id, rn, doc_id, score
+           |FROM ranked
+           |ORDER BY ${by}q_id, rn""".stripMargin
+    s"""qstats AS (
        |  SELECT q_id, min(vscore) AS vmin, max(vscore) AS vmax,
        |    min(kscore) AS kmin, max(kscore) AS kmax
        |  FROM joined GROUP BY 1),
-       |fusedt AS (
-       |  SELECT q_id, doc_id,
-       |    round($alpha * (vscore - vmin) /
+       |${sweepCte}fusedt AS (
+       |  SELECT ${by}q_id, doc_id,
+       |    round($wv * (vscore - vmin) /
        |            (CASE WHEN vmax = vmin THEN 1.0 ELSE vmax - vmin END)
-       |        + ${1 - alpha} * (kscore - kmin) /
+       |        + $wk * (kscore - kmin) /
        |            (CASE WHEN kmax = kmin THEN 1.0 ELSE kmax - kmin END), 4) AS score
-       |  FROM joined JOIN qstats USING (q_id)),
-       |ranked AS (
-       |  SELECT q_id, doc_id, score,
-       |    row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rn
-       |  FROM fusedt
-       |  QUALIFY rn <= $k)
-       |SELECT q_id, rn, doc_id, score
-       |FROM ranked
-       |ORDER BY q_id, rn""".stripMargin
+       |  FROM joined JOIN qstats USING (q_id)$from)""".stripMargin + ranked
+  }
 
-  def batchSearchIvf(s: SparkSession, dir: String): DataFrame =
-    fusedBatchIvfSel(Tables.documents(s, dir), Tables.embeddings(s, dir),
-      _.filter(col("vec_id") % KeywordSearch.BatchStride === 0),
-      _.filter(col("doc_id") % KeywordSearch.BatchStride === 0),
-      centroids = Some(IvfIndex.cachedCentroids(s, dir)),
-      kwIndex = Some(KeywordSearch.cachedBatchPostings(s, dir)),
-      kwDict = Some(KeywordSearch.cachedTermDict(s, dir)),
-      kwStats = Some(KeywordSearch.cachedCorpusStats(s, dir)))
-
-  val batchSearchIvfOracle: String = fusedBatchIvfSql()
-
-  /** Driver query: the doubly-pruned serving form over the standing
-    * artifacts (IVF centroids + batch postings + champion lists).
+  /** The probed-cell `vparts` CTE over `$embs` (with the `probed` and
+    * `queries` CTEs of [[IvfIndex.batchProbedSqlCtes]]).
     */
-  def batchSearchChampion(s: SparkSession, dir: String): DataFrame =
-    fusedBatchChampionSel(Tables.documents(s, dir), Tables.embeddings(s, dir),
-      KeywordSearch.cachedBatchPostings(s, dir),
-      ChampionIndex.cachedChampions(s, dir),
-      _.filter(col("vec_id") % KeywordSearch.BatchStride === 0),
-      _.filter(col("doc_id") % KeywordSearch.BatchStride === 0),
-      centroids = Some(IvfIndex.cachedCentroids(s, dir)),
-      topC = servingTopC(s, dir))
+  private def probedVpartsSqlCte(embs: String = "embeddings"): String =
+    s"""vparts AS (
+       |  SELECT p.q_id, e.vec_id AS doc_id,
+       |    ${VectorSearch.cosineSql("e.embedding", "q.q_emb")} AS vscore
+       |  FROM $embs e
+       |  JOIN probed p ON e.label = p.cell
+       |  JOIN queries q ON q.q_id = p.q_id
+       |  WHERE e.vec_id <> p.q_id)""".stripMargin
 
-  /** SQL twin of [[fusePrep]]'s top-C cut: given a `vparts(q_id,
-    * doc_id, vscore)` CTE and a keyword CTE `$kw(q_id, doc_id,
-    * raw_score)`, emits the chain from the per-leg rank cuts through
-    * the capped `joined` frame — the vector leg's top-C by (vscore
-    * desc, doc_id), the keyword leg's top-C by (raw_score desc, doc_id)
-    * over the candidate-restricted matches, their union as the fusion
-    * domain. Uncapped oracles keep the plain LEFT-join `joined`.
+  /** The uncapped `joined` CTE: every candidate, LEFT-joined to the
+    * keyword CTE `$kw(q_id, doc_id, raw_score)`.
     */
-  private def cappedJoinedSqlCtes(topC: Int, kw: String = "scored"): String =
+  private def joinedSqlCte(kw: String = "scored"): String =
+    s"""joined AS (
+       |  SELECT vparts.q_id, vparts.doc_id, vscore,
+       |    coalesce(raw_score, 0.0) AS kscore
+       |  FROM vparts LEFT JOIN $kw
+       |    ON vparts.q_id = $kw.q_id AND vparts.doc_id = $kw.doc_id)""".stripMargin
+
+  /** SQL twin of [[cappedCut]]: given a `vparts(q_id, doc_id, vscore)`
+    * CTE and a keyword CTE `scored(q_id, doc_id, raw_score)`, emits the
+    * chain from the per-leg rank cuts through the capped `joined` frame
+    * — the vector leg's top-C by (vscore desc, doc_id), the keyword
+    * leg's top-C by (raw_score desc, doc_id) over the
+    * candidate-restricted matches, their union as the fusion domain.
+    * The cut depth replays [[servingTopC]] ([[effectiveTopCSql]]).
+    */
+  private def cappedJoinedSqlCtes(topC: Int): String =
     s"""vtop AS (
        |  SELECT q_id, doc_id, vscore FROM (
        |    SELECT q_id, doc_id, vscore,
@@ -1297,7 +920,7 @@ object HybridSearch {
        |  SELECT q_id, doc_id, raw_score FROM (
        |    SELECT s.q_id, s.doc_id, s.raw_score,
        |      row_number() OVER (PARTITION BY s.q_id ORDER BY s.raw_score DESC, s.doc_id) AS krn
-       |    FROM $kw s
+       |    FROM scored s
        |    WHERE EXISTS (SELECT 1 FROM vparts v
        |                  WHERE v.q_id = s.q_id AND v.doc_id = s.doc_id)) kr
        |  WHERE krn <= ${effectiveTopCSql(topC)}),
@@ -1314,276 +937,104 @@ object HybridSearch {
        |  FROM cand LEFT JOIN ktop t
        |    ON cand.q_id = t.q_id AND cand.doc_id = t.doc_id)""".stripMargin
 
-  /** Oracle for the doubly-pruned fusion: the champion keyword CTE
-    * chain replaces the exact one inside the [[fusedBatchIvfSql]]
-    * skeleton — same probed-cell candidate domain, with the per-leg
-    * top-C cut ([[cappedJoinedSqlCtes]]) ahead of the coalesced
-    * joined-frame normalization, replaying the engine's capped
-    * [[fusePrep]].
+  /** Brute-force prefix of [[fusedBatchSql]] / [[fusedBatchSweepSql]]. */
+  private def bruteSqlCtes(stride: Int, nTerms: Int): String =
+    s"""${KeywordSearch.batchKwRawSqlCtes(stride, nTerms)},
+       |queries AS (
+       |  SELECT vec_id AS q_id, embedding AS q_emb
+       |  FROM embeddings WHERE vec_id % $stride = 0),
+       |vparts AS (
+       |  SELECT q_id, vec_id AS doc_id,
+       |    ${VectorSearch.cosineSql("embedding", "q_emb")} AS vscore
+       |  FROM embeddings JOIN queries ON vec_id <> q_id),
+       |${joinedSqlCte()}""".stripMargin
+
+  def fusedBatchSql(stride: Int = KeywordSearch.BatchStride,
+                    nTerms: Int = KeywordSearch.BatchTerms,
+                    alpha: Double = Alpha, k: Int = BatchK): String =
+    s"WITH ${bruteSqlCtes(stride, nTerms)},\n${fuseTailSql(alpha, k)}"
+
+  def fusedBatchSweepSql(alphas: Seq[Double],
+                         stride: Int = KeywordSearch.BatchStride,
+                         nTerms: Int = KeywordSearch.BatchTerms,
+                         k: Int = BatchK): String =
+    s"WITH ${bruteSqlCtes(stride, nTerms)},\n${fuseTailSql(Alpha, k, Some(alphas))}"
+
+  /** Oracle for the IVF-pruned batch fusion: the keyword CTE chain and
+    * the per-query probed-cell CTEs compose; the candidate domain is the
+    * probed cells' vectors.
     */
+  def fusedBatchIvfSql(stride: Int = KeywordSearch.BatchStride,
+                       nTerms: Int = KeywordSearch.BatchTerms,
+                       nprobe: Int = IvfIndex.NProbe,
+                       alpha: Double = Alpha, k: Int = BatchK): String =
+    s"""WITH ${KeywordSearch.batchKwRawSqlCtes(stride, nTerms)},
+       |${IvfIndex.batchProbedSqlCtes(s"vec_id % $stride = 0", nprobe)},
+       |${probedVpartsSqlCte()},
+       |${joinedSqlCte()},
+       |${fuseTailSql(alpha, k)}""".stripMargin
+
+  /** Champion prefix of [[fusedBatchChampionSql]] /
+    * [[fusedBatchChampionSweepSql]]: the champion keyword CTE chain,
+    * the probed-cell candidates, the per-leg top-C cut.
+    */
+  private def championSqlCtes(stride: Int, nTerms: Int, nprobe: Int,
+                              m: Int, k: Int): String =
+    s"""${ChampionIndex.championScoredSqlCtes(stride, nTerms, m)},
+       |${IvfIndex.batchProbedSqlCtes(s"vec_id % $stride = 0", nprobe)},
+       |${probedVpartsSqlCte()},
+       |${cappedJoinedSqlCtes(topCFor(k))}""".stripMargin
+
   def fusedBatchChampionSql(stride: Int = KeywordSearch.BatchStride,
                             nTerms: Int = KeywordSearch.BatchTerms,
                             nprobe: Int = IvfIndex.NProbe,
                             m: Int = ChampionIndex.M,
                             alpha: Double = Alpha, k: Int = BatchK): String =
-    s"""WITH ${ChampionIndex.championScoredSqlCtes(stride, nTerms, m)},
-       |${IvfIndex.batchProbedSqlCtes(s"vec_id % $stride = 0", nprobe)},
-       |vparts AS (
-       |  SELECT p.q_id, e.vec_id AS doc_id,
-       |    ${VectorSearch.cosineSql("e.embedding", "q.q_emb")} AS vscore
-       |  FROM embeddings e
-       |  JOIN probed p ON e.label = p.cell
-       |  JOIN queries q ON q.q_id = p.q_id
-       |  WHERE e.vec_id <> p.q_id),
-       |${cappedJoinedSqlCtes(topCFor(k))},
-       |qstats AS (
-       |  SELECT q_id, min(vscore) AS vmin, max(vscore) AS vmax,
-       |    min(kscore) AS kmin, max(kscore) AS kmax
-       |  FROM joined GROUP BY 1),
-       |fusedt AS (
-       |  SELECT q_id, doc_id,
-       |    round($alpha * (vscore - vmin) /
-       |            (CASE WHEN vmax = vmin THEN 1.0 ELSE vmax - vmin END)
-       |        + ${1 - alpha} * (kscore - kmin) /
-       |            (CASE WHEN kmax = kmin THEN 1.0 ELSE kmax - kmin END), 4) AS score
-       |  FROM joined JOIN qstats USING (q_id)),
-       |ranked AS (
-       |  SELECT q_id, doc_id, score,
-       |    row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rn
-       |  FROM fusedt
-       |  QUALIFY rn <= $k)
-       |SELECT q_id, rn, doc_id, score
-       |FROM ranked
-       |ORDER BY q_id, rn""".stripMargin
+    s"WITH ${championSqlCtes(stride, nTerms, nprobe, m, k)},\n${fuseTailSql(alpha, k)}"
 
-  val batchSearchChampionOracle: String = fusedBatchChampionSql()
+  def fusedBatchChampionSweepSql(alphas: Seq[Double],
+                                 stride: Int = KeywordSearch.BatchStride,
+                                 nTerms: Int = KeywordSearch.BatchTerms,
+                                 nprobe: Int = IvfIndex.NProbe,
+                                 m: Int = ChampionIndex.M,
+                                 k: Int = BatchK): String =
+    s"WITH ${championSqlCtes(stride, nTerms, nprobe, m, k)},\n" +
+      fuseTailSql(Alpha, k, Some(alphas))
 
-  /** Doubly-pruned batch fusion over BOTH refreshable layouts — the
-    * hybrid family completed on the refresh path: the vector leg probes
-    * the refreshed IVF segments' merged centroids + live cells
-    * ([[VectorRefresh.batchVparts]]), the keyword leg probes the
-    * refreshed champion views with probe-time idf
-    * ([[IndexRefresh.batchScoredSel]]), and the one shared fusion tail
-    * normalizes and ranks — so a deployment that appends documents and
-    * vectors daily serves its full hybrid workload with zero full
-    * rebuilds and zero score staleness. Fusion semantics are
-    * [[fusedBatchChampionSel]]'s (candidate domain = probed live cells,
-    * keyword restricted to candidates, sparse stats + implicit-zero
-    * clamp).
+  /** Oracle for [[searchPruned]]: champion index + probed cells
+    * re-derived from the raw corpus, the one-query fusion replayed as a
+    * top-k page.
     */
-  private[graft] def fusedBatchRefreshedPaths(s: SparkSession,
-                                              kwPath: String, vecPath: String,
-                                              currDocs: DataFrame,
-                                              currEmbs: DataFrame,
-                                              stride: Int = KeywordSearch.BatchStride,
-                                              nTerms: Int = KeywordSearch.BatchTerms,
-                                              nprobe: Int = IvfIndex.NProbe,
-                                              alpha: Double = Alpha,
-                                              k: Int = BatchK,
-                                              asOf: Option[Int] = None,
-                                              topC: Option[Int] = Some(topCFor(BatchK))): DataFrame = {
-    val queries = currEmbs.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val kparts = IndexRefresh.batchScoredSel(s, kwPath, currDocs,
-      _.filter(col("doc_id") % stride === 0), nTerms, asOf)
-    topC match {
-      case Some(c) =>
-        // r12: the same per-leg top-C serving cut as the champion
-        // fusion — the live-cell fan-out feeds bounded map-side heaps
-        // in ONE streaming pass and the normalize+fuse tail runs over
-        // the ≤2C-per-query union instead of a corpus-fraction frame
-        val (vcand, kcut) = cappedRefreshedParts(s, vecPath, queries,
-          kparts, nprobe, asOf, c)
-        fuseTail(vcand, kcut, alpha, k)
-      case None =>
-        // NOT materialized: the BATCH fan-out over the refreshed cells
-        // is queries × corpus × nprobe/nlist rows — a constant FRACTION
-        // of corpus × queries, i.e. the class a serving system never
-        // persists (the fusePrep brute-force rule; the r11 48g OOM at
-        // 100× was this frame's localCheckpoint). The declarative
-        // shared exchange (ReusedExchange) carries the consumers.
-        fuseTail(VectorRefresh.batchVparts(s, vecPath, queries, nprobe, asOf),
-          kparts, alpha, k,
-          restrictKwToCandidates = true, materializeCandidates = false)
-    }
+  def searchPrunedSql(terms: Seq[String] = KeywordSearch.QueryTerms,
+                      qId: Long = VectorSearch.QueryVecId,
+                      nprobe: Int = IvfIndex.NProbe,
+                      m: Int = ChampionIndex.M,
+                      alpha: Double = Alpha, k: Int = TopK): String = {
+    val qList = terms.distinct.sorted.map(t => s"'$t'").mkString(", ")
+    s"""WITH ${ChampionIndex.championChampsSqlCtes(m)},
+       |${IvfIndex.batchProbedSqlCtes(s"vec_id = $qId", nprobe)},
+       |kscored AS (
+       |  SELECT CAST($qId AS BIGINT) AS q_id, doc_id,
+       |    ${KeywordSearch.fixedPointSum6Sql("imp")} AS raw_score
+       |  FROM champs WHERE term IN ($qList)
+       |  GROUP BY doc_id),
+       |${probedVpartsSqlCte()},
+       |${joinedSqlCte("kscored")},
+       |${fuseTailSql(alpha, k, page = true)}""".stripMargin
   }
 
-  /** Driver query: the refreshed hybrid fusion over the standing
-    * refreshed artifacts of a source dir.
+  /** The refreshed fusion oracles' shared prefix: BOTH tables' snapshot
+    * (`currd`/`curre`: current, or — `prevSnapshot`, the as-of-0
+    * oracle — the PRE-refresh states, the CorpusOps / VectorRefresh
+    * stride conventions), the full-rebuild tf-cut champion keyword chain
+    * with probe-time idf (the [[IndexRefresh.refreshBatchSearchSql]]
+    * chain, unrounded sum of 6dp contributions) as `scored`, then
+    * `vecCtes` (ending in `vparts`) and the capped tail.
     */
-  def batchSearchRefreshed(s: SparkSession, dir: String): DataFrame =
-    fusedBatchRefreshedPaths(s,
-      IndexRefresh.refreshedArtifact(s, dir),
-      VectorRefresh.refreshedArtifact(s, dir),
-      CorpusOps.currSnapshot(Tables.documents(s, dir)),
-      VectorRefresh.currSnapshot(Tables.embeddings(s, dir)),
-      topC = servingTopC(s, dir))
-
-  /** DOUBLY-COMPRESSED batch fusion — the 100 TB serving form of the
-    * hybrid family's VECTOR LEG completed: every prior fusion scores
-    * its vector leg with full-precision cosine over the probed cells
-    * (the exactness price `vector_search_batch_ivf` documents), while
-    * the quantized serving tier (20e/20f) already serves pure-vector
-    * pages from m-byte PQ codes. This form fuses the two compressed
-    * artifacts directly: the vector leg is the batch ADC fan-out over
-    * the refreshed quantized layout's STANDING code files
-    * ([[VectorRefresh.batchAdcParts]] — IVF-probed cells via DPP, per-
-    * query distance tables broadcast, no full-precision vector touched
-    * past the query rows), the keyword leg is the refreshed champion
-    * probe ([[IndexRefresh.batchScoredSel]]), and the fusion tail is
-    * the house min-max normalize + alpha blend with vscore = −adc
-    * (distance negated into a similarity; min-max normalization is the
-    * same affine family either way, and the oracle replays the
-    * negation literally). The per-leg top-C cut applies exactly as in
-    * the champion fusion — heaps consume the ADC fan-out in one
-    * streaming pass, dropped keyword winners recover their TRUE adc by
-    * an ≤C·|Q| keyed re-lookup against the codes
-    * ([[VectorRefresh.adcForKeys]]) — and is corpus-size-gated like
-    * every capped path. Oracle: literal-codebook encode + ADC chain
-    * composed with the full-rebuild champion chain and the capped
-    * fusion tail, one statement.
-    */
-  private[graft] def fusedBatchQuantizedPaths(s: SparkSession,
-                                              kwPath: String, vecPath: String,
-                                              currDocs: DataFrame,
-                                              stride: Int = KeywordSearch.BatchStride,
-                                              nTerms: Int = KeywordSearch.BatchTerms,
-                                              nprobe: Int = IvfIndex.NProbe,
-                                              alpha: Double = Alpha,
-                                              k: Int = BatchK,
-                                              asOf: Option[Int] = None,
-                                              topC: Option[Int] = Some(topCFor(BatchK))): DataFrame =
-    fusedBatchQuantizedSel(s, kwPath, vecPath, currDocs,
-      _.filter(col("vec_id") % stride === 0),
-      _.filter(col("doc_id") % stride === 0),
-      nTerms, nprobe, alpha, k, asOf, topC)
-
-  /** [[fusedBatchQuantizedPaths]] over arbitrary query selectors — the
-    * micro-batch serving entry: every score input is a standing
-    * artifact (codes, codebook, merged centroids, champion views,
-    * merged stats), so a query's fused page is identical whichever
-    * micro-batch it arrives in (batch-split invariance).
-    */
-  private[graft] def fusedBatchQuantizedSel(s: SparkSession,
-                                            kwPath: String, vecPath: String,
-                                            currDocs: DataFrame,
-                                            selectVecQueries: DataFrame => DataFrame,
-                                            selectDocQueries: DataFrame => DataFrame,
-                                            nTerms: Int = KeywordSearch.BatchTerms,
-                                            nprobe: Int = IvfIndex.NProbe,
-                                            alpha: Double = Alpha,
-                                            k: Int = BatchK,
-                                            asOf: Option[Int] = None,
-                                            topC: Option[Int] = Some(topCFor(BatchK))): DataFrame = {
-    val queries = selectVecQueries(VectorRefresh.liveVectors(s, vecPath, asOf = asOf))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val kparts = IndexRefresh.batchScoredSel(s, kwPath, currDocs,
-      selectDocQueries, nTerms, asOf)
-    val (adcs, probed, tbls) =
-      VectorRefresh.batchAdcParts(s, vecPath, queries, nprobe, asOf)
-    val vparts = adcs.select(col("q_id"), col("vec_id").as("doc_id"),
-      (-col("adc")).as("vscore"))
-    topC match {
-      case Some(c) =>
-        val kdom = kparts
-          .join(VectorRefresh.liveCodes(s, vecPath, None, asOf)
-            .select(col("vec_id").as("doc_id"), col("cell")), Seq("doc_id"))
-          .join(broadcast(probed), Seq("q_id", "cell"), "semi")
-          .filter(col("doc_id") =!= col("q_id"))
-          .drop("cell")
-        val (vcand, kcut) = cappedCut(vparts, kdom, extraKeys =>
-          VectorRefresh.adcForKeys(s, vecPath, extraKeys, tbls, asOf)
-            .select(col("q_id"), col("doc_id"), (-col("adc")).as("vscore")), c)
-        fuseTail(vcand, kcut, alpha, k)
-      case None =>
-        fuseTail(vparts, kparts, alpha, k,
-          restrictKwToCandidates = true, materializeCandidates = false)
-    }
-  }
-
-  /** Driver query: the doubly-compressed fusion over the standing
-    * refreshed artifacts (quantized vector layout + keyword views) of
-    * a source dir.
-    */
-  def batchSearchQuantizedFused(s: SparkSession, dir: String): DataFrame = {
-    val vecPath = VectorRefresh.quantizedArtifact(s, dir)
-    VectorRefresh.captureQuantModel(s, vecPath)
-    fusedBatchQuantizedPaths(s,
-      IndexRefresh.refreshedArtifact(s, dir), vecPath,
-      CorpusOps.currSnapshot(Tables.documents(s, dir)),
-      topC = servingTopC(s, dir))
-  }
-
-  /** Driver query: the doubly-compressed fusion TIME-TRAVELED — both
-    * compressed layouts pinned AS OF segment 0 (pinned merged
-    * centroids, pinned live codes, pinned champion views and stats;
-    * the codebook is the standing artifact in every pinned state
-    * because refresh never retrains, so ADC arithmetic time-travels
-    * for free). Completes the as-of grid for the quantized fusion the
-    * way 15h did for the full-precision one. Oracle replays the
-    * literal-codebook ADC chain + champion chain + capped tail on the
-    * PREVIOUS snapshots of both tables.
-    */
-  def batchSearchQuantizedFusedAsOf(s: SparkSession, dir: String): DataFrame = {
-    val vecPath = VectorRefresh.quantizedArtifact(s, dir)
-    VectorRefresh.captureQuantModel(s, vecPath)
-    fusedBatchQuantizedPaths(s,
-      IndexRefresh.refreshedArtifact(s, dir), vecPath,
-      CorpusOps.prevSnapshot(Tables.documents(s, dir)),
-      asOf = Some(0),
-      topC = servingTopC(s, dir))
-  }
-
-  /** Driver query: the hybrid fusion TIME-TRAVELED — both layouts
-    * pinned AS OF segment 0, queries drawn from the pinned corpus
-    * state ([[IndexRefresh.qSearchAsOf]]'s contract completed across
-    * the whole search surface: keyword 13l, vector 20c, hybrid here).
-    * Oracle replays the full two-leg fusion chain on the PREVIOUS
-    * snapshots of both tables.
-    */
-  def batchSearchRefreshedAsOf(s: SparkSession, dir: String): DataFrame =
-    fusedBatchRefreshedPaths(s,
-      IndexRefresh.refreshedArtifact(s, dir),
-      VectorRefresh.refreshedArtifact(s, dir),
-      CorpusOps.prevSnapshot(Tables.documents(s, dir)),
-      VectorRefresh.prevSnapshot(Tables.embeddings(s, dir)),
-      asOf = Some(0),
-      topC = servingTopC(s, dir))
-
-  /** Driver query: [[batchSearchRefreshed]] over COMPACTED artifacts —
-    * the LSM read-amplification remedy measured: the multi-segment
-    * serving views pay a per-view segment union + tombstone anti-join,
-    * and compaction folds both layouts back to single-segment bases
-    * (bitwise-equal views, spec-pinned), restoring single-read probe
-    * cost. Registered under the SAME oracle as the refreshed fusion —
-    * compaction must be invisible in every served result.
-    */
-  def batchSearchRefreshedCompacted(s: SparkSession, dir: String): DataFrame = {
-    val kwC = IndexCache.getOrBuild("kw_refresh_compact", dir)(
-      IndexRefresh.compact(s, IndexRefresh.refreshedArtifact(s, dir), _))
-    val vecC = IndexCache.getOrBuild("ivf_refresh_compact", dir)(
-      VectorRefresh.compact(s, VectorRefresh.refreshedArtifact(s, dir), _))
-    fusedBatchRefreshedPaths(s, kwC, vecC,
-      CorpusOps.currSnapshot(Tables.documents(s, dir)),
-      VectorRefresh.currSnapshot(Tables.embeddings(s, dir)),
-      topC = servingTopC(s, dir))
-  }
-
-  /** Oracle for the refreshed fusion: full rebuild of BOTH layouts over
-    * the current snapshots — tf-cut champion keyword scoring with
-    * probe-time idf (the [[IndexRefresh.refreshBatchSearchSql]] chain,
-    * unrounded sum of 6dp contributions), label-cell IVF probing over
-    * the current embeddings, the coalesced joined-frame normalization.
-    */
-  def fusedBatchRefreshedSql(stride: Int = KeywordSearch.BatchStride,
-                             nTerms: Int = KeywordSearch.BatchTerms,
-                             nprobe: Int = IvfIndex.NProbe,
-                             m: Int = IndexRefresh.M,
-                             alpha: Double = Alpha, k: Int = BatchK,
-                             prevSnapshot: Boolean = false): String = {
+  private def refreshedFusionSql(vecCtes: String, stride: Int, nTerms: Int,
+                                 m: Int, alpha: Double, k: Int,
+                                 prevSnapshot: Boolean): String = {
     import KeywordSearch.{K1, B}
-    // prevSnapshot: the as-of-0 oracle — both tables' PRE-refresh
-    // states (the CorpusOps / VectorRefresh stride conventions)
     val snapCtes =
       if (prevSnapshot)
         s"""currd AS (
@@ -1642,77 +1093,29 @@ object HybridSearch {
        |  JOIN dict USING (term), stats
        |  WHERE c.doc_id <> q_id
        |  GROUP BY q_id, c.doc_id),
-       |queries AS (
-       |  SELECT vec_id AS q_id, embedding AS q_emb
-       |  FROM curre WHERE vec_id % $stride = 0),
-       |cexp AS (
-       |  SELECT label AS cell, generate_subscripts(embedding, 1) AS dim,
-       |    CAST(unnest(embedding) AS DOUBLE) AS ev
-       |  FROM curre),
-       |cent AS (
-       |  SELECT cell, list(cv ORDER BY dim) AS centroid
-       |  FROM (SELECT cell, dim, avg(ev) AS cv FROM cexp GROUP BY 1, 2) t
-       |  GROUP BY cell),
-       |cscored AS (
-       |  SELECT q_id, cell,
-       |    round(${VectorSearch.cosineSql("centroid", "q_emb")}, 6) AS cscore
-       |  FROM cent, queries),
-       |probed AS (
-       |  SELECT q_id, cell FROM (
-       |    SELECT q_id, cell,
-       |      row_number() OVER (PARTITION BY q_id ORDER BY cscore DESC, cell) AS crn
-       |    FROM cscored) t
-       |  WHERE crn <= $nprobe),
-       |vparts AS (
-       |  SELECT p.q_id, e.vec_id AS doc_id,
-       |    ${VectorSearch.cosineSql("e.embedding", "q.q_emb")} AS vscore
-       |  FROM curre e
-       |  JOIN probed p ON e.label = p.cell
-       |  JOIN queries q ON q.q_id = p.q_id
-       |  WHERE e.vec_id <> p.q_id),
+       |$vecCtes,
        |${cappedJoinedSqlCtes(topCFor(k))},
-       |qstats AS (
-       |  SELECT q_id, min(vscore) AS vmin, max(vscore) AS vmax,
-       |    min(kscore) AS kmin, max(kscore) AS kmax
-       |  FROM joined GROUP BY 1),
-       |fusedt AS (
-       |  SELECT q_id, doc_id,
-       |    round($alpha * (vscore - vmin) /
-       |            (CASE WHEN vmax = vmin THEN 1.0 ELSE vmax - vmin END)
-       |        + ${1 - alpha} * (kscore - kmin) /
-       |            (CASE WHEN kmax = kmin THEN 1.0 ELSE kmax - kmin END), 4) AS score
-       |  FROM joined JOIN qstats USING (q_id)),
-       |ranked AS (
-       |  SELECT q_id, doc_id, score,
-       |    row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rn
-       |  FROM fusedt
-       |  QUALIFY rn <= $k)
-       |SELECT q_id, rn, doc_id, score
-       |FROM ranked
-       |ORDER BY q_id, rn""".stripMargin
+       |${fuseTailSql(alpha, k)}""".stripMargin
   }
 
-  val batchSearchRefreshedOracle: String = fusedBatchRefreshedSql()
-
-  /** Oracle for [[batchSearchQuantizedFused]]: the literal-codebook
-    * encode + ADC chain ([[VectorRefresh.batchQuantizedAdcCtes]] over
-    * the current embeddings snapshot), the full-rebuild tf-cut
-    * champion keyword chain over the current documents snapshot,
-    * vscore = −adc, and the capped fusion tail — ONE statement. A
-    * `def` under the capture convention (the engine's codebook is
-    * dumped after the queries run).
+  /** Oracle for the refreshed fusion: label-cell IVF probing over the
+    * snapshot's embeddings beside the full-rebuild keyword chain.
     */
-  def batchSearchQuantizedFusedOracle: String =
-    VectorRefresh.capturedQuantModel.fold(
-      "SELECT pq_refresh_model_not_captured FROM embeddings")(
-      fusedBatchQuantizedSql(_))
+  def fusedBatchRefreshedSql(stride: Int = KeywordSearch.BatchStride,
+                             nTerms: Int = KeywordSearch.BatchTerms,
+                             nprobe: Int = IvfIndex.NProbe,
+                             m: Int = IndexRefresh.M,
+                             alpha: Double = Alpha, k: Int = BatchK,
+                             prevSnapshot: Boolean = false): String =
+    refreshedFusionSql(
+      s"${IvfIndex.batchProbedSqlCtes(s"vec_id % $stride = 0", nprobe, "curre")},\n" +
+        probedVpartsSqlCte("curre"),
+      stride, nTerms, m, alpha, k, prevSnapshot)
 
-  /** Oracle for [[batchSearchQuantizedFusedAsOf]] (capture convention). */
-  def batchSearchQuantizedFusedAsOfOracle: String =
-    VectorRefresh.capturedQuantModel.fold(
-      "SELECT pq_refresh_model_not_captured FROM embeddings")(
-      fusedBatchQuantizedSql(_, prevSnapshot = true))
-
+  /** Oracle for the quantized fusion: the literal-codebook encode + ADC
+    * chain ([[VectorRefresh.batchQuantizedAdcCtes]] over the snapshot's
+    * embeddings), vscore = −adc, beside the full-rebuild keyword chain.
+    */
   private[graft] def fusedBatchQuantizedSql(
       model: ProductQuantizer.Model,
       stride: Int = KeywordSearch.BatchStride,
@@ -1720,97 +1123,14 @@ object HybridSearch {
       nprobe: Int = IvfIndex.NProbe,
       m: Int = IndexRefresh.M,
       alpha: Double = Alpha, k: Int = BatchK,
-      prevSnapshot: Boolean = false): String = {
-    import KeywordSearch.{K1, B}
-    // prevSnapshot: the as-of-0 oracle — both tables' PRE-refresh
-    // states (the fusedBatchRefreshedSql snapshot convention)
-    val snapCtes =
-      if (prevSnapshot)
-        s"""currd AS (
-           |  SELECT doc_id,
-           |    CASE WHEN doc_id % ${CorpusOps.DiffChangeStride} = 4
-           |      THEN text || ' rev1' ELSE text END AS text,
-           |    source, lang
-           |  FROM documents WHERE doc_id % ${CorpusOps.DiffAddStride} <> 5),
-           |curre AS (
-           |  SELECT vec_id,
-           |    CASE WHEN vec_id % ${CorpusOps.DiffChangeStride} = 4
-           |      THEN list_transform(embedding, x -> -x) ELSE embedding END AS embedding,
-           |    label
-           |  FROM embeddings WHERE vec_id % ${CorpusOps.DiffAddStride} <> 5)""".stripMargin
-      else
-        s"""currd AS (
-           |  SELECT * FROM documents WHERE doc_id % ${CorpusOps.DiffRemoveStride} <> 3),
-           |curre AS (
-           |  SELECT * FROM embeddings WHERE vec_id % ${CorpusOps.DiffRemoveStride} <> 3)""".stripMargin
-    s"""WITH $snapCtes,
-       |toked AS (
-       |  SELECT doc_id, unnest(${TextAnalysis.sqlToks}) AS term FROM currd),
-       |postings AS (
-       |  SELECT term, doc_id, count(*) AS tf FROM toked GROUP BY 1, 2),
-       |docstats AS (
-       |  SELECT doc_id, CAST(len(${TextAnalysis.sqlToks}) AS DOUBLE) AS dl
-       |  FROM currd),
-       |stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM docstats),
-       |dict AS (SELECT term, count(*) AS df FROM postings GROUP BY 1),
-       |champs AS (
-       |  SELECT term, doc_id, tf, dl FROM (
-       |    SELECT p.term, p.doc_id, p.tf, d.dl,
-       |      row_number() OVER (PARTITION BY p.term
-       |        ORDER BY p.tf DESC, d.dl ASC, p.doc_id ASC) AS crn
-       |    FROM postings p JOIN docstats d USING (doc_id))
-       |  WHERE crn <= $m),
-       |qtoks AS (
-       |  SELECT doc_id AS q_id, unnest(list_distinct(${TextAnalysis.sqlToks})) AS term
-       |  FROM currd WHERE doc_id % $stride = 0),
-       |qterms AS (
-       |  SELECT q_id, substring(p, 12, 1000) AS term
-       |  FROM (
-       |    SELECT q_id, unnest(
-       |      (list_sort(list(lpad(CAST(df AS VARCHAR), 10, '0') || '#' || term)))[1:$nTerms]) AS p
-       |    FROM qtoks JOIN dict USING (term)
-       |    GROUP BY q_id)),
-       |scored AS (
-       |  SELECT q_id, c.doc_id,
-       |    CAST(sum(CAST(floor(
-       |      round(ln(1 + (CAST(n_docs AS DOUBLE) - CAST(dict.df AS DOUBLE) + 0.5) / (CAST(dict.df AS DOUBLE) + 0.5))
-       |      * (CAST(tf AS DOUBLE) * ${K1 + 1})
-       |      / (CAST(tf AS DOUBLE) + $K1 * (1 - $B + $B * dl / avgdl)), 6)
-       |      * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000.0 AS raw_score
-       |  FROM champs c
-       |  JOIN qterms USING (term)
-       |  JOIN dict USING (term), stats
-       |  WHERE c.doc_id <> q_id
-       |  GROUP BY q_id, c.doc_id),
-       |${VectorRefresh.batchQuantizedAdcCtes(model, stride, nprobe, "curre")},
-       |vparts AS (
-       |  SELECT q_id, vec_id AS doc_id, -adc AS vscore FROM adcs),
-       |${cappedJoinedSqlCtes(topCFor(k))},
-       |qstats AS (
-       |  SELECT q_id, min(vscore) AS vmin, max(vscore) AS vmax,
-       |    min(kscore) AS kmin, max(kscore) AS kmax
-       |  FROM joined GROUP BY 1),
-       |fusedt AS (
-       |  SELECT q_id, doc_id,
-       |    round($alpha * (vscore - vmin) /
-       |            (CASE WHEN vmax = vmin THEN 1.0 ELSE vmax - vmin END)
-       |        + ${1 - alpha} * (kscore - kmin) /
-       |            (CASE WHEN kmax = kmin THEN 1.0 ELSE kmax - kmin END), 4) AS score
-       |  FROM joined JOIN qstats USING (q_id)),
-       |ranked AS (
-       |  SELECT q_id, doc_id, score,
-       |    row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rn
-       |  FROM fusedt
-       |  QUALIFY rn <= $k)
-       |SELECT q_id, rn, doc_id, score
-       |FROM ranked
-       |ORDER BY q_id, rn""".stripMargin
-  }
-  /** Oracle for [[batchSearchRefreshedAsOf]]: the same two-leg fusion
-    * chain on the PREVIOUS snapshots of both tables.
-    */
-  val batchSearchRefreshedAsOfOracle: String =
-    fusedBatchRefreshedSql(prevSnapshot = true)
+      prevSnapshot: Boolean = false): String =
+    refreshedFusionSql(
+      s"""${VectorRefresh.batchQuantizedAdcCtes(model, stride, nprobe, "curre")},
+         |vparts AS (
+         |  SELECT q_id, vec_id AS doc_id, -adc AS vscore FROM adcs)""".stripMargin,
+      stride, nTerms, m, alpha, k, prevSnapshot)
+
+  // --- driver queries ---
 
   def search(s: SparkSession, dir: String): DataFrame =
     fused(Tables.documents(s, dir), Tables.embeddings(s, dir),
@@ -1832,4 +1152,146 @@ object HybridSearch {
   val searchFilteredOracle: String =
     fusedSql(KeywordSearch.QueryTerms, VectorSearch.QueryVecId,
       whereSql = "WHERE lang = 'en'")
+
+  /** The single-request pruned hybrid, seeded like [[search]] by the
+    * benchmark object's stored vector, over the standing champion +
+    * centroid artifacts.
+    */
+  def searchPruned(s: SparkSession, dir: String): DataFrame = {
+    val embs = Tables.embeddings(s, dir)
+    val q = embs.filter(col("vec_id") === VectorSearch.QueryVecId)
+      .select(col("embedding").as("q_emb"))
+    fusedPrunedWithQuery(embs, ChampionIndex.cachedChampions(s, dir),
+      KeywordSearch.QueryTerms, q, VectorSearch.QueryVecId,
+      centroids = Some(IvfIndex.cachedCentroids(s, dir)))
+  }
+
+  val searchPrunedOracle: String = searchPrunedSql()
+
+  /** The brute-force batch fusion, keyword signal from the standing
+    * postings, df dictionary and corpus stats (value-identical to the
+    * inline form; spec-pinned).
+    */
+  def batchSearch(s: SparkSession, dir: String): DataFrame =
+    fusedBatchSel(Tables.documents(s, dir), Tables.embeddings(s, dir),
+      kwIndex = Some(KeywordSearch.cachedBatchPostings(s, dir)),
+      kwDict = Some(KeywordSearch.cachedTermDict(s, dir)),
+      kwStats = Some(KeywordSearch.cachedCorpusStats(s, dir)))
+
+  val batchSearchOracle: String = fusedBatchSql()
+
+  def batchSearchIvf(s: SparkSession, dir: String): DataFrame =
+    fusedBatchIvfSel(Tables.documents(s, dir), Tables.embeddings(s, dir),
+      centroids = Some(IvfIndex.cachedCentroids(s, dir)),
+      kwIndex = Some(KeywordSearch.cachedBatchPostings(s, dir)),
+      kwDict = Some(KeywordSearch.cachedTermDict(s, dir)),
+      kwStats = Some(KeywordSearch.cachedCorpusStats(s, dir)))
+
+  val batchSearchIvfOracle: String = fusedBatchIvfSql()
+
+  /** The doubly-pruned fusion over the standing artifacts (IVF
+    * centroids + batch postings + champion lists).
+    */
+  def batchSearchChampion(s: SparkSession, dir: String): DataFrame =
+    fusedBatchChampionSel(Tables.documents(s, dir), Tables.embeddings(s, dir),
+      KeywordSearch.cachedBatchPostings(s, dir),
+      ChampionIndex.cachedChampions(s, dir),
+      centroids = Some(IvfIndex.cachedCentroids(s, dir)),
+      topC = servingTopC(s, dir))
+
+  val batchSearchChampionOracle: String = fusedBatchChampionSql()
+
+  /** The champion-depth sweep over the standing artifacts, so the
+    * m = max slice is the doubly-pruned serving ranking itself.
+    */
+  def batchSearchChampionDepthSweep(s: SparkSession, dir: String,
+                                    ms: Seq[Int]): DataFrame =
+    fusedBatchChampionDepthSweepSel(Tables.documents(s, dir), Tables.embeddings(s, dir),
+      KeywordSearch.cachedBatchPostings(s, dir),
+      ChampionIndex.cachedChampions(s, dir),
+      everyStride("vec_id"), everyStride("doc_id"), ms,
+      centroids = Some(IvfIndex.cachedCentroids(s, dir)),
+      topC = servingTopC(s, dir),
+      rankedChamps = Some(ChampionIndex.cachedChampionsRanked(s, dir)))
+
+  /** The refreshed fusion over the standing refreshed artifacts. */
+  def batchSearchRefreshed(s: SparkSession, dir: String): DataFrame =
+    fusedBatchRefreshedPaths(s,
+      IndexRefresh.refreshedArtifact(s, dir),
+      VectorRefresh.refreshedArtifact(s, dir),
+      CorpusOps.currSnapshot(Tables.documents(s, dir)),
+      VectorRefresh.currSnapshot(Tables.embeddings(s, dir)),
+      topC = servingTopC(s, dir))
+
+  val batchSearchRefreshedOracle: String = fusedBatchRefreshedSql()
+
+  /** The hybrid fusion TIME-TRAVELED — both layouts pinned AS OF
+    * segment 0, queries drawn from the pinned corpus state
+    * ([[IndexRefresh.qSearchAsOf]]'s contract completed across the
+    * search surface: keyword 13l, vector 20c, hybrid here). Oracle
+    * replays the two-leg chain on the PREVIOUS snapshots.
+    */
+  def batchSearchRefreshedAsOf(s: SparkSession, dir: String): DataFrame =
+    fusedBatchRefreshedPaths(s,
+      IndexRefresh.refreshedArtifact(s, dir),
+      VectorRefresh.refreshedArtifact(s, dir),
+      CorpusOps.prevSnapshot(Tables.documents(s, dir)),
+      VectorRefresh.prevSnapshot(Tables.embeddings(s, dir)),
+      asOf = Some(0),
+      topC = servingTopC(s, dir))
+
+  val batchSearchRefreshedAsOfOracle: String =
+    fusedBatchRefreshedSql(prevSnapshot = true)
+
+  /** [[batchSearchRefreshed]] over COMPACTED artifacts — the LSM
+    * read-amplification remedy measured: compaction folds both layouts
+    * back to single-segment bases (bitwise-equal views, spec-pinned).
+    * Registered under the SAME oracle as the refreshed fusion —
+    * compaction must be invisible in every served result.
+    */
+  def batchSearchRefreshedCompacted(s: SparkSession, dir: String): DataFrame = {
+    val kwC = IndexCache.getOrBuild("kw_refresh_compact", dir)(
+      IndexRefresh.compact(s, IndexRefresh.refreshedArtifact(s, dir), _))
+    val vecC = IndexCache.getOrBuild("ivf_refresh_compact", dir)(
+      VectorRefresh.compact(s, VectorRefresh.refreshedArtifact(s, dir), _))
+    fusedBatchRefreshedPaths(s, kwC, vecC,
+      CorpusOps.currSnapshot(Tables.documents(s, dir)),
+      VectorRefresh.currSnapshot(Tables.embeddings(s, dir)),
+      topC = servingTopC(s, dir))
+  }
+
+  /** The doubly-compressed fusion over the standing refreshed artifacts
+    * (quantized vector layout + keyword views); `asOf = Some(0)` pins
+    * both compressed layouts (the codebook is the standing artifact in
+    * every pinned state because refresh never retrains, so ADC
+    * arithmetic time-travels for free).
+    */
+  private def quantizedFusedAt(s: SparkSession, dir: String,
+                               asOf: Option[Int]): DataFrame = {
+    val vecPath = VectorRefresh.quantizedArtifact(s, dir)
+    VectorRefresh.captureQuantModel(s, vecPath)
+    val docs = Tables.documents(s, dir)
+    fusedBatchQuantizedSel(s, IndexRefresh.refreshedArtifact(s, dir), vecPath,
+      if (asOf.isEmpty) CorpusOps.currSnapshot(docs) else CorpusOps.prevSnapshot(docs),
+      asOf = asOf, topC = servingTopC(s, dir))
+  }
+
+  def batchSearchQuantizedFused(s: SparkSession, dir: String): DataFrame =
+    quantizedFusedAt(s, dir, None)
+
+  def batchSearchQuantizedFusedAsOf(s: SparkSession, dir: String): DataFrame =
+    quantizedFusedAt(s, dir, Some(0))
+
+  /** Oracles for the quantized fusion (capture convention: a `def`, the
+    * engine's codebook is dumped after the queries run).
+    */
+  def batchSearchQuantizedFusedOracle: String =
+    VectorRefresh.capturedQuantModel.fold(
+      "SELECT pq_refresh_model_not_captured FROM embeddings")(
+      fusedBatchQuantizedSql(_))
+
+  def batchSearchQuantizedFusedAsOfOracle: String =
+    VectorRefresh.capturedQuantModel.fold(
+      "SELECT pq_refresh_model_not_captured FROM embeddings")(
+      fusedBatchQuantizedSql(_, prevSnapshot = true))
 }

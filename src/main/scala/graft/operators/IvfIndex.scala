@@ -565,14 +565,15 @@ object IvfIndex {
     * (cscore DESC, cell) tie order as the heap).
     */
   private[operators] def batchProbedSqlCtes(queriesWhere: String,
-                                            nprobe: Int): String =
+                                            nprobe: Int,
+                                            embs: String = "embeddings"): String =
     s"""queries AS (
        |  SELECT vec_id AS q_id, embedding AS q_emb
-       |  FROM embeddings WHERE $queriesWhere),
+       |  FROM $embs WHERE $queriesWhere),
        |cexp AS (
        |  SELECT label AS cell, generate_subscripts(embedding, 1) AS dim,
        |    CAST(unnest(embedding) AS DOUBLE) AS ev
-       |  FROM embeddings),
+       |  FROM $embs),
        |cent AS (
        |  SELECT cell, list(cv ORDER BY dim) AS centroid
        |  FROM (SELECT cell, dim, avg(ev) AS cv FROM cexp GROUP BY 1, 2) t

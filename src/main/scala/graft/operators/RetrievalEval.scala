@@ -393,7 +393,7 @@ object RetrievalEval {
     val vecPath = VectorRefresh.quantizedArtifact(s, dir)
     VectorRefresh.captureQuantModel(s, vecPath)
     metricsOverRanked(
-      HybridSearch.fusedBatchQuantizedPaths(s,
+      HybridSearch.fusedBatchQuantizedSel(s,
         IndexRefresh.refreshedArtifact(s, dir), vecPath,
         CorpusOps.currSnapshot(Tables.documents(s, dir)),
         topC = HybridSearch.servingTopC(s, dir)),

@@ -372,28 +372,6 @@ object VectorRefresh extends Segments {
                                          asOf: Option[Int]): DataFrame =
     servingView("vec_centroids", path, asOf)((a, _) => centroidView(spark, path, a))
 
-  /** Batch candidate fan-out over the refreshed layout — the vector leg
-    * of the refreshed hybrid fusion: per-query top-nprobe cells ranked
-    * against the merged serving centroids
-    * ([[IvfIndex.batchProbedCellsFrom]] — 6dp-rounded cosine, cell
-    * tiebreak, bounded heap), then only those cells' LIVE vectors pay
-    * the exact cosine. Same (q_id, doc_id, vscore) shape as
-    * [[HybridSearch]]'s ivfVparts.
-    */
-  private[graft] def batchVparts(spark: SparkSession, path: String,
-                                 queries: DataFrame,
-                                 nprobe: Int = IvfIndex.NProbe,
-                                 asOf: Option[Int] = None): DataFrame = {
-    val probed = IvfIndex.batchProbedCellsFrom(
-      servingCentroidView(spark, path, asOf), queries, nprobe)
-    // queries folded into the probe frame pre-fan-out (r15, guide §2.3)
-    liveVectors(spark, path, asOf = asOf)
-      .join(broadcast(probed.join(queries, Seq("q_id"))), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("doc_id"),
-        cosineSim(col("embedding"), col("q_emb")).as("vscore"))
-  }
-
   /** The refreshed standing layout for a source dir: base on the
     * previous snapshot, one refresh applying the added/changed/removed
     * batch — the [[IndexRefresh.qRefreshSearch]] convention on the
@@ -717,10 +695,10 @@ object VectorRefresh extends Segments {
     // table attach, the fan-out, and the caller's keyword-candidate
     // semi-join), and each re-derived the centroid-view subtree — the
     // per-cell collect_list build ran 2-3× per execution (4+ exchanges
-    // each). Probe the EPOCH-CACHED serving view (batchVparts'
-    // convention; bitwise-equal by the cachedView contract) and
-    // materialize the bounded |Q|·nprobe probe frame once,
-    // query-scoped (guide §2.4: remove repeated subtree jobs).
+    // each). Probe the EPOCH-CACHED serving view (bitwise-equal by the
+    // cachedView contract) and materialize the bounded |Q|·nprobe
+    // probe frame once, query-scoped (guide §2.4: remove repeated
+    // subtree jobs).
     val probed = Checkpoints.transient_(IvfIndex.batchProbedCellsFrom(
       servingCentroidView(spark, path, asOf), q, nprobe))
     // per-query ADC tables in ONE map-side expression over the standing
@@ -999,27 +977,7 @@ object VectorRefresh extends Segments {
     val sub = model.dim / model.m
     s"""cb AS (SELECT * FROM (VALUES
        |    ${ProductQuantizer.codebookValues(model)}) AS t(j, c, cent)),
-       |queries AS (
-       |  SELECT vec_id AS q_id, embedding AS q_emb
-       |  FROM $embRel WHERE vec_id % $stride = 0),
-       |cexp AS (
-       |  SELECT label AS cell, generate_subscripts(embedding, 1) AS dim,
-       |    CAST(unnest(embedding) AS DOUBLE) AS ev
-       |  FROM $embRel),
-       |cent AS (
-       |  SELECT cell, list(cv ORDER BY dim) AS centroid
-       |  FROM (SELECT cell, dim, avg(ev) AS cv FROM cexp GROUP BY 1, 2) t
-       |  GROUP BY cell),
-       |cscored AS (
-       |  SELECT q_id, cell,
-       |    round(${VectorSearch.cosineSql("centroid", "q_emb")}, 6) AS cscore
-       |  FROM cent, queries),
-       |probed AS (
-       |  SELECT q_id, cell FROM (
-       |    SELECT q_id, cell,
-       |      row_number() OVER (PARTITION BY q_id ORDER BY cscore DESC, cell) AS crn
-       |    FROM cscored) t
-       |  WHERE crn <= $nprobe),
+       |${IvfIndex.batchProbedSqlCtes(s"vec_id % $stride = 0", nprobe, embRel)},
        |norm AS (
        |  SELECT vec_id, label,
        |    list_transform(embedding, x -> CAST(x AS DOUBLE) /

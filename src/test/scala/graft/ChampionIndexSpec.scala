@@ -125,7 +125,7 @@ class ChampionIndexSpec extends SparkSpec {
       // SearchSpec, and the IVF twin below runs uncapped
       topC = None)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-    val ivf = HybridSearch.fusedBatchIvf(docs, embs)
+    val ivf = HybridSearch.fusedBatchIvfSel(docs, embs)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     assert(champion.length == ivf.length && champion.nonEmpty)
     // same candidate domain (probed cells), keyword leg differs only by

@@ -320,9 +320,9 @@ class SearchSpec extends SparkSpec {
     val kwPath = IndexRefresh.refreshedArtifact(spark, dir)
     val vecPath = VectorRefresh.quantizedArtifact(spark, dir)
     val currD = CorpusOps.currSnapshot(Tables.documents(spark, dir))
-    val fullC = HybridSearch.fusedBatchQuantizedPaths(spark, kwPath, vecPath,
+    val fullC = HybridSearch.fusedBatchQuantizedSel(spark, kwPath, vecPath,
       currD, topC = Some(1 << 24)).collect().toSeq
-    val uncapped = HybridSearch.fusedBatchQuantizedPaths(spark, kwPath, vecPath,
+    val uncapped = HybridSearch.fusedBatchQuantizedSel(spark, kwPath, vecPath,
       currD, topC = None).collect().toSeq
     assert(fullC.nonEmpty && fullC == uncapped)
   }
@@ -615,7 +615,7 @@ class SearchSpec extends SparkSpec {
     val embs = Tables.embeddings(spark, TestSpark.Sf001)
     // min-max normalization is monotonic, so pure-vector fusion must
     // reproduce the vector heap ranking (same k, same tie-breaks)
-    val hybrid = HybridSearch.fusedBatch(docs, embs, alpha = 1.0)
+    val hybrid = HybridSearch.fusedBatchSel(docs, embs, alpha = 1.0)
       .select("q_id", "rn", "doc_id").collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Int]("rn"), r.getAs[Long]("doc_id"))).toSeq
     val vector = VectorSearch.batchTopK(embs)
@@ -627,7 +627,7 @@ class SearchSpec extends SparkSpec {
   test("batch hybrid scores stay in [0,1] and rank descending per query") {
     val docs = Tables.documents(spark, TestSpark.Sf001)
     val embs = Tables.embeddings(spark, TestSpark.Sf001)
-    val rows = HybridSearch.fusedBatch(docs, embs).collect()
+    val rows = HybridSearch.fusedBatchSel(docs, embs).collect()
     assert(rows.nonEmpty)
     assert(rows.forall { r =>
       val s = r.getAs[Double]("score"); s >= 0.0 && s <= 1.0
@@ -703,7 +703,7 @@ class SearchSpec extends SparkSpec {
   test("alpha-sweep fusion: the default-alpha slice equals the single-alpha batch fusion") {
     val docs = Tables.documents(spark, TestSpark.Sf001)
     val embs = Tables.embeddings(spark, TestSpark.Sf001)
-    val single = HybridSearch.fusedBatch(docs, embs).collect().toSeq
+    val single = HybridSearch.fusedBatchSel(docs, embs).collect().toSeq
     val sweep = HybridSearch.fusedBatchSweepSel(docs, embs,
         _.filter(col("vec_id") % KeywordSearch.BatchStride === 0),
         _.filter(col("doc_id") % KeywordSearch.BatchStride === 0),
@@ -926,9 +926,9 @@ class SearchSpec extends SparkSpec {
     val docs = Tables.documents(spark, TestSpark.Sf0001)
     val embs = Tables.embeddings(spark, TestSpark.Sf0001)
     val nlist = embs.select("label").distinct().count().toInt
-    val ivf = HybridSearch.fusedBatchIvf(docs, embs, nprobe = nlist)
+    val ivf = HybridSearch.fusedBatchIvfSel(docs, embs, nprobe = nlist)
       .collect().map(_.toSeq)
-    val brute = HybridSearch.fusedBatch(docs, embs).collect().map(_.toSeq)
+    val brute = HybridSearch.fusedBatchSel(docs, embs).collect().map(_.toSeq)
     assert(ivf.toSeq == brute.toSeq)
   }
 
@@ -939,10 +939,10 @@ class SearchSpec extends SparkSpec {
     val pdir = java.nio.file.Files.createTempDirectory("posts").toString
     IvfIndex.writeCentroids(embs, cdir)
     KeywordSearch.buildBatchPostings(docs).write.mode("overwrite").parquet(pdir)
-    val served = HybridSearch.fusedBatchIvf(docs, embs,
+    val served = HybridSearch.fusedBatchIvfSel(docs, embs,
       centroids = Some(spark.read.parquet(cdir)),
       kwIndex = Some(spark.read.parquet(pdir))).collect().map(_.toSeq)
-    val inline = HybridSearch.fusedBatchIvf(docs, embs).collect().map(_.toSeq)
+    val inline = HybridSearch.fusedBatchIvfSel(docs, embs).collect().map(_.toSeq)
     assert(served.toSeq == inline.toSeq)
   }
 
@@ -961,7 +961,7 @@ class SearchSpec extends SparkSpec {
       _.filter(col("vec_id") % stride === 0),
       _.filter(col("doc_id") % stride === 0),
       kwIndex = Some(idx)).collect().map(_.toSeq)
-    val hyInline = HybridSearch.fusedBatch(docs, embs).collect().map(_.toSeq)
+    val hyInline = HybridSearch.fusedBatchSel(docs, embs).collect().map(_.toSeq)
     assert(hyServed.toSeq == hyInline.toSeq)
   }
 

@@ -309,9 +309,9 @@ class StreamingSpec extends SparkSpec {
     input.addData(allIds.take(1): _*); q.processAllAvailable()
     input.addData(allIds.drop(1): _*); q.processAllAvailable()
     q.stop()
-    val want = graft.operators.HybridSearch.fusedBatchFor(
-      docs, embs, col("vec_id").isin(allIds: _*),
-      col("doc_id").isin(allIds: _*), k = 5)
+    val want = graft.operators.HybridSearch.fusedBatchSel(
+      docs, embs, _.filter(col("vec_id").isin(allIds: _*)),
+      _.filter(col("doc_id").isin(allIds: _*)), k = 5)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     assert(buf.sortBy(t => (t._1, t._2)).toSeq == want.sortBy(t => (t._1, t._2)).toSeq)
     assert(buf.nonEmpty)
