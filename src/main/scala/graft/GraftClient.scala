@@ -47,6 +47,14 @@ import org.apache.spark.sql.functions._
   * client's lifetime, like [[corpusDim]] and the standing artifacts
   * keyed on `dir`, so a request lists the table files but launches no
   * schema-inference job.
+  *
+  * Building a request runs no Spark job, and a request leaves nothing
+  * persisted. The embedded request vector is computed on the driver and
+  * enters the plan as a literal ([[operators.QueryVec.Literal]]), so no
+  * request broadcasts a one-row query frame. A hybrid request's
+  * candidates are read once by one aggregation, never checkpointed, so
+  * no route registers a frame that a serving process would have to
+  * release. Both are spec-pinned, with each route's job count.
   */
 class GraftClient(spark: SparkSession, dir: String, embedDim: Int = 64,
                   indexMode: String = GraftClient.IndexExact) {
@@ -156,11 +164,13 @@ class GraftClient(spark: SparkSession, dir: String, embedDim: Int = 64,
   private lazy val corpusDim: Int =
     embs.select(size(col("embedding"))).head().getInt(0)
 
-  private def requestVector(request: String): DataFrame = {
+  /** The embedded request, computed on the driver: it enters every plan
+    * as a literal, so no request broadcasts a one-row query frame.
+    */
+  private def requestVector(request: String): QueryVec = {
     require(embedDim == corpusDim,
       s"embedDim=$embedDim does not match the corpus dimension $corpusDim")
-    spark.range(1).select(
-      Embedder.embed(lit(request), embedDim).cast("array<float>").as("q_emb"))
+    QueryVec.Literal(Embedder.embedValues(spark, request, embedDim))
   }
 
   /** `keyword_search(request, query_properties, limit, filter)` — BM25
@@ -251,10 +261,9 @@ class GraftClient(spark: SparkSession, dir: String, embedDim: Int = 64,
       IvfIndex.searchPrunedWithQuery(embs, docs, requestVector(request),
         IvfIndex.cachedCentroids(spark, dir), k = limit, docFilter = filter)
     else
-      embs
+      requestVector(request).attach(embs
         .join(docs.filter(filter).select(col("doc_id"), col("source"), col("lang")),
-          col("vec_id") === col("doc_id"))
-        .join(broadcast(requestVector(request)))
+          col("vec_id") === col("doc_id")))
         .select(col("doc_id"), col("source"), col("lang"),
           round(cosineSim(col("embedding"), col("q_emb")), 4).as("score"))
         .orderBy(desc("score"), asc("doc_id"))
@@ -296,10 +305,9 @@ class GraftClient(spark: SparkSession, dir: String, embedDim: Int = 64,
         IvfIndex.prunedScoredWithQuery(embs, docs, requestVector(request),
           IvfIndex.cachedCentroids(spark, dir), docFilter = filter)
       else
-        embs
+        requestVector(request).attach(embs
           .join(docs.filter(filter).select(col("doc_id"), col("source")),
-            col("vec_id") === col("doc_id"))
-          .join(broadcast(requestVector(request)))
+            col("vec_id") === col("doc_id")))
           .select(col("doc_id"), col("source"),
             round(cosineSim(col("embedding"), col("q_emb")), 4).as("score"))
     VectorSearch.groupedFromScored(
@@ -384,9 +392,12 @@ class GraftClient(spark: SparkSession, dir: String, embedDim: Int = 64,
       HybridSearch.fusedWithQuery(modeDocs, modeEmbs, requestTerms(request),
         requestVector(request), alpha, limit, filter.getOrElse(lit(true)))) {
       case (page, universe) =>
+        // the page has at most `limit` rows; the limit plans the final
+        // sort as a top-k read by the result job, not a range shuffle
         page.join(universe.select(col("doc_id"), col("source")), Seq("doc_id"))
           .select(col("doc_id"), col("source"), col("score"))
           .orderBy(desc("score"), asc("doc_id"))
+          .limit(limit)
     }
   }
 

@@ -25,10 +25,15 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     delta postings after the segment write, a compaction's folded
   *     live view after the fold commits).
   *   - [[transient_]] + [[releaseTransients]]: query-scoped — a
-  *     checkpoint consumed by the RETURNED plan of a query (candidate
-  *     frames, inline postings) must outlive the call that created it,
-  *     so it registers here and the harness (Bench / Verify / Profile)
-  *     drains the registry between queries.
+  *     checkpoint consumed by the RETURNED plan of a batch query
+  *     (candidate frames, inline postings) must outlive the call that
+  *     created it, so it registers here and the harness (Bench / Verify /
+  *     Profile) drains the registry between queries. Single-request
+  *     forms — every [[graft.GraftClient]] route — register nothing:
+  *     they read their bounded candidates once
+  *     ([[HybridSearch.fusedPrunedWithQuery]] and its refreshed and
+  *     quantized twins), so a serving process that never drains the
+  *     global registry holds no request's frame.
   *   - [[withRequestScope]] / [[newScope]]: REQUEST-scoped — the
   *     serving-process form of the same boundary. A body run inside a
   *     scope has its `transient_`/`register` calls routed to THAT

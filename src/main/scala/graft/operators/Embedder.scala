@@ -4,6 +4,9 @@ import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** Batch embedding job — the Spark-native analog of the reference's
@@ -26,6 +29,17 @@ object Embedder {
   def embed(text: Column, dim: Int = Dim): Column =
     transform(sequence(lit(0), lit(dim - 1)), j =>
       (portableHash(concat(md5(text), lit("#"), j)) % 1000000L).cast("double") / 1000000.0 - 0.5)
+
+  /** [[embed]] of one driver-side string as `array<float>`, evaluated
+    * on the driver. It runs the column expression's own code, so the
+    * floats are bitwise the column's, and no Spark job runs.
+    */
+  def embedValues(spark: SparkSession, text: String, dim: Int = Dim): Array[Float] =
+    spark.range(1).select(embed(lit(text), dim).cast("array<float>"))
+      .queryExecution.analyzed match {
+      case Project(Seq(e), _) => e.eval(InternalRow.empty).asInstanceOf[ArrayData].toFloatArray()
+      case p => throw new IllegalStateException(s"unexpected embedding plan: $p")
+    }
 
   /** SQL replay of [[embed]] over a text expression. */
   def embedSql(textExpr: String, dim: Int = Dim): String =

@@ -17,12 +17,15 @@ import org.apache.spark.sql.functions._
   * both signals (documents⋈embeddings is a co-partitioned 1:1 key join);
   * min/max normalization is a single-row aggregate broadcast back.
   *
-  * Batch and request forms are ONE vector leg ([[VecLeg]]) and one
-  * keyword leg `(q_id, doc_id, raw_score)` fed to one prep
-  * ([[fusePrep]], capped by the per-leg top-C cut or not) and one tail
-  * keyed by `q_id` (or `m, q_id` for the depth sweep) over one alpha or
-  * an alpha list ([[fuse]]). An alpha or depth sweep is one more key on
-  * the same candidate set, not another copy of the tail:
+  * Batch forms are ONE vector leg ([[VecLeg]]) and one keyword leg
+  * `(q_id, doc_id, raw_score)` fed to one prep ([[fusePrep]], capped by
+  * the per-leg top-C cut or not) and one tail keyed by `q_id` (or `m,
+  * q_id` for the depth sweep) over one alpha or an alpha list
+  * ([[fuse]]). An alpha or depth sweep is one more key on the same
+  * candidate set, not another copy of the tail. Request forms have one
+  * query and a candidate set bounded by nprobe cells plus |terms|·M
+  * champion rows, so their tail ([[fuseRequest]]) is one aggregation
+  * over that set:
   *
   * | entry | vector leg | keyword leg | capped by `servingTopC`? | candidates materialized? |
   * |---|---|---|---|---|
@@ -31,9 +34,9 @@ import org.apache.spark.sql.functions._
   * | `fusedBatchChampionSel`, `…SweepSel`, `…DepthSweepSel` | probed cells | champion lists | yes | yes, uncapped |
   * | `fusedBatchRefreshedPaths` | probed live cells | refreshed champions | yes | no |
   * | `fusedBatchQuantizedSel` | ADC over codes | refreshed champions | yes | no |
-  * | `fusedPrunedWithQuery` | probed cells | champion impacts | no | yes |
-  * | `fusedRefreshedWithQuery` | probed live cells | refreshed champions | no | yes |
-  * | `fusedQuantizedWithQuery` | ADC over codes | refreshed champions | no | yes |
+  * | `fusedPrunedWithQuery` | probed cells | champion impacts | no | no: read once by one aggregation |
+  * | `fusedRefreshedWithQuery` | probed live cells | refreshed champions | no | no: read once by one aggregation |
+  * | `fusedQuantizedWithQuery` | ADC over codes | refreshed champions | no | no: read once by one aggregation |
   *
   * Pruned legs restrict keyword parts to their candidates; the brute
   * leg to the embedded universe. The SQL oracles mirror the split:
@@ -46,40 +49,59 @@ object HybridSearch {
   def fused(docs: DataFrame, embs: DataFrame, terms: Seq[String],
             queryVecId: Long, alpha: Double = Alpha, k: Int = TopK,
             docFilter: Column = lit(true)): DataFrame =
-    fusedWithQuery(docs, embs, terms,
-      embs.filter(col("vec_id") === queryVecId).select(col("embedding").as("q_emb")),
+    fusedWithQuery(docs, embs, terms, QueryVec.Frame(
+      embs.filter(col("vec_id") === queryVecId).select(col("embedding").as("q_emb"))),
       alpha, k, docFilter)
 
-  /** [[fused]] against an arbitrary 1-row query-vector frame `q(q_emb)`
-    * — the entry the client facade uses with an embedded request string
-    * ([[graft.GraftClient.hybridSearch]]).
+  /** The fused score of a row carrying `vscore`, `kscore` and its
+    * normalization range `vmin`, `vmax`, `kmin`, `kmax`: literal
+    * `alpha` / `1−alpha` factors, a zero range divides by 1, 4dp. Every
+    * fusion form ranks by this one expression.
     */
-  def fusedWithQuery(docs: DataFrame, embs: DataFrame, terms: Seq[String],
-                     q: DataFrame, alpha: Double = Alpha, k: Int = TopK,
-                     docFilter: Column = lit(true)): DataFrame = {
-    // single-pass term stats (see KeywordSearch.termStats) + vector score
-    val base = KeywordSearch.termStats(docs, terms, docFilter)
-      .join(embs.select(col("vec_id"), col("embedding")),
-        col("doc_id") === col("vec_id"))
-      .join(broadcast(q))
-      .select(Seq(col("doc_id"), col("source"), col("dl"),
-        cosineSim(col("embedding"), col("q_emb")).as("vscore")) ++
-        terms.indices.map(i => col(s"tf_$i")): _*)
+  private def fusedScore(a: Double, vscore: Column = col("vscore"),
+                         kscore: Column = col("kscore")): Column = round(
+    lit(a) * (vscore - col("vmin")) /
+      when(col("vmax") === col("vmin"), 1.0).otherwise(col("vmax") - col("vmin")) +
+      lit(1 - a) * (kscore - col("kmin")) /
+        when(col("kmax") === col("kmin"), 1.0).otherwise(col("kmax") - col("kmin")),
+    4)
+
+  /** [[fused]] for one query vector — the entry the client facade uses
+    * with an embedded request string ([[graft.GraftClient.hybridSearch]]).
+    *
+    * Three passes read one `base`: the corpus stats (n_docs, avgdl, df),
+    * then the keyword and vector ranges over the BM25-scored rows, then
+    * the top-k. The vector score is computed before tokenization and
+    * kept as a grouping key of the per-document term counts, so every
+    * pass needs the same columns of the same aggregation. Column
+    * pruning therefore leaves the three subtrees identical, and the
+    * term-count exchange and the stats broadcast are each computed
+    * once and reused. Both global aggregates stay distributed (partial,
+    * then one row per task).
+    */
+  private[graft] def fusedWithQuery(docs: DataFrame, embs: DataFrame,
+                                    terms: Seq[String], q: QueryVec,
+                                    alpha: Double = Alpha, k: Int = TopK,
+                                    docFilter: Column = lit(true)): DataFrame = {
+    val counts = KeywordSearch.termCounts(terms)
+    val base = q.attach(docs.filter(docFilter)
+        .join(embs.select(col("vec_id"), col("embedding")),
+          col("doc_id") === col("vec_id")))
+      .select(col("doc_id"), col("source"), col("lang"), col("text"),
+        cosineSim(col("embedding"), col("q_emb")).as("vscore"))
+      .select(col("doc_id"), col("source"), col("lang"), col("vscore"),
+        explode(tokens(col("text"))).as("tok"))
+      .groupBy("doc_id", "source", "lang", "vscore")
+      .agg(counts.head, counts.tail: _*)
     val aggCols = count(lit(1)).as("n_docs") +: avg("dl").as("avgdl") +:
-      min("vscore").as("vmin") +: max("vscore").as("vmax") +:
       terms.indices.map(i => sum((col(s"tf_$i") > 0).cast("long")).as(s"df_$i"))
     val stats = base.agg(aggCols.head, aggCols.tail: _*)
     val scored = base.join(broadcast(stats))
       .withColumn("kscore", KeywordSearch.bm25ScoreCol(terms))
-    val kstats = scored.agg(min("kscore").as("kmin"), max("kscore").as("kmax"))
-    scored.join(broadcast(kstats))
-      .select(col("doc_id"), col("source"),
-        round(
-          lit(alpha) * (col("vscore") - col("vmin")) /
-            when(col("vmax") === col("vmin"), 1.0).otherwise(col("vmax") - col("vmin")) +
-            lit(1 - alpha) * (col("kscore") - col("kmin")) /
-              when(col("kmax") === col("kmin"), 1.0).otherwise(col("kmax") - col("kmin")),
-          4).as("score"))
+    val ranges = scored.agg(min("kscore").as("kmin"), max("kscore").as("kmax"),
+      min("vscore").as("vmin"), max("vscore").as("vmax"))
+    scored.join(broadcast(ranges))
+      .select(col("doc_id"), col("source"), fusedScore(alpha).as("score"))
       .orderBy(desc("score"), asc("doc_id"))
       .limit(k)
   }
@@ -274,10 +296,14 @@ object HybridSearch {
     *     instead of `kwDomain`;
     *   - `materialize` — the bounded candidate frame and the restricted
     *     keyword parts are materialized once (eager query-scoped
-    *     checkpoints). Only fan-outs bounded per query earn it: a batch
-    *     over refreshed cells is queries × corpus × nprobe/nlist rows —
-    *     the class a serving system never persists (the r11 48g OOM at
-    *     100× was that frame's localCheckpoint).
+    *     checkpoints, drained by the batch harnesses between queries).
+    *     Only batch fan-outs bounded per query earn it: a batch over
+    *     refreshed cells is queries × corpus × nprobe/nlist rows — the
+    *     class a serving system never persists (the r11 48g OOM at 100×
+    *     was that frame's localCheckpoint). Request forms never
+    *     materialize: [[fuseRequest]] reads its candidates once, so a
+    *     checkpoint would only add two executions to the request's
+    *     build and a frame that no serving process releases.
     */
   private final case class VecLeg(vparts: DataFrame,
                                   kwDomain: DataFrame => DataFrame,
@@ -398,12 +424,6 @@ object HybridSearch {
     val kc = keys.map(col)
     val (joined, qstats) = fusePrep(leg, kparts, topC,
       ms.map(ChampionIndex.msFrame(kparts.sparkSession, _)))
-    def fscore(a: Double) = round(
-      lit(a) * (col("vscore") - col("vmin")) /
-        when(col("vmax") === col("vmin"), 1.0).otherwise(col("vmax") - col("vmin")) +
-        lit(1 - a) * (col("kscore") - col("kmin")) /
-          when(col("kmax") === col("kmin"), 1.0).otherwise(col("kmax") - col("kmin")),
-      4)
     // heaps unpivot to one row per (lead keys, rank)
     def ranked(heaps: DataFrame, lead: Seq[Column], top: Column, out: Seq[Column]) =
       heaps.select(lead :+ posexplode(top).as(Seq("i", "t")): _*)
@@ -412,14 +432,14 @@ object HybridSearch {
     val scored = joined.join(broadcast(qstats), keys)
     alphas match {
       case None =>
-        ranked(scored.select(kc :+ col("doc_id") :+ fscore(alpha).as("fs"): _*)
+        ranked(scored.select(kc :+ col("doc_id") :+ fusedScore(alpha).as("fs"): _*)
           .groupBy(kc: _*)
           .agg(topKByScore(col("fs"), col("doc_id"), k).as("top")),
           kc, col("top"), kc)
           .orderBy(kc :+ col("rn"): _*)
       case Some(as) =>
         val heaps = as.zipWithIndex.map { case (a, i) =>
-          topKByScore(fscore(a), col("doc_id"), k).as(s"top_$i") }
+          topKByScore(fusedScore(a), col("doc_id"), k).as(s"top_$i") }
         ranked(scored.groupBy(kc: _*).agg(heaps.head, heaps.tail: _*)
           .select(kc :+ explode(array(as.zipWithIndex.map { case (a, i) =>
             struct(lit(a).as("alpha"), col(s"top_$i").as("top")) }: _*)).as("slice"): _*),
@@ -747,45 +767,93 @@ object HybridSearch {
 
   // --- single-request entries ---
 
-  /** One request's fusion: the leg's candidates (optionally restricted
-    * to `allowedDocs` — the filter-during-the-walk hook: one semi-join
-    * before the stats restricts both legs, because the keyword leg is
-    * candidate-restricted) are bounded by nprobe cells, so they are
-    * materialized; `qId` names the output rows and — when it matches a
-    * corpus vec_id — excludes the seed object itself (embedded requests
-    * pass -1). Output `(rn, doc_id, score)`.
+  /** One request's fusion over its bounded candidate set: the vector
+    * candidates `(doc_id, vscore)` of its nprobe cells (restricted to
+    * `allowedDocs` when given — the filter-during-the-walk hook) and the
+    * keyword parts `(doc_id, raw_score)` of its terms' champion rows,
+    * |terms|·M rows at most. ONE aggregation collects both lists; the
+    * rest is expressions on its one row: the keyword left join (a map
+    * lookup per vector candidate, so keyword rows outside the
+    * candidates drop out, as in [[fusePrep]]'s semi-join), the vector
+    * range, the keyword range clamped to include the implicit 0 of an
+    * unmatched candidate, and the bounded heap. Nothing is materialized
+    * and each input is read once. Output `(rn, doc_id, score)`, bitwise
+    * [[fuse]]'s.
     */
-  private def fuseRequest(leg: VecLeg, kparts: DataFrame, qId: Long,
+  private def fuseRequest(vparts: DataFrame, kparts: DataFrame,
                           alpha: Double, k: Int,
                           allowedDocs: Option[DataFrame] = None): DataFrame = {
     // no broadcast hint: a selective filter broadcasts via AQE, a weak
     // one must not be forced driver-side at corpus scale
-    val vparts = allowedDocs.fold(leg.vparts)(a =>
-      leg.vparts.join(a.select(col("doc_id")), Seq("doc_id"), "semi"))
-    fuse(leg.copy(vparts = vparts, materialize = true),
-      kparts.withColumn("q_id", lit(qId)), None, alpha, k)
-      .select(col("rn"), col("doc_id"), col("score"))
+    val v = allowedDocs.fold(vparts)(a =>
+      vparts.join(a.select(col("doc_id")), Seq("doc_id"), "semi"))
+    val none = lit(null).cast("double")
+    val joined = transform(col("v"), x => struct(x("doc_id").as("doc_id"),
+      x("vscore").as("vscore"), col("kw")(x("doc_id")).as("raw_score")))
+    val matched = filter(col("j"), _("raw_score").isNotNull)
+    val nCand = size(col("j"))
+    val nMatched = size(matched)
+    def clamped(bound: Column, toZero: (Column, Column) => Column) =
+      when(nMatched === 0, lit(0.0))
+        .when(nMatched < nCand, toZero(bound, lit(0.0)))
+        .otherwise(bound)
+    val raws = transform(matched, _("raw_score"))
+    v.select(col("doc_id"), col("vscore"), none.as("raw_score"))
+      .unionByName(kparts.select(col("doc_id"), none.as("vscore"), col("raw_score")))
+      .agg(collect_list(when(col("vscore").isNotNull,
+          struct(col("doc_id"), col("vscore")))).as("v"),
+        map_from_entries(collect_list(when(col("raw_score").isNotNull,
+          struct(col("doc_id"), col("raw_score"))))).as("kw"))
+      .select(joined.as("j"))
+      .select(col("j"),
+        array_min(transform(col("j"), _("vscore"))).as("vmin"),
+        array_max(transform(col("j"), _("vscore"))).as("vmax"),
+        clamped(array_min(raws), least(_, _)).as("kmin"),
+        clamped(array_max(raws), greatest(_, _)).as("kmax"))
+      .select(explode(col("j")).as("x"), col("vmin"), col("vmax"),
+        col("kmin"), col("kmax"))
+      .agg(topKByScore(fusedScore(alpha, col("x.vscore"),
+        coalesce(col("x.raw_score"), lit(0.0))), col("x.doc_id"), k).as("top"))
+      .select(posexplode(col("top")).as(Seq("i", "t")))
+      .select((col("i") + 1).as("rn"), col("t.id").as("doc_id"),
+        col("t.score").as("score"))
+      .orderBy("rn")
   }
+
+  /** One request's probed rows: the rows of `corpus(vec_id, cell, …)` in
+    * its nprobe best cells of `cents`, without the seed object `qId`
+    * (embedded requests pass -1).
+    */
+  private def probedRows(corpus: DataFrame, cents: DataFrame, q: QueryVec,
+                         qId: Long, nprobe: Int): DataFrame =
+    corpus.join(broadcast(IvfIndex.probedCells(cents, q, nprobe)), Seq("cell"))
+      .filter(col("vec_id") =!= qId)
+
+  /** Cosine vector candidates `(doc_id, vscore)` of probed rows. */
+  private def cosineParts(rows: DataFrame, q: QueryVec): DataFrame =
+    q.attach(rows).select(col("vec_id").as("doc_id"),
+      cosineSim(col("embedding"), col("q_emb")).as("vscore"))
 
   /** SINGLE-request doubly-pruned hybrid — [[fusedWithQuery]]'s
     * at-scale twin and the facade's pruned routing target
     * ([[graft.GraftClient]] `indexMode = "pruned"`): the request's
-    * nprobe IVF cells off the standing centroids, the query terms'
-    * champion impacts. Per-request cost nprobe·|cell| + |terms|·M
-    * regardless of corpus size.
+    * nprobe IVF cells off the standing centroids (derived inline when
+    * absent), the query terms' champion impacts. Per-request cost
+    * nprobe·|cell| + |terms|·M regardless of corpus size.
     */
   private[graft] def fusedPrunedWithQuery(embs: DataFrame, champs: DataFrame,
-                                          terms: Seq[String], q: DataFrame,
+                                          terms: Seq[String], q: QueryVec,
                                           qId: Long,
                                           centroids: Option[DataFrame] = None,
                                           alpha: Double = Alpha, k: Int = TopK,
                                           nprobe: Int = IvfIndex.NProbe): DataFrame =
     fuseRequest(
-      ivfLeg(embs, q.select(lit(qId).as("q_id"), col("q_emb")), nprobe, centroids),
+      cosineParts(probedRows(embs.withColumnRenamed("label", "cell"),
+        centroids.getOrElse(IvfIndex.centroidArrays(embs)), q, qId, nprobe), q),
       champs.filter(col("term").isin(terms.distinct.sorted: _*))
         .groupBy("doc_id")
         .agg(KeywordSearch.fixedPointSum6(col("imp")).as("raw_score")),
-      qId, alpha, k)
+      alpha, k)
 
   /** Single-request fusion over BOTH refreshable layouts — the facade's
     * refreshed route: probed live cells, refreshed champion views with
@@ -795,32 +863,42 @@ object HybridSearch {
     */
   private[graft] def fusedRefreshedWithQuery(s: SparkSession,
                                              kwPath: String, vecPath: String,
-                                             terms: Seq[String], q: DataFrame,
+                                             terms: Seq[String], q: QueryVec,
                                              qId: Long,
                                              alpha: Double = Alpha, k: Int = TopK,
                                              nprobe: Int = IvfIndex.NProbe,
                                              asOf: Option[Int] = None,
                                              allowedDocs: Option[DataFrame] = None): DataFrame =
     fuseRequest(
-      liveLeg(s, vecPath, q.select(lit(qId).as("q_id"), col("q_emb")), nprobe, asOf),
+      cosineParts(probedRows(VectorRefresh.liveVectors(s, vecPath, asOf = asOf),
+        VectorRefresh.servingCentroidView(s, vecPath, asOf), q, qId, nprobe), q),
       IndexRefresh.requestScored(s, kwPath, terms.distinct.sorted, asOf),
-      qId, alpha, k, allowedDocs)
+      alpha, k, allowedDocs)
 
-  /** [[fusedRefreshedWithQuery]] with the ADC leg over the quantized
-    * layout's standing codes — the facade's quantized route.
+  /** [[fusedRefreshedWithQuery]] with ADC candidates over the quantized
+    * layout's standing codes — the facade's quantized route: the
+    * request's distance table is built on the driver from the standing
+    * codebook ([[VectorRefresh.requestScoredQuantized]]'s scoring),
+    * vscore = −adc as in [[adcLeg]].
     */
   private[graft] def fusedQuantizedWithQuery(s: SparkSession,
                                              kwPath: String, vecPath: String,
-                                             terms: Seq[String], q: DataFrame,
+                                             terms: Seq[String], q: QueryVec,
                                              qId: Long,
                                              alpha: Double = Alpha, k: Int = TopK,
                                              nprobe: Int = IvfIndex.NProbe,
                                              asOf: Option[Int] = None,
-                                             allowedDocs: Option[DataFrame] = None): DataFrame =
+                                             allowedDocs: Option[DataFrame] = None): DataFrame = {
+    import org.apache.spark.sql.graftshim.{PqAdcScore, Shims}
+    val table = ProductQuantizer.adcTable(VectorRefresh.readCodebook(s, vecPath), q.values)
     fuseRequest(
-      adcLeg(s, vecPath, q.select(lit(qId).as("q_id"), col("q_emb")), nprobe, asOf),
+      probedRows(VectorRefresh.liveCodes(s, vecPath, None, asOf),
+          VectorRefresh.servingCentroidView(s, vecPath, asOf), q, qId, nprobe)
+        .select(col("vec_id").as("doc_id"), (-round(Shims.column(
+          PqAdcScore(Shims.expression(col("codes")), table)), 6)).as("vscore")),
       IndexRefresh.requestScored(s, kwPath, terms.distinct.sorted, asOf),
-      qId, alpha, k, allowedDocs)
+      alpha, k, allowedDocs)
+  }
 
   // --- SQL oracles: prefix CTEs ending in `joined`, one fusion tail ---
 
@@ -1162,7 +1240,7 @@ object HybridSearch {
     val q = embs.filter(col("vec_id") === VectorSearch.QueryVecId)
       .select(col("embedding").as("q_emb"))
     fusedPrunedWithQuery(embs, ChampionIndex.cachedChampions(s, dir),
-      KeywordSearch.QueryTerms, q, VectorSearch.QueryVecId,
+      KeywordSearch.QueryTerms, QueryVec.Frame(q), VectorSearch.QueryVecId,
       centroids = Some(IvfIndex.cachedCentroids(s, dir)))
   }
 

@@ -217,8 +217,8 @@ object IvfIndex {
       excludeVecId = Some(VectorSearch.QueryVecId))
   }
 
-  /** Single-request IVF search over an arbitrary 1-row query frame
-    * `q(q_emb)` — the facade's pruned `vectorSearch` route
+  /** Single-request IVF search for one query vector — the facade's
+    * pruned `vectorSearch` route
     * ([[graft.GraftClient]] `indexMode = "pruned"`): centroid ranking
     * against the standing centroid table, nprobe cells, exact cosine
     * over the probed cells' vectors only, with the metadata filter
@@ -228,13 +228,26 @@ object IvfIndex {
     * (doc_id, source, lang, score).
     */
   private[graft] def searchPrunedWithQuery(embs: DataFrame, docs: DataFrame,
-                                           q: DataFrame, centroids: DataFrame,
+                                           q: QueryVec, centroids: DataFrame,
                                            nprobe: Int = NProbe, k: Int = TopK,
                                            docFilter: org.apache.spark.sql.Column =
                                              lit(true)): DataFrame =
     prunedScoredWithQuery(embs, docs, q, centroids, nprobe, docFilter)
       .orderBy(desc("score"), asc("doc_id"))
       .limit(k)
+
+  /** One query's nprobe best cells `(cell)` of a centroid table
+    * `cents(cell, centroid)`: 6dp-rounded cosine, ties to the lower
+    * cell — the order of [[batchProbedCellsFrom]]'s heap.
+    */
+  private[graft] def probedCells(cents: DataFrame, q: QueryVec,
+                                 nprobe: Int = NProbe): DataFrame =
+    q.attach(cents)
+      .select(col("cell"),
+        round(cosineSim(col("centroid"), col("q_emb")), 6).as("cscore"))
+      .orderBy(desc("cscore"), asc("cell"))
+      .limit(nprobe)
+      .select("cell")
 
   /** The pre-ranking stage of [[searchPrunedWithQuery]] — the probed
     * cells' scored-candidate stream `(doc_id, source, lang, score)`,
@@ -243,23 +256,16 @@ object IvfIndex {
     * the brute-force path" gap).
     */
   private[graft] def prunedScoredWithQuery(embs: DataFrame, docs: DataFrame,
-                                           q: DataFrame, centroids: DataFrame,
+                                           q: QueryVec, centroids: DataFrame,
                                            nprobe: Int = NProbe,
                                            docFilter: org.apache.spark.sql.Column =
-                                             lit(true)): DataFrame = {
-    val probed = centroids.join(broadcast(q))
-      .select(col("cell"),
-        round(cosineSim(col("centroid"), col("q_emb")), 6).as("cscore"))
-      .orderBy(desc("cscore"), asc("cell"))
-      .limit(nprobe)
-      .select("cell")
-    embs.join(broadcast(probed), col("label") === col("cell"))
+                                             lit(true)): DataFrame =
+    q.attach(embs.join(broadcast(probedCells(centroids, q, nprobe)),
+        col("label") === col("cell"))
       .join(docs.filter(docFilter).select(col("doc_id"), col("source"), col("lang")),
-        col("vec_id") === col("doc_id"))
-      .join(broadcast(q))
+        col("vec_id") === col("doc_id")))
       .select(col("doc_id"), col("source"), col("lang"),
         round(cosineSim(col("embedding"), col("q_emb")), 4).as("score"))
-  }
 
   // --- grouped search / autocut through the IVF walk (r13 task #5) -----------
 
@@ -279,7 +285,7 @@ object IvfIndex {
     val q = embs.filter(col("vec_id") === queryVecId)
       .select(col("embedding").as("q_emb"))
     val scored = prunedScoredWithQuery(
-        embs.filter(col("vec_id") =!= queryVecId), docs, q,
+        embs.filter(col("vec_id") =!= queryVecId), docs, QueryVec.Frame(q),
         centroids.getOrElse(centroidArrays(embs)), nprobe)
       .select(col("source"), col("doc_id").as("vec_id"), col("score"))
     VectorSearch.groupedFromScored(scored, groups, perGroup)

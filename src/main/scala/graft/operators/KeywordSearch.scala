@@ -164,12 +164,18 @@ object KeywordSearch {
     val toked = docs.filter(docFilter)
       .select(col("doc_id"), col("source"), col("lang"),
         explode(tokens(col("text"))).as("tok"))
-    val aggs = count(lit(1)).as("dl") +:
+    val aggs = termCounts(terms)
+    toked.groupBy("doc_id", "source", "lang").agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Per-document length `dl` and query-term counts `tf_i` over a
+    * `tok` column — [[termStats]]'s aggregate.
+    */
+  private[operators] def termCounts(terms: Seq[String]): Seq[Column] =
+    count(lit(1)).as("dl") +:
       terms.zipWithIndex.map { case (t, i) =>
         sum(when(col("tok") === t, 1).otherwise(0)).as(s"tf_$i")
       }
-    toked.groupBy("doc_id", "source", "lang").agg(aggs.head, aggs.tail: _*)
-  }
 
   /** ZERO-shuffle formulation of [[termStats]]: the native
     * [[graft.functions.TextFunctions.termFrequencies]] expression emits

@@ -230,14 +230,10 @@ object VectorRefresh extends Segments {
     * contract — guide §2.4).
     */
   private def probedCellsLiteral(spark: SparkSession, path: String,
-                                 qEmb: DataFrame, nprobe: Int,
-                                 asOf: Option[Int]): Seq[Int] = {
-    servingCentroidView(spark, path, asOf).join(broadcast(qEmb))
-      .select(col("cell"),
-        round(cosineSim(col("centroid"), col("q_emb")), 6).as("cscore"))
-      .orderBy(desc("cscore"), asc("cell")).limit(nprobe)
+                                 q: QueryVec, nprobe: Int,
+                                 asOf: Option[Int]): Seq[Int] =
+    IvfIndex.probedCells(servingCentroidView(spark, path, asOf), q, nprobe)
       .collect().map(_.getInt(0)).toSeq
-  }
 
   /** IVF search over the refreshed layout: rank merged centroids, probe
     * nprobe cells (collected to a literal predicate so every segment's
@@ -247,7 +243,7 @@ object VectorRefresh extends Segments {
   def search(spark: SparkSession, path: String, qEmb: DataFrame,
              excludeVecId: Long, nprobe: Int = IvfIndex.NProbe,
              k: Int = IvfIndex.TopK, asOf: Option[Int] = None): DataFrame = {
-    val cells = probedCellsLiteral(spark, path, qEmb, nprobe, asOf)
+    val cells = probedCellsLiteral(spark, path, QueryVec.Frame(qEmb), nprobe, asOf)
     liveVectors(spark, path, Some(cells), asOf)
       .filter(col("vec_id") =!= excludeVecId)
       .join(broadcast(qEmb))
@@ -328,7 +324,7 @@ object VectorRefresh extends Segments {
     * matches the facade's exact route (doc_id, source, lang, score).
     */
   private[graft] def requestSearch(spark: SparkSession, path: String,
-                                   docs: DataFrame, q: DataFrame,
+                                   docs: DataFrame, q: QueryVec,
                                    nprobe: Int = IvfIndex.NProbe,
                                    k: Int = IvfIndex.TopK,
                                    docFilter: org.apache.spark.sql.Column =
@@ -344,16 +340,15 @@ object VectorRefresh extends Segments {
     * grouped-through-index-modes task).
     */
   private[graft] def requestScored(spark: SparkSession, path: String,
-                                   docs: DataFrame, q: DataFrame,
+                                   docs: DataFrame, q: QueryVec,
                                    nprobe: Int = IvfIndex.NProbe,
                                    docFilter: org.apache.spark.sql.Column =
                                      org.apache.spark.sql.functions.lit(true),
                                    asOf: Option[Int] = None): DataFrame = {
     val cells = probedCellsLiteral(spark, path, q, nprobe, asOf)
-    liveVectors(spark, path, Some(cells), asOf)
+    q.attach(liveVectors(spark, path, Some(cells), asOf)
       .join(docs.filter(docFilter).select(col("doc_id"), col("source"), col("lang")),
-        col("vec_id") === col("doc_id"))
-      .join(broadcast(q))
+        col("vec_id") === col("doc_id")))
       .select(col("doc_id"), col("source"), col("lang"),
         round(cosineSim(col("embedding"), col("q_emb")), 4).as("score"))
   }
@@ -536,9 +531,9 @@ object VectorRefresh extends Segments {
                       asOf: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.graftshim.{PqAdcScore, Shims}
     val model = readCodebook(spark, path)
-    val cells = probedCellsLiteral(spark, path, qEmb, nprobe, asOf)
-    val q = qEmb.head().getSeq[Float](0).map(_.toDouble)
-    val table = ProductQuantizer.adcTable(model, q)
+    val qv = QueryVec.Frame(qEmb)
+    val cells = probedCellsLiteral(spark, path, qv, nprobe, asOf)
+    val table = ProductQuantizer.adcTable(model, qv.values)
     liveCodes(spark, path, Some(cells), asOf)
       .filter(col("vec_id") =!= excludeVecId)
       .select(col("vec_id"), col("cell"),
@@ -571,9 +566,9 @@ object VectorRefresh extends Segments {
                               asOf: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.graftshim.{PqAdcScore, Shims}
     val model = readCodebook(spark, path)
-    val cells = probedCellsLiteral(spark, path, qEmb, nprobe, asOf)
-    val q = qEmb.head().getSeq[Float](0).map(_.toDouble)
-    val table = ProductQuantizer.adcTable(model, q)
+    val qv = QueryVec.Frame(qEmb)
+    val cells = probedCellsLiteral(spark, path, qv, nprobe, asOf)
+    val table = ProductQuantizer.adcTable(model, qv.values)
     liveCodes(spark, path, Some(cells), asOf)
       .filter(col("vec_id") =!= excludeVecId)
       // filter survivors BEFORE the table-lookup sum: the keyed
@@ -601,7 +596,7 @@ object VectorRefresh extends Segments {
     * [[searchQuantized]]'s under the identity −adc DESC ≡ adc ASC.
     */
   private[graft] def requestSearchQuantized(spark: SparkSession, path: String,
-                                            docs: DataFrame, qEmb: DataFrame,
+                                            docs: DataFrame, qEmb: QueryVec,
                                             k: Int = IvfIndex.TopK,
                                             nprobe: Int = IvfIndex.NProbe,
                                             docFilter: Column = lit(true),
@@ -618,15 +613,14 @@ object VectorRefresh extends Segments {
     * a full-precision corpus scan).
     */
   private[graft] def requestScoredQuantized(spark: SparkSession, path: String,
-                                            docs: DataFrame, qEmb: DataFrame,
+                                            docs: DataFrame, qEmb: QueryVec,
                                             nprobe: Int = IvfIndex.NProbe,
                                             docFilter: Column = lit(true),
                                             asOf: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.graftshim.{PqAdcScore, Shims}
     val model = readCodebook(spark, path)
     val cells = probedCellsLiteral(spark, path, qEmb, nprobe, asOf)
-    val q = qEmb.head().getSeq[Float](0).map(_.toDouble)
-    val table = ProductQuantizer.adcTable(model, q)
+    val table = ProductQuantizer.adcTable(model, qEmb.values)
     liveCodes(spark, path, Some(cells), asOf)
       .join(docs.filter(docFilter)
         .select(col("doc_id"), col("source"), col("lang")),

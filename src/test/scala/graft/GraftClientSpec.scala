@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.KeywordSearch
+import graft.operators.{KeywordSearch, QueryVec}
 import org.apache.spark.sql.functions._
 
 class GraftClientSpec extends SparkSpec {
@@ -106,7 +106,7 @@ class GraftClientSpec extends SparkSpec {
     assert(hitCells.subsetOf(probed))
     // full-probe pruned route equals the exact route (no cut)
     val full = IvfIndex.searchPrunedWithQuery(embs,
-      graft.sources.Tables.documents(spark, TestSpark.Sf0001), q,
+      graft.sources.Tables.documents(spark, TestSpark.Sf0001), QueryVec.Frame(q),
       IvfIndex.centroidArrays(embs), nprobe = 10, k = 7).collect().toSeq
     assert(full == client.vectorSearch(req, limit = 7).collect().toSeq)
   }
@@ -146,19 +146,19 @@ class GraftClientSpec extends SparkSpec {
     // survivors join before the table-lookup sum; similarity = -adc)
     val viaVec = qc.vectorSearch(req, limit = 7).collect().toSeq
     val directVec = VectorRefresh.requestSearchQuantized(spark, vecPath,
-      currD, q, k = 7).collect().toSeq
+      currD, QueryVec.Frame(q), k = 7).collect().toSeq
     assert(viaVec == directVec && viaVec.nonEmpty)
     // ... and the filtered walk stays on the codes
     val f = col("lang") === "en"
     val viaVecF = qc.vectorSearch(req, limit = 7, filter = f).collect().toSeq
     assert(viaVecF == VectorRefresh.requestSearchQuantized(spark, vecPath,
-      currD, q, k = 7, docFilter = f).collect().toSeq)
+      currD, QueryVec.Frame(q), k = 7, docFilter = f).collect().toSeq)
     assert(viaVecF.forall(_.getString(2) == "en"))
     // hybrid: client routing ≡ the single-request quantized fusion
     val terms = req.split(" ").toSeq
     val viaHy = qc.hybridSearch(req, limit = 5).collect().toSeq
     val directHy = HybridSearch.fusedQuantizedWithQuery(spark, kwPath, vecPath,
-        terms, q, qId = -1L, k = 5)
+        terms, QueryVec.Frame(q), qId = -1L, k = 5)
       .join(currD.select(col("doc_id"), col("source")), Seq("doc_id"))
       .select(col("doc_id"), col("source"), col("score"))
       .orderBy(desc("score"), asc("doc_id"))
@@ -179,7 +179,7 @@ class GraftClientSpec extends SparkSpec {
       graft.sources.Tables.documents(spark, TestSpark.Sf0001))
     val viaPinned = qc.vectorSearch(req, limit = 5, asOf = Some(0)).collect().toSeq
     assert(viaPinned == VectorRefresh.requestSearchQuantized(spark, vecPath,
-      prevD, q, k = 5, asOf = Some(0)).collect().toSeq)
+      prevD, QueryVec.Frame(q), k = 5, asOf = Some(0)).collect().toSeq)
   }
 
   test("refreshed index mode routes every search to the refreshable LSM artifacts") {
@@ -201,14 +201,14 @@ class GraftClientSpec extends SparkSpec {
     val q = spark.range(1).select(
       graft.operators.Embedder.embed(lit(req), 64).cast("array<float>").as("q_emb"))
     val viaVec = rc.vectorSearch(req, limit = 7).collect().toSeq
-    val directVec = VectorRefresh.requestSearch(spark, vecPath, currD, q, k = 7)
+    val directVec = VectorRefresh.requestSearch(spark, vecPath, currD, QueryVec.Frame(q), k = 7)
       .collect().toSeq
     assert(viaVec == directVec && viaVec.nonEmpty)
     // hybrid: client routing ≡ the refreshed two-leg fusion
     val terms = req.split(" ").toSeq
     val viaHy = rc.hybridSearch(req, limit = 5).collect().toSeq
     val directHy = HybridSearch.fusedRefreshedWithQuery(spark, kwPath, vecPath,
-        terms, q, qId = -1L, k = 5)
+        terms, QueryVec.Frame(q), qId = -1L, k = 5)
       .join(currD.select(col("doc_id"), col("source")), Seq("doc_id"))
       .select(col("doc_id"), col("source"), col("score"))
       .orderBy(desc("score"), asc("doc_id"))
@@ -223,8 +223,8 @@ class GraftClientSpec extends SparkSpec {
       graft.sources.Tables.embeddings(spark, TestSpark.Sf0001))
     assert(rc.hybridSearch("spark hash join", filter = Some(f)).collect().toSeq ==
       HybridSearch.fusedWithQuery(currD, currE, Seq("spark", "hash", "join"),
-          spark.range(1).select(graft.operators.Embedder
-            .embed(lit("spark hash join"), 64).cast("array<float>").as("q_emb")),
+          QueryVec.Frame(spark.range(1).select(graft.operators.Embedder
+            .embed(lit("spark hash join"), 64).cast("array<float>").as("q_emb"))),
           HybridSearch.Alpha, 10, f)
         .collect().toSeq)
     // ... and the multi-property fallback serves the same universe
@@ -272,13 +272,13 @@ class GraftClientSpec extends SparkSpec {
     val q = spark.range(1).select(
       graft.operators.Embedder.embed(lit(req), 64).cast("array<float>").as("q_emb"))
     val viaVec = rc.vectorSearch(req, limit = 7, asOf = pin).collect().toSeq
-    val directVec = VectorRefresh.requestSearch(spark, vecPath, prevD, q, k = 7,
+    val directVec = VectorRefresh.requestSearch(spark, vecPath, prevD, QueryVec.Frame(q), k = 7,
       asOf = pin).collect().toSeq
     assert(viaVec == directVec && viaVec.nonEmpty)
     // hybrid: pinned two-leg fusion, metadata from the pinned universe
     val viaHy = rc.hybridSearch(req, limit = 5, asOf = pin).collect().toSeq
     val directHy = HybridSearch.fusedRefreshedWithQuery(spark, kwPath, vecPath,
-        req.split(" ").toSeq, q, qId = -1L, k = 5, asOf = pin)
+        req.split(" ").toSeq, QueryVec.Frame(q), qId = -1L, k = 5, asOf = pin)
       .join(prevD.select(col("doc_id"), col("source")), Seq("doc_id"))
       .select(col("doc_id"), col("source"), col("score"))
       .orderBy(desc("score"), asc("doc_id"))
@@ -310,7 +310,7 @@ class GraftClientSpec extends SparkSpec {
     val via = rc.hybridSearch(req, limit = 5, filter = Some(pred),
       asOf = pin).collect().toSeq
     val direct = HybridSearch.fusedRefreshedWithQuery(spark, kwPath, vecPath,
-        req.split(" ").toSeq, q, qId = -1L, k = 5, asOf = pin,
+        req.split(" ").toSeq, QueryVec.Frame(q), qId = -1L, k = 5, asOf = pin,
         allowedDocs = Some(prevD.filter(pred)))
       .join(prevD.select(col("doc_id"), col("source")), Seq("doc_id"))
       .select(col("doc_id"), col("source"), col("score"))
@@ -402,11 +402,40 @@ class GraftClientSpec extends SparkSpec {
     assert(props.contains("text"))
   }
 
+  /** One client per index mode over the test corpus. */
+  private lazy val modeClients: Map[String, GraftClient] =
+    GraftClient.IndexModes.map(m =>
+      m -> new GraftClient(TestSpark.spark, TestSpark.Sf0001, indexMode = m)).toMap
+
+  /** Every request route: keyword, vector and hybrid in each index mode,
+    * a filtered request of each kind, and the refreshed as-of pins
+    * (filtered and unfiltered hybrid).
+    */
+  private lazy val allRoutes: Seq[(String, () => org.apache.spark.sql.DataFrame)] = {
+    val req = "spark hash join fast"
+    val f = col("lang") === "en"
+    val rc = modeClients(GraftClient.IndexRefreshed)
+    val pin = Some(0)
+    Seq(GraftClient.IndexExact, GraftClient.IndexPruned, GraftClient.IndexRefreshed,
+        GraftClient.IndexQuantized).flatMap { m =>
+      val c = modeClients(m)
+      Seq(s"keyword.$m" -> (() => c.keywordSearch(req)),
+        s"vector.$m" -> (() => c.vectorSearch(req)),
+        s"hybrid.$m" -> (() => c.hybridSearch(req)))
+    } ++ Seq(
+      "filtered.keyword" -> (() => modeClients(GraftClient.IndexPruned).keywordSearch(req, filter = f)),
+      "filtered.vector" -> (() => modeClients(GraftClient.IndexPruned).vectorSearch(req, filter = f)),
+      "filtered.hybrid" -> (() => modeClients(GraftClient.IndexPruned).hybridSearch(req, filter = Some(f))),
+      "asof.keyword" -> (() => rc.keywordSearch(req, asOf = pin)),
+      "asof.vector" -> (() => rc.vectorSearch(req, asOf = pin)),
+      "asof.hybrid" -> (() => rc.hybridSearch(req, asOf = pin)),
+      "asof.hybrid.filtered" -> (() => rc.hybridSearch(req, filter = Some(f), asOf = pin)))
+  }
+
   test("building a warm request launches no Spark job") {
     import org.apache.spark.SpecJobs
-    val pruned = new GraftClient(TestSpark.spark, TestSpark.Sf0001,
-      indexMode = GraftClient.IndexPruned)
     val req = "spark hash join fast"
+    val pruned = modeClients(GraftClient.IndexPruned)
     val routes: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "keyword.exact" -> (() => client.keywordSearch(req)),
       "vector.exact" -> (() => client.vectorSearch(req)),
@@ -414,18 +443,55 @@ class GraftClientSpec extends SparkSpec {
       "keyword.pruned" -> (() => pruned.keywordSearch(req)),
       "vector.pruned" -> (() => pruned.vectorSearch(req)),
       "vector.pruned.filtered" ->
-        (() => pruned.vectorSearch(req, filter = col("lang") === "en")))
+        (() => pruned.vectorSearch(req, filter = col("lang") === "en")),
+      "hybrid.pruned" -> (() => pruned.hybridSearch(req)))
+    // segment-layout routes list and read their segment payloads while
+    // built; each read infers its schema in a job outside any SQL
+    // execution. None may run an execution.
+    val layoutRoutes: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "hybrid.refreshed" -> (() => modeClients(GraftClient.IndexRefreshed).hybridSearch(req)),
+      "hybrid.quantized" -> (() => modeClients(GraftClient.IndexQuantized).hybridSearch(req)))
     // one warm call per route builds its artifacts and the corpus dim
-    routes.foreach { case (_, route) => route().collect() }
+    (routes ++ layoutRoutes).foreach { case (_, route) => route().collect() }
     val jobs = routes.map { case (name, route) =>
       name -> SpecJobs.count(spark.sparkContext)(route()) }
     assert(jobs.forall(_._2 == 0), jobs)
-    // unfiltered pruned hybrid: only its two eager transient candidate
-    // frames (HybridSearch.fusePrep) run while the request is built —
-    // two SQL executions, whatever jobs their adaptive stages take
-    pruned.hybridSearch(req).collect()
-    val execs = SpecJobs.executions(spark.sparkContext)(pruned.hybridSearch(req))
-    assert(!execs.contains(null) && execs.distinct.size == 2, execs)
-    graft.operators.Checkpoints.releaseTransients()
+    val execs = layoutRoutes.map { case (name, route) =>
+      name -> SpecJobs.executions(spark.sparkContext)(route()) }
+    assert(execs.forall(_._2.forall(_ == null)), execs)
+  }
+
+  test("warm requests run a bounded number of Spark jobs per route") {
+    import org.apache.spark.SpecJobs
+    // jobs per warm route when every request broadcast a one-row query
+    // frame and request fusion checkpointed its candidates eagerly: no
+    // route may run more, the hybrid and vector routes fewer
+    val before = Map(
+      "keyword.exact" -> 4, "vector.exact" -> 3, "hybrid.exact" -> 12,
+      "keyword.pruned" -> 3, "vector.pruned" -> 4, "hybrid.pruned" -> 20,
+      "keyword.refreshed" -> 8, "vector.refreshed" -> 10, "hybrid.refreshed" -> 28,
+      "keyword.quantized" -> 8, "vector.quantized" -> 10, "hybrid.quantized" -> 33,
+      "filtered.keyword" -> 3, "filtered.vector" -> 4, "filtered.hybrid" -> 12,
+      "asof.keyword" -> 8, "asof.vector" -> 8, "asof.hybrid" -> 26,
+      "asof.hybrid.filtered" -> 27)
+    val bound = before ++ Map("hybrid.exact" -> 8, "hybrid.pruned" -> 10,
+      "vector.exact" -> (before("vector.exact") - 1),
+      "vector.pruned" -> (before("vector.pruned") - 1))
+    allRoutes.foreach { case (_, route) => route().collect() }
+    val jobs = allRoutes.map { case (name, route) =>
+      name -> SpecJobs.count(spark.sparkContext)(route().collect()) }
+    info(jobs.map { case (n, j) => s"$n=$j" }.mkString(" "))
+    val over = jobs.filter { case (n, j) => j > bound(n) }
+    assert(over.isEmpty, s"over bound: $over (bounds $bound)")
+  }
+
+  test("serving requests leave no persisted frame behind") {
+    val sc = spark.sparkContext
+    allRoutes.foreach { case (_, route) => route().collect() }
+    val before = sc.getPersistentRDDs.keySet
+    allRoutes.foreach { case (_, route) => (1 to 5).foreach(_ => route().collect()) }
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"${added.size} RDDs stayed persisted")
+    assert(sc.getPersistentRDDs.size <= before.size)
   }
 }

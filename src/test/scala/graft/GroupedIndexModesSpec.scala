@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{IvfIndex, VectorRefresh, VectorSearch}
+import graft.operators.{IvfIndex, QueryVec, VectorRefresh, VectorSearch}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -101,7 +101,7 @@ class GroupedIndexModesSpec extends SparkSpec {
       graft.operators.Embedder.embed(lit(req), 64).cast("array<float>").as("q_emb"))
     val expected = VectorSearch.groupedFromScored(
       VectorRefresh.requestScoredQuantized(spark, path,
-          graft.operators.CorpusOps.currSnapshot(docs), qv)
+          graft.operators.CorpusOps.currSnapshot(docs), QueryVec.Frame(qv))
         .select(col("source"), col("doc_id"), col("score")),
       VectorSearch.GroupsLimit, VectorSearch.ObjectsPerGroup, idCol = "doc_id")
       .collect().toSeq
